@@ -42,16 +42,16 @@ object ExtQueries {
   }
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Table.readParquet(s, s"$dir/documents.parquet")
   private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Table.readParquet(s, s"$dir/embeddings.parquet")
 
   /** events.parquet carries TIMESTAMP(NANOS) — read as Long nanos
     * (legacy.parquet.nanosAsLong) and convert to μs TimestampNTZ, the
     * same truncation DuckDB applies on read. Exact integer division via
     * a decimal intermediate (ns epochs exceed double precision). */
   private[graft] def eventsDf(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = Table.readParquet(s, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts",
@@ -3042,7 +3042,7 @@ object ExtQueries {
     * fast with a pointer instead. */
   private def requireMicrosEvents(s: SparkSession, dir: String): Unit =
     require(
-      s.read.parquet(s"$dir/events.parquet").schema("ts").dataType != LongType,
+      Table.readParquet(s, s"$dir/events.parquet").schema("ts").dataType != LongType,
       s"$dir/events.parquet carries TIMESTAMP(NANOS) (read as Long under " +
         "legacy.parquet.nanosAsLong): the streaming queries' static " +
         "TimestampType schema cannot express it — extend them with the " +
@@ -3134,7 +3134,7 @@ object ExtQueries {
     val name = s"x88_stream_enrich_${streamSinkIds.incrementAndGet()}"
     requireMicrosEvents(s, dir)
     val ss = Streams.replaySession(s, partitions = 8)
-    val dim = ss.read.parquet(s"$dir/events.parquet")
+    val dim = Table.readParquet(ss, s"$dir/events.parquet")
       .select(F.col("user_id")).distinct()
       .filter(F.col("user_id") % 3 === 0)
       .withColumn("segment", F.col("user_id") % 7)
@@ -3770,9 +3770,9 @@ object ExtQueries {
     import graft.functions.{index, layout}
     index.resetManagedTable(s, "x104_orders_b")
     index.resetManagedTable(s, "x104_lineitem_b")
-    val o = s.read.parquet(s"$dir/orders.parquet")
+    val o = Table.readParquet(s, s"$dir/orders.parquet")
       .select("o_orderkey", "o_custkey", "o_totalprice")
-    val l = s.read.parquet(s"$dir/lineitem.parquet")
+    val l = Table.readParquet(s, s"$dir/lineitem.parquet")
       .select(F.col("l_orderkey").as("o_orderkey"), F.col("l_quantity"))
     layout.bucketize(o, "x104_orders_b", Seq("o_orderkey"), buckets = 16)
     layout.bucketize(l, "x104_lineitem_b", Seq("o_orderkey"), buckets = 16)
@@ -6370,7 +6370,7 @@ object ExtQueries {
     * µs like x13, sidestepping cross-engine timestamp rendering; the
     * oracle replays the expansion with an UNNEST([0,1]) offset join. */
   def x92SlidingWindow(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/events.parquet")
+    Table.readParquet(s, s"$dir/events.parquet")
       .groupBy(F.window(F.col("ts"), "10 minutes", "5 minutes"),
         F.col("event_type"))
       .agg(F.count(F.lit(1)).as("n"),

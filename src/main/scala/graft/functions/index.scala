@@ -407,12 +407,14 @@ object index {
     * (scheduling + commit protocol) end to end, while concurrently the
     * later writes back-fill executors freed by the first write's tail
     * — and at cluster scale the commits overlap instead of serializing
-    * on the object store. Failure shape is unchanged from sequential:
-    * any thunk's failure propagates (first failure wins) and other
-    * already-started writes land or die on their own tables, exactly
-    * the partial-commit exposure the sequential code had. Thunks must
-    * touch DISTINCT tables and share no session-conf flips. */
-  private def inParallel(tasks: Seq[() => Unit]): Unit =
+    * on the object store. Every thunk runs to completion before this
+    * returns or throws, so no write outlives the caller's lease scope
+    * ([[withLease]]); then the first failure in task order propagates
+    * and the other already-started writes have landed or died on their
+    * own tables, exactly the partial-commit exposure the sequential
+    * code had. Thunks must touch DISTINCT tables and share no
+    * session-conf flips. */
+  private[graft] def inParallel(tasks: Seq[() => Unit]): Unit =
     if (tasks.lengthCompare(2) < 0) tasks.foreach(_.apply())
     else {
       import scala.concurrent.{Await, ExecutionContext, Future}
@@ -421,9 +423,9 @@ object index {
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutorService(pool)
       try {
-        Await.result(Future.sequence(tasks.map(t => Future(t()))),
-          Duration.Inf)
-        ()
+        val running = tasks.map(t => Future(t()))
+        running.foreach(Await.ready(_, Duration.Inf))
+        running.foreach(_.value.get.get)
       } finally { pool.shutdown(); () }
     }
 
@@ -890,7 +892,17 @@ object index {
     * ([[swapViaRename]]). Re-banding to FINER bands (more bands, same
     * numPerm) can only widen candidate generation, so exact-verified
     * probe results are preserved or improved — the x146 oracle pins
-    * the preserved case. */
+    * the preserved case.
+    *
+    * Torn failure: the `_buckets` and `_stats` swaps commit
+    * concurrently and independently, so if one fails `_stats` can sit
+    * at the NEW banding while `_buckets` (and its TBLPROPERTIES
+    * geometry) stay OLD, or the reverse. Probe results stay correct —
+    * band keys that match no stats row take the uncapped cool path —
+    * but the `maxBucket` hot-bucket cap of [[probeJaccardIndex]] stops
+    * firing, so the bounded-work guarantee is lost. Recovery: re-run
+    * this rehash with the intended parameters; it rewrites both tables
+    * from `_sigs` and leaves them at one banding again. */
   def rehashJaccardIndex(spark: SparkSession, name: String,
       numPerm: Int, bands: Int): Unit = {
     require(bands >= 1 && numPerm % bands == 0,

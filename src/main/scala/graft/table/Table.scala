@@ -801,12 +801,67 @@ object Table {
     new Table(renamed, metas :+ rid, Vector.empty, Some(rid.uuid), ordered = false, name)
   }
 
+  /** Parquet source, resolved through [[readParquet]]: a repeat read of
+    * an unchanged single file (same qualified path, modification time
+    * and length, same schema-inference confs) runs no schema-inference
+    * job. Directories, glob patterns and missing paths fall through to
+    * `spark.read.parquet`. Either way the frame's schema equals the one
+    * `spark.read.parquet(path)` infers. */
   def fromParquet(spark: SparkSession, path: String, name: String): Table = {
-    val t = fromDF(spark.read.parquet(path), name)
+    val t = fromDF(readParquet(spark, path), name)
     val srcCols = t.cols.filterNot(c => t.rowIdUuid.contains(c.uuid))
     val seed = SqlQuery.fromParquet(path, srcCols.map(c => (c.uuid, c.name)))
     new Table(t.df, t.cols, t.grouping, t.rowIdUuid, t.ordered, name, Some(seed))
   }
+
+  /** `spark.read.parquet(path)` without the eager schema-inference job on
+    * a repeat read: the inferred `StructType` of a single parquet file is
+    * cached and passed back as the read schema.
+    *
+    * The cache key is the file's qualified path plus the session confs
+    * that change Parquet schema inference ([[schemaConfs]]), so session
+    * clones with their own conf get their own entry. The entry also
+    * holds the file's modification time and length: a file rewritten at
+    * the same path re-infers and replaces it, so the cache keeps one
+    * entry per (path, conf). A miss infers through the session's own
+    * reader, so the schema, metadata included, is exactly the inferred
+    * one. Anything that is not a plain regular file (a directory, a glob
+    * pattern, a missing path) falls through to `spark.read.parquet`
+    * unchanged, errors included. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    fileStatus(spark, path) match {
+      case Some(st) =>
+        val key = (st.getPath.toString, schemaConfs.map(spark.conf.getOption))
+        val stamp = (st.getModificationTime, st.getLen)
+        Option(schemaCache.get(key)).filter(_._1 == stamp) match {
+          case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemaCache.put(key, (stamp, df.schema))
+            df
+        }
+      case None => spark.read.parquet(path)
+    }
+
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  // (qualified path, schemaConfs values) -> ((mtime, length), schema)
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[Option[String]]), ((Long, Long), StructType)]()
+
+  /** The status of `path` when it names one regular file, else None. */
+  private def fileStatus(spark: SparkSession, path: String)
+      : Option[org.apache.hadoop.fs.FileStatus] =
+    if (path.exists("*?[]{}\\".contains(_))) None
+    else try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      Some(p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p))
+        .filter(_.isFile)
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** A testdata star-schema table: `Table.source(spark, sfDir, "lineitem")`. */
   def source(spark: SparkSession, sfDir: String, table: String): Table =

@@ -38,6 +38,17 @@ class ConcurrencySpec extends SparkSpec {
     Await.result(rounds, 5.minutes).foreach(r => assert(r == expected))
   }
 
+  test("inParallel lets every sibling finish before rethrowing the first failure") {
+    // a sibling write still running after the throw would outlive the
+    // caller's withLease scope
+    val landed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException](index.inParallel(Seq(
+      () => throw new IllegalStateException("first write failed"),
+      () => { Thread.sleep(1000); landed.set(true) })))
+    assert(e.getMessage == "first write failed")
+    assert(landed.get, "a sibling thunk was still running when inParallel threw")
+  }
+
   test("concurrent LSH dedup (cached signature frames) stays correct") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     def run(): Set[(Long, Long)] =

@@ -124,4 +124,35 @@ class PlanAuditSpec extends SparkSpec {
     assert(cartesian.isEmpty,
       s"CartesianProductExec (non-broadcast cartesian) in: ${cartesian.mkString(", ")}")
   }
+
+  test("the Jaccard probe evaluates its size guard before the intersection merge") {
+    // index.probeJaccardIndex builds ONE `guard && jaccard >= minJ`
+    // filter so the cheap set-size bound short-circuits the O(|A|+|B|)
+    // merge. That relies on the optimizer keeping conjunct order when it
+    // pushes the filter into the verify join; fail loudly if it stops.
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression, Least}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case o => Seq(o)
+    }
+    def merges(e: Expression) =
+      e.exists(_.isInstanceOf[graft.plans.SortedLongIntersectCount])
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val plan = try SparkEntry.queries("x97_jaccard_index_probe")(spark, sfDir)
+        .queryExecution.executedPlan
+      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val verify = plan.collect {
+      case j: BaseJoinExec => j.condition.toSeq
+      case f: FilterExec => Seq(f.condition)
+    }.flatten.filter(merges)
+    assert(verify.nonEmpty, s"no condition calls the intersection merge:\n$plan")
+    verify.foreach { c =>
+      val cs = conjuncts(c)
+      val guard = cs.indexWhere(x => x.exists(_.isInstanceOf[Least]) && !merges(x))
+      assert(guard >= 0 && guard < cs.indexWhere(merges),
+        s"size guard no longer precedes the intersection merge: $c")
+    }
+  }
 }

@@ -69,6 +69,98 @@ class SourceSinkSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS graft_bucketed")
   }
 
+  /** Writes `df` as ONE parquet file `<dir>/<name>.parquet` (the
+    * testdata layout), replacing any earlier file at that path. */
+  private def writeSingleFile(df: org.apache.spark.sql.DataFrame, dir: String,
+      name: String): Unit = {
+    val out = tmp("graft_single")
+    df.coalesce(1).write.parquet(out)
+    val part = new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, java.nio.file.Paths.get(dir, s"$name.parquet"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Jobs submitted on this thread while `body` runs. A sentinel job
+    * submitted after `body` marks the end: listener events arrive in
+    * order, so once it is seen every earlier job start has been too. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.span"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach {
+          case "body" => jobs.incrementAndGet()
+          case "sentinel" => sentinel.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "body")
+      val r = try body finally sc.setLocalProperty(key, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (r, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a repeat parquet source resolves from the schema cache with no Spark job") {
+    val dir = Files.createTempDirectory("graft_src").toString
+    writeSingleFile(t.toDF, dir, "t")
+    val (first, coldJobs) = jobsDuring(Table.source(spark, dir, "t"))
+    val (again, warmJobs) = jobsDuring(Table.source(spark, dir, "t"))
+    assert(coldJobs >= 1, "the first read infers the schema with a job")
+    assert(warmJobs == 0)
+    assert(again.toDF.schema == first.toDF.schema)
+    assert(rows(again.arrange(C("id"))) == rows(first.arrange(C("id"))))
+  }
+
+  test("a parquet file rewritten at the same path re-resolves its schema") {
+    val dir = Files.createTempDirectory("graft_src").toString
+    writeSingleFile(t.toDF, dir, "t")
+    assert(Table.source(spark, dir, "t").columns == Seq("id", "grp", "v"))
+    writeSingleFile(t.toDF.withColumn("w", $"id" * 10), dir, "t")
+    val back = Table.source(spark, dir, "t")
+    assert(back.columns == Seq("id", "grp", "v", "w"))
+    assert(rows(back.arrange(C("id")).select(C("w"))) ==
+      Seq(Seq(10L), Seq(20L), Seq(30L)))
+  }
+
+  test("a session clone with its own nanosAsLong gets its own resolution") {
+    // a TIMESTAMP(NANOS) events file: the main session (nanosAsLong=true)
+    // infers its `ts` as Long, the clone must not see that cached schema
+    val path = Files.createTempDirectory("graft_nanos").resolve("events.parquet").toString
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message ev { required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(path)).withType(schema).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      .newGroup().append("ts", 1700000000123456789L))
+    finally w.close()
+    assert(Table.readParquet(spark, path).schema("ts").dataType == LongType)
+    val clone = spark.newSession()
+    clone.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val uncached = scala.util.Try(clone.read.parquet(path).schema("ts").dataType)
+    val viaCache = scala.util.Try(Table.readParquet(clone, path).schema("ts").dataType)
+    assert(viaCache.toOption == uncached.toOption)
+    assert(viaCache.failed.toOption.map(_.getClass) ==
+      uncached.failed.toOption.map(_.getClass))
+  }
+
+  test("a missing parquet source fails exactly like the plain reader") {
+    val dir = Files.createTempDirectory("graft_src").toString
+    val plain = intercept[Exception](spark.read.parquet(s"$dir/nope.parquet"))
+    val viaSource = intercept[Exception](Table.source(spark, dir, "nope"))
+    assert(viaSource.getClass == plain.getClass)
+    assert(viaSource.getMessage == plain.getMessage)
+  }
+
   test("fromSql source") {
     t.toDF.createOrReplaceTempView("graft_sql_src")
     val s = Table.fromSql(spark,
