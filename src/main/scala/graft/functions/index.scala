@@ -429,6 +429,25 @@ object index {
       } finally { pool.shutdown(); () }
     }
 
+  /** Write `df` as bucketed table `table` on the grid (`nb`, `cols`):
+    * one file per bucket, written by min(nb, cores) tasks. Unless
+    * `placed` (a forced bucketed scan of a table on the same grid), the
+    * frame is repartitioned with the bucket spec's own pmod(murmur3)
+    * placement, one bucket per partition — else the writer emits a file
+    * per task × bucket (2048 at 32 tasks × 64 buckets). The coalesce
+    * merges whole partitions (a bucket stays in one task, hence one
+    * file), adds no exchange, and bounds the task count: a write task
+    * costs ~30 ms of executorDeserializeTime vs ~3 ms for a read task
+    * (local[4]), ~2 s per 64-task rewrite, twice the write's CPU. */
+  private def writeGrid(df: DataFrame, nb: Int, cols: Seq[String],
+      mode: SaveMode, table: String, placed: Boolean = false): Unit = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    val grid = if (placed) df else df.repartition(nb, cols.map(F.col): _*)
+    grid.coalesce(math.min(nb, cores))
+      .write.mode(mode).bucketBy(nb, cols.head, cols.tail: _*)
+      .format("parquet").saveAsTable(table)
+  }
+
   /** Build (SaveMode.Overwrite) or extend (SaveMode.Append) the index
     * tables under `name`. Appending batches over time is the intended
     * lifecycle: today's verified-new documents become tomorrow's index.
@@ -473,28 +492,20 @@ object index {
       // §2.6): sequentially each pays its full fixed job floor; the
       // daily-append rows (x98/x124/x138) pay that floor per table per
       // day. Within each write:
-      // - buckets: repartition onto the bucket grid BEFORE the bucketed
-      //   write — Spark's writer otherwise emits one file per
-      //   (task × bucket), measured at 2048 near-empty parquet files
-      //   and ~4.5 s per append at 32 tasks × 64 buckets, and at
-      //   cluster scale a small-file explosion on every daily append.
-      //   repartition(buckets, cols) uses the SAME pmod(murmur3)
-      //   placement as the bucket spec, so each task holds exactly one
-      //   bucket and writes exactly one file.
+      // - buckets, sigs: one file per bucket per append, written by
+      //   min(buckets, cores) tasks ([[writeGrid]]) — without the grid
+      //   every daily append is a small-file explosion.
       // - stats: per-bucket counts; appended parts are re-aggregated at
       //   probe time, so Append just adds this batch's counts.
       inParallel(Seq(
-        () => keys.repartition(buckets, F.col("band"), F.col("band_hash"))
-          .write.mode(mode).bucketBy(buckets, "band", "band_hash")
-          .format("parquet").saveAsTable(s"${name}_buckets"),
+        () => writeGrid(keys, buckets, Seq("band", "band_hash"), mode,
+          s"${name}_buckets"),
         () => keys.groupBy("band", "band_hash")
           .agg(F.count(F.lit(1)).as("cnt"))
           .write.mode(mode).format("parquet").saveAsTable(s"${name}_stats"),
-        () => sh.select(F.col("id"), F.col("sh"),
-            F.size(F.col("sh")).cast(DoubleType).as("n"))
-          .repartition(buckets, F.col("id"))
-          .write.mode(mode).bucketBy(buckets, "id")
-          .format("parquet").saveAsTable(s"${name}_sigs")))
+        () => writeGrid(sh.select(F.col("id"), F.col("sh"),
+            F.size(F.col("sh")).cast(DoubleType).as("n")),
+          buckets, Seq("id"), mode, s"${name}_sigs")))
       spark.sql(s"ALTER TABLE ${name}_buckets SET TBLPROPERTIES(" +
         s"'graft.k'='$k','graft.numPerm'='$numPerm','graft.bands'='$bands')")
       // at-build drift baseline for the banding geometry (fresh builds
@@ -566,10 +577,11 @@ object index {
   /** Rewrite bucketed index table `table` minus the rows whose
     * `idColName` is in `del`, preserving the bucket spec and every
     * graft.* table property. Scale shape: the table is SCANNED once
-    * with its bucket alignment forced (autoBucketedScan off → one task
-    * per bucket), the deletion set broadcast anti-joins in place, and
-    * the bucketBy write emits one file per bucket with NO exchange —
-    * the index is never shuffled.
+    * with its bucket alignment forced (autoBucketedScan off → one
+    * partition per bucket), the deletion set broadcast anti-joins in
+    * place, and the write ([[writeGrid]]) emits one file per bucket
+    * from min(buckets, cores) tasks with NO exchange — the index is
+    * never shuffled. `small`: the caller's one [[delIsSmall]] of `del`.
     *
     * Swap discipline: the old generation is renamed ASIDE
     * (`<table>_takedown_old`) before the staged survivors are promoted
@@ -581,7 +593,7 @@ object index {
     * step, hence the module-level single-writer contract (object doc). */
   private def rewriteBucketedMinus(spark: SparkSession, table: String,
       leaseName: String, idColName: String, del: DataFrame,
-      bucketCols: Seq[String]): Unit = {
+      bucketCols: Seq[String], small: Boolean): Unit = {
     checkLease(spark, leaseName)
     val nb = numBuckets(spark, table)
     val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
@@ -595,17 +607,12 @@ object index {
     // so the fallback repartitions them back onto the bucket grid —
     // one exchange of a table being fully rewritten anyway; below it
     // the bucket-aligned scan flows into the write with NO exchange
-    val small = delIsSmall(spark, del)
     val minus = delJoin(spark.table(table), del, idColName, "left_anti",
       small)
-    val survivors =
-      if (small) minus
-      else minus.repartition(nb, bucketCols.map(F.col): _*)
     withConf(spark, "spark.sql.sources.bucketing.autoBucketedScan.enabled",
         "false") {
-      survivors.write.mode(SaveMode.Overwrite)
-        .bucketBy(nb, bucketCols.head, bucketCols.tail: _*)
-        .format("parquet").saveAsTable(stage)
+      writeGrid(minus, nb, bucketCols, SaveMode.Overwrite, stage,
+        placed = small)
     }
     if (props.nonEmpty)
       spark.sql(s"ALTER TABLE $stage SET TBLPROPERTIES(" +
@@ -827,11 +834,12 @@ object index {
     * year of appends is ~365 files per bucket and every probe pays
     * open/footer cost per file; until now only a takedown rewrite
     * compacted, and only when deletions were pending. This rewrites
-    * each bucketed table onto its own grid (one file per bucket, no
-    * exchange — the [[rewriteBucketedMinus]] scan shape with an empty
-    * deletion set), rewrites each cell-partitioned table to one file
-    * per cell, and folds the `_stats` append log (one row per
-    * build/append/takedown per bucket) into one row per live bucket.
+    * each bucketed table onto its own grid (one file per bucket,
+    * written by min(buckets, cores) tasks, no exchange — the
+    * [[rewriteBucketedMinus]] scan shape with an empty deletion set),
+    * rewrites each cell-partitioned table to one file per cell, and
+    * folds the `_stats` append log (one row per build/append/takedown
+    * per bucket) into one row per live bucket.
     * Reads are identical before and after — only the file layout
     * moves. Pending logical takedowns are NOT folded (that is
     * [[compactTakedowns]]'s job); `<name>_dels` is untouched. Runs
@@ -839,11 +847,12 @@ object index {
   def compactIndex(spark: SparkSession, name: String): Unit =
     withLease(spark, name) {
       val none = spark.range(0).select(F.col("id").as("_ix_del"))
+      val small = delIsSmall(spark, none)
       if (spark.catalog.tableExists(s"${name}_buckets")) {
         rewriteBucketedMinus(spark, s"${name}_buckets", name, "id", none,
-          Seq("band", "band_hash"))
+          Seq("band", "band_hash"), small)
         rewriteBucketedMinus(spark, s"${name}_sigs", name, "id", none,
-          Seq("id"))
+          Seq("id"), small)
         // zero-sum buckets (fully taken down) drop out; a bucket absent
         // from _stats reads as count 0 either way — no probe change
         swapViaRename(spark, s"${name}_stats", name) { stage =>
@@ -856,7 +865,7 @@ object index {
       }
       if (spark.catalog.tableExists(s"${name}_fps"))
         rewriteBucketedMinus(spark, s"${name}_fps", name, "id", none,
-          Seq("fp"))
+          Seq("fp"), small)
       Seq(s"${name}_cells", s"${name}_pqcells")
         .filter(spark.catalog.tableExists).foreach { t =>
           // one task per cell = one file per cell; the dynamic
@@ -931,11 +940,8 @@ object index {
         // guide §2.6) instead of two sequential write+rename floors
         inParallel(Seq(
           () => swapViaRename(spark, s"${name}_buckets", name) { stage =>
-            // one task per bucket = one file per bucket (build posture)
-            keys.repartition(nb, F.col("band"), F.col("band_hash"))
-              .write.mode(SaveMode.Overwrite)
-              .bucketBy(nb, "band", "band_hash")
-              .format("parquet").saveAsTable(stage)
+            writeGrid(keys, nb, Seq("band", "band_hash"),
+              SaveMode.Overwrite, stage)
             spark.sql(s"ALTER TABLE $stage SET TBLPROPERTIES(" +
               s"'graft.k'='$k','graft.numPerm'='$numPerm'," +
               s"'graft.bands'='$bands')")
@@ -1901,16 +1907,19 @@ object index {
       // twice and dragging _stats sums below live counts (maxBucket
       // pruning misclassifies on understated counts; an overstated
       // count — crash between rewrite and append — only errs hot-ward,
-      // which is pair-complete)
+      // which is pair-complete). Coalesced to the cores: the bucketed
+      // scan alone checkpoints and appends one task and file per bucket.
+      val small = delIsSmall(spark, del)
       val dec = delJoin(spark.table(s"${name}_buckets"), del, "id",
-          "left_semi", delIsSmall(spark, del))
+          "left_semi", small)
         .groupBy("band", "band_hash")
         .agg((-F.count(F.lit(1))).as("cnt"))
+        .coalesce(spark.sparkContext.defaultParallelism)
         .localCheckpoint(true)
       rewriteBucketedMinus(spark, s"${name}_buckets", name, "id", del,
-        Seq("band", "band_hash"))
+        Seq("band", "band_hash"), small)
       rewriteBucketedMinus(spark, s"${name}_sigs", name, "id", del,
-        Seq("id"))
+        Seq("id"), small)
       dec.write.mode(SaveMode.Append).format("parquet")
         .saveAsTable(s"${name}_stats")
     } finally { del.unpersist(blocking = false); () }
@@ -1926,10 +1935,10 @@ object index {
     similarity.requireIntegralId(ids, idCol, "index.removeFromExactIndex")
     val spark = ids.sparkSession
     withLease(spark, name) {
-      // pinned: the rewrite consumes the set twice (count gate + join)
+      // pinned: the set is consumed twice (count gate + join)
       val del = dedup.cachedPinned(delFrame(ids, idCol))
       try rewriteBucketedMinus(spark, s"${name}_fps", name, "id", del,
-        Seq("fp"))
+        Seq("fp"), delIsSmall(spark, del))
       finally { del.unpersist(blocking = false); () }
     }
   }
@@ -2108,13 +2117,9 @@ object index {
       Seq(s"${name}_fps", s"${name}_dels").foreach(resetManagedTable(spark, _))
     val key = if (canonicalize) text.foldedText(F.col(textCol))
       else F.col(textCol)
-    df.select(F.col(idCol).cast(LongType).as("id"),
-        text.fingerprintMd5(key).as("fp"))
-      // one task per bucket = one file per bucket per append (see the
-      // [[buildJaccardIndex]] small-file note)
-      .repartition(buckets, F.col("fp"))
-      .write.mode(mode).bucketBy(buckets, "fp")
-      .format("parquet").saveAsTable(s"${name}_fps")
+    writeGrid(df.select(F.col(idCol).cast(LongType).as("id"),
+        text.fingerprintMd5(key).as("fp")),
+      buckets, Seq("fp"), mode, s"${name}_fps")
     if (mode == SaveMode.Overwrite)
       spark.sql(s"ALTER TABLE ${name}_fps SET TBLPROPERTIES(" +
         s"'graft.canonicalize'='$canonicalize')")

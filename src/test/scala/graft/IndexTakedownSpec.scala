@@ -472,6 +472,29 @@ class IndexTakedownSpec extends SparkSpec {
     assert(probeHits("td_cmp", batch).contains((1000L, 5000L)))
   }
 
+  test("jaccard takedown runs at most one task per core per stage; one file per bucket") {
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores < 8, s"setup: the grid must have more buckets than cores ($cores)")
+    index.buildJaccardIndex(corpus(), "doc_id", "text", "td_grid", buckets = 8)
+    val statsBefore = dataFiles("td_grid_stats").size
+    val (_, ran) = ranDuring(index.removeFromJaccardIndex(
+      Seq(0L, 4L, 8L, 21L).toDF("doc_id"), "doc_id", "td_grid"))
+    val tasks = ran.stageTasks
+    assert(tasks.nonEmpty && tasks.forall(_ <= cores),
+      s"every takedown stage must run at most $cores tasks: $tasks")
+    Seq("td_grid_buckets", "td_grid_sigs").foreach { t =>
+      val ids = dataFiles(t).map(p =>
+        BucketingUtils.getBucketId(new org.apache.hadoop.fs.Path(p).getName))
+      assert(ids.size <= 8 && ids.forall(_.isDefined) &&
+        ids.distinct.size == ids.size,
+        s"$t must keep one file per bucket: ${ids.sortBy(_.getOrElse(-1))}")
+    }
+    val added = dataFiles("td_grid_stats").size - statsBefore
+    assert(added >= 1 && added <= cores,
+      s"the _stats decrement must append at most $cores files: $added")
+  }
+
   test("pending-count cache: the broadcast gate is served by writer-maintained counts") {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
     val docs = spark.range(0, 200).select(F.col("id").as("doc_id"),

@@ -80,43 +80,13 @@ class SourceSinkSpec extends SparkSpec {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Jobs submitted on this thread while `body` runs. A sentinel job
-    * submitted after `body` marks the end: listener events arrive in
-    * order, so once it is seen every earlier job start has been too. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val key = "graft.test.span"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(key)).foreach {
-          case "body" => jobs.incrementAndGet()
-          case "sentinel" => sentinel.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "body")
-      val r = try body finally sc.setLocalProperty(key, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (r, jobs.get)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a repeat parquet source resolves from the schema cache with no Spark job") {
     val dir = Files.createTempDirectory("graft_src").toString
     writeSingleFile(t.toDF, dir, "t")
-    val (first, coldJobs) = jobsDuring(Table.source(spark, dir, "t"))
-    val (again, warmJobs) = jobsDuring(Table.source(spark, dir, "t"))
-    assert(coldJobs >= 1, "the first read infers the schema with a job")
-    assert(warmJobs == 0)
+    val (first, cold) = ranDuring(Table.source(spark, dir, "t"))
+    val (again, warm) = ranDuring(Table.source(spark, dir, "t"))
+    assert(cold.jobs >= 1, "the first read infers the schema with a job")
+    assert(warm.jobs == 0)
     assert(again.toDF.schema == first.toDF.schema)
     assert(rows(again.arrange(C("id"))) == rows(first.arrange(C("id"))))
   }
