@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are forced through the `noop` sink so
   * every operator and projection actually executes (a bare count() would
@@ -9,18 +7,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true") // Spark 4 TIME — graft Time type
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // dev iteration only (the driver never sets this): bench a subset
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.sessionBuilder(cpus).getOrCreate()
     // diagnostic knob: extra session confs as "k=v;k=v" — for A/B
     // attribution runs (e.g. spark.graft.index.driftBaseline=false to
     // cost the drift-baseline stamp); never set by the driver
@@ -75,7 +66,7 @@ object Bench {
     // interference-inflated without burning a cross-run adjudication.
     def sentinelOnce(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0, 64000000L, 1, cpus.toInt)
+      spark.range(0, 64000000L, 1, cpus)
         .select(org.apache.spark.sql.functions.sum(
           org.apache.spark.sql.functions.xxhash64(
             org.apache.spark.sql.functions.col("id"))))
@@ -93,18 +84,6 @@ object Bench {
     // first is naturally cold) + 3 warm samples, medians reported — one
     // noisy machine sample can no longer print a phantom regression.
     // Falls back to single-sample cold if the reflection ever breaks.
-    // production-posture substitutes (e.g. x04's xxhash64 + capped path)
-    // replace their oracle-replayable correctness twins under the same key
-    val benched = SparkEntry.queries.map { case (n, f) =>
-      n -> SparkEntry.benchVariants.getOrElse(n, f)
-    }
-    // dev iteration only (the driver never sets this): bench a subset
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val selected =
-      if (only.isEmpty) benched
-      else benched.filter { case (n, _) => only.contains(n) }
     // INTERLEAVED sentinels (round-10 adjudication lesson): pre/post
     // brackets miss interference that starts and stops MID-suite — the
     // round-10 driver run read quiet at both ends yet was uniformly
@@ -114,7 +93,9 @@ object Bench {
     // exactly those rows instead of the whole artifact.
     val segSentinels =
       scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
-    val sorted = selected.toSeq.sortBy(_._1)
+    // production-posture substitutes (e.g. x04's xxhash64 + capped path)
+    // replace their oracle-replayable correctness twins under the same name
+    val sorted = selected.sortBy(_.name).map(q => q.name -> q.bench.getOrElse(q.build))
     val results = sorted.zipWithIndex.map { case ((name, fn), qi) =>
       def once(): Double = {
         val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time and explain individual queries.
   * usage: runMain graft.Explain <sfDir> <query...> [-e to print plans] */
 object Explain {
@@ -9,26 +7,11 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val showPlan = args.contains("-e")
     val names = args.drop(1).filterNot(a => a == "-e" || a == "-j")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true") // Spark 4 TIME — graft Time type
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // A/B knobs for overhead diagnosis: AQE's per-stage materialization
-      // and its coalesce-to-one-task on sub-MB shuffles are suspects for
-      // many-tiny-subplan fixtures
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // dev census pseudo-query: time each x84 temporal-join mix solo
+    val queryNames = names.filterNot(_ == "x84_census").toSeq
+    val selected = if (queryNames.isEmpty) Nil else SparkEntry.select(queryNames)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // -j: per-run job/stage/task census — overhead-vs-work diagnosis
     // (a run whose wall-clock dwarfs its summed task time is paying
@@ -54,11 +37,11 @@ object Explain {
           if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
         }
       })
-    // dev census pseudo-query: time each x84 temporal-join mix solo
     if (names.contains("x84_census"))
       graft.fuzz.DiffFuzz.temporalJoinCensus(spark, sfDir)
-    names.filterNot(_ == "x84_census").foreach { name =>
-      val fn = SparkEntry.benchVariants.getOrElse(name, SparkEntry.queries(name))
+    selected.foreach { q =>
+      val name = q.name
+      val fn = q.bench.getOrElse(q.build)
       if (showPlan) fn(spark, sfDir).explain("formatted")
       (1 to 2).foreach { i =>
         jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)

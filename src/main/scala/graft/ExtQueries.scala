@@ -186,7 +186,7 @@ object ExtQueries {
       .orderBy("id_a", "id_b")
 
   /** The PRODUCTION posture of x04, benched instead of the oracle
-    * variant (see [[SparkEntry.benchVariants]]): xxhash64 token
+    * variant (see [[QuerySpec.bench]]): xxhash64 token
     * fingerprints (the default; the md5-prefix `replayable` family
     * exists only so DuckDB can replay the correctness run, and pays a
     * per-token md5 that is noise at sf0.01 but dominates a bench) and
@@ -4768,7 +4768,7 @@ object ExtQueries {
 
   // q01's oracle verbatim — the emitted-SQL path must match the
   // DataFrame path's proven replay exactly
-  private lazy val x140Oracle = Queries.oracles("q01_summarize_flagship")
+  private val x140Oracle = Queries.q1Oracle
 
   private val x139Oracle =
     """WITH a AS (SELECT COUNT(*) AS n,
@@ -6426,161 +6426,6 @@ object ExtQueries {
       |WHERE levenshtein(a.k, b2.k) <= 6
       |ORDER BY id_a, id_b""".stripMargin
 
-  // ---------------- registry ----------------
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x01_dedup_exact" -> (x01DedupExact _),
-    "x02_dedup_ngram_jaccard" -> (x02DedupJaccard _),
-    "x03_dedup_minhash_lsh" -> (x03DedupMinhash _),
-    "x04_dedup_simhash" -> (x04DedupSimhash _),
-    "x05_dedup_embedding_cosine" -> (x05DedupEmbedding _),
-    "x06_ann_brute_force_topk" -> (x06AnnBruteForce _),
-    "x07_ann_lsh_topk" -> (x07AnnLsh _),
-    "x08_text_token_stats" -> (x08TokenStats _),
-    "x09_text_quality_score" -> (x09Quality _),
-    "x10_text_language_id" -> (x10LangId _),
-    "x11_text_fingerprint" -> (x11Fingerprint _),
-    "x12_multimodal_decode" -> (x12Multimodal _),
-    "x13_events_tumbling_window" -> (x13EventsWindow _),
-    "x14_events_sessionize" -> (x14EventsSessionize _),
-    "x15_events_json_extract" -> (x15EventsJson _),
-    "x16_asof_join" -> (x16AsofJoin _),
-    "x17_event_subsecond_parts" -> (x17EventParts _),
-    "x18_hash_sampling" -> (x18HashSample _),
-    "x19_list_agg" -> (x19ListAgg _),
-    "x20_dedup_capped_lsh" -> (x20DedupCappedLsh _),
-    "x21_ann_ivf" -> (x21AnnIvf _),
-    "x22_dedup_components" -> (x22DedupComponents _),
-    "x23_decontamination" -> (x23Decontamination _),
-    "x24_tfidf_top_terms" -> (x24TfIdf _),
-    "x25_repetition_signals" -> (x25RepetitionSignals _),
-    "x26_top_ngrams" -> (x26TopNgrams _),
-    "x27_embedding_quantize" -> (x27EmbeddingQuantize _),
-    "x28_dedup_cross_corpus" -> (x28DedupCross _),
-    "x29_token_budget_mixing" -> (x29TokenBudget _),
-    "x30_sequence_packing" -> (x30SequencePacking _),
-    "x31_domain_cap" -> (x31DomainCap _),
-    "x32_pii_redaction" -> (x32PiiRedaction _),
-    "x33_line_dedup" -> (x33LineDedup _),
-    "x34_unigram_nll" -> (x34UnigramNll _),
-    "x35_url_normalize" -> (x35UrlNormalize _),
-    "x36_bm25_topk" -> (x36Bm25TopK _),
-    "x37_profile" -> (x37Profile _),
-    "x38_snapshot_diff" -> (x38SnapshotDiff _),
-    "x39_quality_band" -> (x39QualityBand _),
-    "x40_chunk_tokens" -> (x40ChunkTokens _),
-    "x41_split_by_group" -> (x41SplitByGroup _),
-    "x42_span_dedup" -> (x42SpanDedup _),
-    "x43_semantic_dedup" -> (x43SemanticDedup _),
-    "x44_shard_assign" -> (x44ShardAssign _),
-    "x45_temperature_mix" -> (x45TemperatureMix _),
-    "x46_quality_classifier" -> (x46QualityClassifier _),
-    "x47_bigram_nll" -> (x47BigramNll _),
-    "x48_credit_cards" -> (x48CreditCards _),
-    "x49_compression_ratio" -> (x49CompressionRatio _),
-    "x50_curation_pipeline" -> (x50CurationPipeline _),
-    "x51_image_decode" -> (x51ImageDecode _),
-    "x52_unicode_fold" -> (x52UnicodeFold _),
-    "x53_domain_blocklist" -> (x53DomainBlocklist _),
-    "x54_epoch_mix" -> (x54EpochMix _),
-    "x55_bloom_decontamination" -> (x55BloomDecontamination _),
-    "x56_ivf_index_probe" -> (x56IvfIndexProbe _),
-    "x57_canonical_dedup" -> (x57CanonicalDedup _),
-    "x58_gopher_rules" -> (x58GopherRules _),
-    "x59_centroid_outliers" -> (x59CentroidOutliers _),
-    "x60_grouped_quality_band" -> (x60GroupedBand _),
-    "x61_ann_lsh_full" -> (x61AnnLshFull _),
-    "x62_indoc_line_dedup" -> (x62InDocLineDedup _),
-    "x63_keep_best_dedup" -> (x63KeepBestDedup _),
-    "x64_exact_index_probe" -> (x64ExactIndexProbe _),
-    "x65_containment" -> (x65Containment _),
-    "x66_keep_best_by_key" -> (x66KeepBestByKey _),
-    "x67_deterministic_sample" -> (x67DeterministicSample _),
-    "x68_containment_decontamination" -> (x68ContainmentDecontamination _),
-    "x69_cluster_assign" -> (x69ClusterAssign _),
-    "x70_hard_negatives" -> (x70HardNegatives _),
-    "x71_cluster_balanced_sample" -> (x71ClusterBalancedSample _),
-    "x72_hybrid_retrieval" -> (x72HybridRetrieval _),
-    "x73_html_extract" -> (x73HtmlExtract _),
-    "x74_semantic_decontamination" -> (x74SemanticDecontamination _),
-    "x75_domain_quality" -> (x75DomainQualityFilter _),
-    "x76_train_classifier" -> (x76TrainClassifier _),
-    "x77_audio_decode" -> (x77AudioDecode _),
-    "x78_range_join" -> (x78RangeJoin _),
-    "x79_overlap_join" -> (x79OverlapJoin _),
-    "x80_dsir_select" -> (x80DsirSelect _),
-    "x81_video_decode" -> (x81VideoDecode _),
-    "x82_zorder_key" -> (x82ZorderKey _),
-    "x83_bpe_merges" -> (x83BpeMerges _),
-    "x84_temporal_join_fuzz_battery" -> (graft.fuzz.DiffFuzz.temporalJoinQuery _),
-    "x85_streaming_windowed_counts" -> (x85StreamingWindow _),
-    "x86_streaming_sessionization" -> (x86StreamingSessions _),
-    "x87_streaming_dedup" -> (x87StreamingDedup _),
-    "x88_streaming_enrichment" -> (x88StreamingEnrich _),
-    "x89_edit_distance_dedup" -> (x89EditDistDedup _),
-    "x90_streaming_interval_join" -> (x90StreamingIntervalJoin _),
-    "x91_rollup_profile" -> (x91RollupProfile _),
-    "x92_sliding_window" -> (x92SlidingWindow _),
-    "x93_streaming_scrub" -> (x93StreamingScrub _),
-    "x94_streaming_quality_gate" -> (x94StreamingQualityGate _),
-    "x95_streaming_near_dup" -> (x95StreamingNearDup _),
-    "x96_streaming_index_probe" -> (x96StreamingIndexProbe _),
-    "x97_jaccard_index_probe" -> (x97JaccardIndexProbe _),
-    "x98_incremental_index_lifecycle" -> (x98IncrementalIndexLifecycle _),
-    "x99_snapshot_diff" -> (x99SnapshotDiff _),
-    "x100_leakage_safe_splits" -> (x100LeakageSafeSplits _),
-    "x101_streaming_ann_probe" -> (x101StreamingAnnProbe _),
-    "x102_sharded_export_roundtrip" -> (x102ShardedExportRoundtrip _),
-    "x103_salted_skew_pipeline" -> (x103SaltedSkewPipeline _),
-    "x104_colocated_join" -> (x104ColocatedJoin _),
-    "x105_similarity_join_prefix" -> (x105SimilarityJoinPrefix _),
-    "x106_heavy_hitters" -> (x106HeavyHitters _),
-    "x107_weighted_sample" -> (x107WeightedSample _),
-    "x108_streaming_heavy_hitters" -> (x108StreamingHeavyHitters _),
-    "x109_pq_adc_topk" -> (x109PqAdcTopK _),
-    "x110_ivfpq_topk" -> (x110IvfPqTopK _),
-    "x111_weighted_sample_by_group" -> (x111WeightedSampleByGroup _),
-    "x112_pq_index_probe" -> (x112PqIndexProbe _),
-    "x113_hamming_topk" -> (x113HammingTopK _),
-    "x114_hamming_pairs" -> (x114HammingPairs _),
-    "x115_streaming_weighted_sample" -> (x115StreamingWeightedSample _),
-    "x116_quota_sample" -> (x116QuotaSample _),
-    "x117_sampling_battery" -> (x117SamplingBattery _),
-    "x118_hamming_battery" -> (x118HammingBattery _),
-    "x119_group_topk" -> (x119GroupTopK _),
-    "x120_ivfpq_residual_topk" -> (x120IvfPqResidualTopK _),
-    "x121_residual_pq_index_probe" -> (x121ResidualPqIndexProbe _),
-    "x122_ann_recall_report" -> (x122AnnRecallReport _),
-    "x123_incremental_components" -> (x123IncrementalComponents _),
-    "x124_neardup_family_lifecycle" -> (x124NearDupFamilyLifecycle _),
-    "x125_int8_topk" -> (x125Int8TopK _),
-    "x126_takedown_components" -> (x126TakedownComponents _),
-    "x127_jaccard_index_takedown" -> (x127JaccardIndexTakedown _),
-    "x128_exact_index_takedown" -> (x128ExactIndexTakedown _),
-    "x129_ivf_index_takedown" -> (x129IvfIndexTakedown _),
-    "x130_residual_pq_index_takedown" -> (x130ResidualPqIndexTakedown _),
-    "x131_quantization_ladder" -> (x131QuantizationLadder _),
-    "x132_streaming_component_map" -> (x132StreamingComponentMap _),
-    "x133_bpe_segment_chunks" -> (x133BpeSegmentChunks _),
-    "x134_deferred_takedown" -> (x134DeferredTakedown _),
-    "x135_deferred_ann_takedown" -> (x135DeferredAnnTakedown _),
-    "x136_reingest_pending" -> (x136ReingestPending _),
-    "x137_curation_audit" -> (x137CurationAudit _),
-    "x138_compacted_index_probe" -> (x138CompactedIndexProbe _),
-    "x139_source_roundtrip" -> (x139SourceRoundtrip _),
-    "x140_sql_emitter_roundtrip" -> (x140SqlEmitterRoundtrip _),
-    "x141_deferred_pq_takedown" -> (x141DeferredPqTakedown _),
-    "x142_pq_index_retrain" -> (x142PqIndexRetrain _),
-    "x143_ivf_index_retrain" -> (x143IvfIndexRetrain _),
-    "x144_sql_emitter_join_window" -> (x144SqlEmitterJoinWindow _),
-    "x145_index_describe" -> (x145IndexDescribe _),
-    "x146_jaccard_rehash" -> (x146JaccardRehash _),
-    "x147_ivf_drift_report" -> (x147IvfDriftReport _),
-    "x148_pq_drift_report" -> (x148PqDriftReport _),
-    "x149_sql_emitter_union_slice" -> (x149SqlEmitterUnionSlice _),
-    "x150_maintenance_advisor" -> (x150MaintenanceAdvisor _),
-    "x151_advised_maintenance" -> (x151AdvisedMaintenance _))
-
   // ---- steady-state bench variants for the lifecycle rows ----
   //
   // x123/x124/x126's correctness queries each run a full multi-day
@@ -6945,8 +6790,6 @@ object ExtQueries {
       "doc_id", "text", "x138b_jac", minJ = 0.8)
   }
 
-  /** Production-posture substitutes benched under the same key — see
-    * [[SparkEntry.benchVariants]] for the contract. */
   /** x142 steady state: the MAINTENANCE-day unit is one retrain of the
     * standing residual-PQ index + the post-retrain probe — the initial
     * build is index state, not the day's work. Each sample defers a
@@ -7156,209 +6999,212 @@ object ExtQueries {
     ss.table("x101b_ann_hits").orderBy("q_id", "rank")
   }
 
-  val benchVariants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x04_dedup_simhash" -> (x04BenchSimhash _),
-    "x56_ivf_index_probe" -> (x56BenchProbeDay _),
-    "x97_jaccard_index_probe" -> (x97BenchProbeDay _),
-    "x101_streaming_ann_probe" -> (x101BenchStreamProbeDay _),
-    "x112_pq_index_probe" -> (x112BenchProbeDay _),
-    "x121_residual_pq_index_probe" -> (x121BenchProbeDay _),
-    "x123_incremental_components" -> (x123BenchAppendDay _),
-    "x124_neardup_family_lifecycle" -> (x124BenchAppendDay _),
-    "x126_takedown_components" -> (x126BenchTakedown _),
-    "x127_jaccard_index_takedown" -> (x127BenchTakedownDay _),
-    "x128_exact_index_takedown" -> (x128BenchTakedownDay _),
-    "x129_ivf_index_takedown" -> (x129BenchTakedownDay _),
-    "x130_residual_pq_index_takedown" -> (x130BenchTakedownDay _),
-    "x132_streaming_component_map" -> (x132BenchStreamDay _),
-    "x131_quantization_ladder" -> (x131BenchLadderDay _),
-    "x133_bpe_segment_chunks" -> (x133BenchSegmentDay _),
-    "x134_deferred_takedown" -> (x134BenchDeferDay _),
-    "x135_deferred_ann_takedown" -> (x135BenchDeferDay _),
-    "x136_reingest_pending" -> (x136BenchReingestDay _),
-    "x138_compacted_index_probe" -> (x138BenchCompactDay _),
-    "x141_deferred_pq_takedown" -> (x141BenchDeferDay _),
-    "x142_pq_index_retrain" -> (x142BenchRetrainDay _),
-    "x143_ivf_index_retrain" -> (x143BenchRetrainDay _),
-    "x147_ivf_drift_report" -> (x147BenchDriftDay _),
-    "x148_pq_drift_report" -> (x148BenchDriftDay _),
-    "x150_maintenance_advisor" -> (x150BenchAdvisorDay _),
-    "x151_advised_maintenance" -> (x151BenchMaintenanceDay _))
+  // ---------------- registry ----------------
+  //
+  // declared after every oracle val it reads (an earlier position
+  // would capture null at object initialization)
 
-  val oracles: Map[String, String] = Map(
-    "x01_dedup_exact" -> x01Oracle,
-    "x02_dedup_ngram_jaccard" -> x02Oracle,
-    "x03_dedup_minhash_lsh" -> x03Oracle,
-    "x04_dedup_simhash" -> x04Oracle,
-    "x05_dedup_embedding_cosine" -> x05Oracle,
-    "x06_ann_brute_force_topk" -> x06Oracle,
-    "x07_ann_lsh_topk" -> x07Oracle,
-    "x08_text_token_stats" -> x08Oracle,
-    "x09_text_quality_score" -> x09Oracle,
-    "x10_text_language_id" -> x10Oracle,
-    "x11_text_fingerprint" -> x11Oracle,
-    "x12_multimodal_decode" -> x12Oracle,
-    "x13_events_tumbling_window" -> x13Oracle,
-    "x14_events_sessionize" -> x14Oracle,
-    "x15_events_json_extract" -> x15Oracle,
-    "x16_asof_join" -> x16Oracle,
-    "x17_event_subsecond_parts" -> x17Oracle,
-    "x18_hash_sampling" -> x18Oracle,
-    "x19_list_agg" -> x19Oracle,
-    "x20_dedup_capped_lsh" -> x20Oracle,
-    "x21_ann_ivf" -> x21Oracle,
-    "x22_dedup_components" -> x22Oracle,
-    "x23_decontamination" -> x23Oracle,
-    "x24_tfidf_top_terms" -> x24Oracle,
-    "x25_repetition_signals" -> x25Oracle,
-    "x26_top_ngrams" -> x26Oracle,
-    "x27_embedding_quantize" -> x27Oracle,
-    "x28_dedup_cross_corpus" -> x28Oracle,
-    "x29_token_budget_mixing" -> x29Oracle,
-    "x30_sequence_packing" -> x30Oracle,
-    "x31_domain_cap" -> x31Oracle,
-    "x32_pii_redaction" -> x32Oracle,
-    "x33_line_dedup" -> x33Oracle,
-    "x34_unigram_nll" -> x34Oracle,
-    "x35_url_normalize" -> x35Oracle,
-    "x36_bm25_topk" -> x36Oracle,
-    "x37_profile" -> x37Oracle,
-    "x38_snapshot_diff" -> x38Oracle,
-    "x39_quality_band" -> x39Oracle,
-    "x40_chunk_tokens" -> x40Oracle,
-    "x41_split_by_group" -> x41Oracle,
-    "x42_span_dedup" -> x42Oracle,
-    "x43_semantic_dedup" -> x43Oracle,
-    "x44_shard_assign" -> x44Oracle,
-    "x45_temperature_mix" -> x45Oracle,
-    "x46_quality_classifier" -> x46Oracle,
-    "x47_bigram_nll" -> x47Oracle,
-    "x48_credit_cards" -> x48Oracle,
-    "x49_compression_ratio" -> x49Oracle,
-    "x50_curation_pipeline" -> x50Oracle,
-    "x51_image_decode" -> x51Oracle,
-    "x52_unicode_fold" -> x52Oracle,
-    "x53_domain_blocklist" -> x53Oracle,
-    "x54_epoch_mix" -> x54Oracle,
-    "x55_bloom_decontamination" -> x55Oracle,
-    "x56_ivf_index_probe" -> x56Oracle,
-    "x57_canonical_dedup" -> x57Oracle,
-    "x58_gopher_rules" -> x58Oracle,
-    "x59_centroid_outliers" -> x59Oracle,
-    "x60_grouped_quality_band" -> x60Oracle,
-    "x61_ann_lsh_full" -> x06Oracle,
-    "x62_indoc_line_dedup" -> x62Oracle,
-    "x63_keep_best_dedup" -> x63Oracle,
-    "x64_exact_index_probe" -> x64Oracle,
-    "x65_containment" -> x65Oracle,
-    "x66_keep_best_by_key" -> x66Oracle,
-    "x67_deterministic_sample" -> x67Oracle,
-    "x68_containment_decontamination" -> x68Oracle,
-    "x69_cluster_assign" -> x69Oracle,
-    "x70_hard_negatives" -> x70Oracle,
-    "x71_cluster_balanced_sample" -> x71Oracle,
-    "x72_hybrid_retrieval" -> x72Oracle,
-    "x73_html_extract" -> x73Oracle,
-    "x74_semantic_decontamination" -> x74Oracle,
-    "x75_domain_quality" -> x75Oracle,
-    "x76_train_classifier" -> x76Oracle,
-    "x77_audio_decode" -> x77Oracle,
-    "x78_range_join" -> x78Oracle,
-    "x79_overlap_join" -> x79Oracle,
-    "x80_dsir_select" -> x80Oracle,
-    "x81_video_decode" -> x81Oracle,
-    "x82_zorder_key" -> x82Oracle,
-    "x83_bpe_merges" -> x83Oracle,
-    "x84_temporal_join_fuzz_battery" -> graft.fuzz.DiffFuzz.temporalJoinOracle,
-    "x85_streaming_windowed_counts" -> x85Oracle,
-    "x86_streaming_sessionization" -> x86Oracle,
-    "x87_streaming_dedup" -> x87Oracle,
-    "x88_streaming_enrichment" -> x88Oracle,
-    "x89_edit_distance_dedup" -> x89Oracle,
-    "x90_streaming_interval_join" -> x90Oracle,
-    "x91_rollup_profile" -> x91Oracle,
-    "x92_sliding_window" -> x92Oracle,
-    "x93_streaming_scrub" -> x93Oracle,
-    "x94_streaming_quality_gate" -> x94Oracle,
-    "x95_streaming_near_dup" -> x95Oracle,
-    "x96_streaming_index_probe" -> x96Oracle,
-    "x97_jaccard_index_probe" -> x97Oracle,
-    "x98_incremental_index_lifecycle" -> x98Oracle,
-    "x99_snapshot_diff" -> x99Oracle,
-    "x100_leakage_safe_splits" -> x100Oracle,
-    "x101_streaming_ann_probe" -> x56Oracle,
-    "x102_sharded_export_roundtrip" -> x102Oracle,
-    "x103_salted_skew_pipeline" -> x103Oracle,
-    "x104_colocated_join" -> x104Oracle,
-    "x105_similarity_join_prefix" -> x105Oracle,
-    "x106_heavy_hitters" -> x106Oracle,
-    "x107_weighted_sample" -> x107Oracle,
-    "x108_streaming_heavy_hitters" -> x106Oracle,
-    "x109_pq_adc_topk" -> x109Oracle,
-    "x110_ivfpq_topk" -> x109Oracle,
-    "x111_weighted_sample_by_group" -> x111Oracle,
-    "x112_pq_index_probe" -> x109Oracle,
-    "x113_hamming_topk" -> x113Oracle,
-    "x114_hamming_pairs" -> x114Oracle,
-    "x115_streaming_weighted_sample" -> x107Oracle,
-    "x116_quota_sample" -> x116Oracle,
-    "x117_sampling_battery" -> x117Oracle,
-    "x118_hamming_battery" -> x118Oracle,
-    "x119_group_topk" -> x119Oracle,
-    "x120_ivfpq_residual_topk" -> x120Oracle,
+  val all: Seq[QuerySpec] = Seq(
+    QuerySpec("x01_dedup_exact", x01DedupExact, x01Oracle),
+    QuerySpec("x02_dedup_ngram_jaccard", x02DedupJaccard, x02Oracle),
+    QuerySpec("x03_dedup_minhash_lsh", x03DedupMinhash, x03Oracle),
+    QuerySpec("x04_dedup_simhash", x04DedupSimhash, x04Oracle, Some(x04BenchSimhash)),
+    QuerySpec("x05_dedup_embedding_cosine", x05DedupEmbedding, x05Oracle),
+    QuerySpec("x06_ann_brute_force_topk", x06AnnBruteForce, x06Oracle),
+    QuerySpec("x07_ann_lsh_topk", x07AnnLsh, x07Oracle),
+    QuerySpec("x08_text_token_stats", x08TokenStats, x08Oracle),
+    QuerySpec("x09_text_quality_score", x09Quality, x09Oracle),
+    QuerySpec("x10_text_language_id", x10LangId, x10Oracle),
+    QuerySpec("x11_text_fingerprint", x11Fingerprint, x11Oracle),
+    QuerySpec("x12_multimodal_decode", x12Multimodal, x12Oracle),
+    QuerySpec("x13_events_tumbling_window", x13EventsWindow, x13Oracle),
+    QuerySpec("x14_events_sessionize", x14EventsSessionize, x14Oracle),
+    QuerySpec("x15_events_json_extract", x15EventsJson, x15Oracle),
+    QuerySpec("x16_asof_join", x16AsofJoin, x16Oracle),
+    QuerySpec("x17_event_subsecond_parts", x17EventParts, x17Oracle),
+    QuerySpec("x18_hash_sampling", x18HashSample, x18Oracle),
+    QuerySpec("x19_list_agg", x19ListAgg, x19Oracle),
+    QuerySpec("x20_dedup_capped_lsh", x20DedupCappedLsh, x20Oracle),
+    QuerySpec("x21_ann_ivf", x21AnnIvf, x21Oracle),
+    QuerySpec("x22_dedup_components", x22DedupComponents, x22Oracle),
+    QuerySpec("x23_decontamination", x23Decontamination, x23Oracle),
+    QuerySpec("x24_tfidf_top_terms", x24TfIdf, x24Oracle),
+    QuerySpec("x25_repetition_signals", x25RepetitionSignals, x25Oracle),
+    QuerySpec("x26_top_ngrams", x26TopNgrams, x26Oracle),
+    QuerySpec("x27_embedding_quantize", x27EmbeddingQuantize, x27Oracle),
+    QuerySpec("x28_dedup_cross_corpus", x28DedupCross, x28Oracle),
+    QuerySpec("x29_token_budget_mixing", x29TokenBudget, x29Oracle),
+    QuerySpec("x30_sequence_packing", x30SequencePacking, x30Oracle),
+    QuerySpec("x31_domain_cap", x31DomainCap, x31Oracle),
+    QuerySpec("x32_pii_redaction", x32PiiRedaction, x32Oracle),
+    QuerySpec("x33_line_dedup", x33LineDedup, x33Oracle),
+    QuerySpec("x34_unigram_nll", x34UnigramNll, x34Oracle),
+    QuerySpec("x35_url_normalize", x35UrlNormalize, x35Oracle),
+    QuerySpec("x36_bm25_topk", x36Bm25TopK, x36Oracle),
+    QuerySpec("x37_profile", x37Profile, x37Oracle),
+    QuerySpec("x38_snapshot_diff", x38SnapshotDiff, x38Oracle),
+    QuerySpec("x39_quality_band", x39QualityBand, x39Oracle),
+    QuerySpec("x40_chunk_tokens", x40ChunkTokens, x40Oracle),
+    QuerySpec("x41_split_by_group", x41SplitByGroup, x41Oracle),
+    QuerySpec("x42_span_dedup", x42SpanDedup, x42Oracle),
+    QuerySpec("x43_semantic_dedup", x43SemanticDedup, x43Oracle),
+    QuerySpec("x44_shard_assign", x44ShardAssign, x44Oracle),
+    QuerySpec("x45_temperature_mix", x45TemperatureMix, x45Oracle),
+    QuerySpec("x46_quality_classifier", x46QualityClassifier, x46Oracle),
+    QuerySpec("x47_bigram_nll", x47BigramNll, x47Oracle),
+    QuerySpec("x48_credit_cards", x48CreditCards, x48Oracle),
+    QuerySpec("x49_compression_ratio", x49CompressionRatio, x49Oracle),
+    QuerySpec("x50_curation_pipeline", x50CurationPipeline, x50Oracle),
+    QuerySpec("x51_image_decode", x51ImageDecode, x51Oracle),
+    QuerySpec("x52_unicode_fold", x52UnicodeFold, x52Oracle),
+    QuerySpec("x53_domain_blocklist", x53DomainBlocklist, x53Oracle),
+    QuerySpec("x54_epoch_mix", x54EpochMix, x54Oracle),
+    QuerySpec("x55_bloom_decontamination", x55BloomDecontamination, x55Oracle),
+    QuerySpec("x56_ivf_index_probe", x56IvfIndexProbe, x56Oracle, Some(x56BenchProbeDay)),
+    QuerySpec("x57_canonical_dedup", x57CanonicalDedup, x57Oracle),
+    QuerySpec("x58_gopher_rules", x58GopherRules, x58Oracle),
+    QuerySpec("x59_centroid_outliers", x59CentroidOutliers, x59Oracle),
+    QuerySpec("x60_grouped_quality_band", x60GroupedBand, x60Oracle),
+    QuerySpec("x61_ann_lsh_full", x61AnnLshFull, x06Oracle),
+    QuerySpec("x62_indoc_line_dedup", x62InDocLineDedup, x62Oracle),
+    QuerySpec("x63_keep_best_dedup", x63KeepBestDedup, x63Oracle),
+    QuerySpec("x64_exact_index_probe", x64ExactIndexProbe, x64Oracle),
+    QuerySpec("x65_containment", x65Containment, x65Oracle),
+    QuerySpec("x66_keep_best_by_key", x66KeepBestByKey, x66Oracle),
+    QuerySpec("x67_deterministic_sample", x67DeterministicSample, x67Oracle),
+    QuerySpec("x68_containment_decontamination", x68ContainmentDecontamination,
+      x68Oracle),
+    QuerySpec("x69_cluster_assign", x69ClusterAssign, x69Oracle),
+    QuerySpec("x70_hard_negatives", x70HardNegatives, x70Oracle),
+    QuerySpec("x71_cluster_balanced_sample", x71ClusterBalancedSample, x71Oracle),
+    QuerySpec("x72_hybrid_retrieval", x72HybridRetrieval, x72Oracle),
+    QuerySpec("x73_html_extract", x73HtmlExtract, x73Oracle),
+    QuerySpec("x74_semantic_decontamination", x74SemanticDecontamination, x74Oracle),
+    QuerySpec("x75_domain_quality", x75DomainQualityFilter, x75Oracle),
+    QuerySpec("x76_train_classifier", x76TrainClassifier, x76Oracle),
+    QuerySpec("x77_audio_decode", x77AudioDecode, x77Oracle),
+    QuerySpec("x78_range_join", x78RangeJoin, x78Oracle),
+    QuerySpec("x79_overlap_join", x79OverlapJoin, x79Oracle),
+    QuerySpec("x80_dsir_select", x80DsirSelect, x80Oracle),
+    QuerySpec("x81_video_decode", x81VideoDecode, x81Oracle),
+    QuerySpec("x82_zorder_key", x82ZorderKey, x82Oracle),
+    QuerySpec("x83_bpe_merges", x83BpeMerges, x83Oracle),
+    QuerySpec("x84_temporal_join_fuzz_battery", graft.fuzz.DiffFuzz.temporalJoinQuery,
+      graft.fuzz.DiffFuzz.temporalJoinOracle),
+    QuerySpec("x85_streaming_windowed_counts", x85StreamingWindow, x85Oracle),
+    QuerySpec("x86_streaming_sessionization", x86StreamingSessions, x86Oracle),
+    QuerySpec("x87_streaming_dedup", x87StreamingDedup, x87Oracle),
+    QuerySpec("x88_streaming_enrichment", x88StreamingEnrich, x88Oracle),
+    QuerySpec("x89_edit_distance_dedup", x89EditDistDedup, x89Oracle),
+    QuerySpec("x90_streaming_interval_join", x90StreamingIntervalJoin, x90Oracle),
+    QuerySpec("x91_rollup_profile", x91RollupProfile, x91Oracle),
+    QuerySpec("x92_sliding_window", x92SlidingWindow, x92Oracle),
+    QuerySpec("x93_streaming_scrub", x93StreamingScrub, x93Oracle),
+    QuerySpec("x94_streaming_quality_gate", x94StreamingQualityGate, x94Oracle),
+    QuerySpec("x95_streaming_near_dup", x95StreamingNearDup, x95Oracle),
+    QuerySpec("x96_streaming_index_probe", x96StreamingIndexProbe, x96Oracle),
+    QuerySpec("x97_jaccard_index_probe", x97JaccardIndexProbe,
+      x97Oracle, Some(x97BenchProbeDay)),
+    QuerySpec("x98_incremental_index_lifecycle", x98IncrementalIndexLifecycle, x98Oracle),
+    QuerySpec("x99_snapshot_diff", x99SnapshotDiff, x99Oracle),
+    QuerySpec("x100_leakage_safe_splits", x100LeakageSafeSplits, x100Oracle),
+    QuerySpec("x101_streaming_ann_probe", x101StreamingAnnProbe,
+      x56Oracle, Some(x101BenchStreamProbeDay)),
+    QuerySpec("x102_sharded_export_roundtrip", x102ShardedExportRoundtrip, x102Oracle),
+    QuerySpec("x103_salted_skew_pipeline", x103SaltedSkewPipeline, x103Oracle),
+    QuerySpec("x104_colocated_join", x104ColocatedJoin, x104Oracle),
+    QuerySpec("x105_similarity_join_prefix", x105SimilarityJoinPrefix, x105Oracle),
+    QuerySpec("x106_heavy_hitters", x106HeavyHitters, x106Oracle),
+    QuerySpec("x107_weighted_sample", x107WeightedSample, x107Oracle),
+    QuerySpec("x108_streaming_heavy_hitters", x108StreamingHeavyHitters, x106Oracle),
+    QuerySpec("x109_pq_adc_topk", x109PqAdcTopK, x109Oracle),
+    QuerySpec("x110_ivfpq_topk", x110IvfPqTopK, x109Oracle),
+    QuerySpec("x111_weighted_sample_by_group", x111WeightedSampleByGroup, x111Oracle),
+    QuerySpec("x112_pq_index_probe", x112PqIndexProbe,
+      x109Oracle, Some(x112BenchProbeDay)),
+    QuerySpec("x113_hamming_topk", x113HammingTopK, x113Oracle),
+    QuerySpec("x114_hamming_pairs", x114HammingPairs, x114Oracle),
+    QuerySpec("x115_streaming_weighted_sample", x115StreamingWeightedSample, x107Oracle),
+    QuerySpec("x116_quota_sample", x116QuotaSample, x116Oracle),
+    QuerySpec("x117_sampling_battery", x117SamplingBattery, x117Oracle),
+    QuerySpec("x118_hamming_battery", x118HammingBattery, x118Oracle),
+    QuerySpec("x119_group_topk", x119GroupTopK, x119Oracle),
+    QuerySpec("x120_ivfpq_residual_topk", x120IvfPqResidualTopK, x120Oracle),
     // the persisted-index probe reproduces x120's direct computation
     // (same trained banks, same pruning) — one oracle, two plans
-    "x121_residual_pq_index_probe" -> x120Oracle,
-    "x122_ann_recall_report" -> x122Oracle,
-    "x123_incremental_components" -> x123Oracle,
-    "x124_neardup_family_lifecycle" -> x124Oracle,
-    "x125_int8_topk" -> x125Oracle,
-    "x126_takedown_components" -> x126Oracle,
-    "x127_jaccard_index_takedown" -> x127Oracle,
-    "x128_exact_index_takedown" -> x128Oracle,
-    "x129_ivf_index_takedown" -> x129Oracle,
-    "x130_residual_pq_index_takedown" -> x130Oracle,
-    "x131_quantization_ladder" -> x131Oracle,
+    QuerySpec("x121_residual_pq_index_probe", x121ResidualPqIndexProbe,
+      x120Oracle, Some(x121BenchProbeDay)),
+    QuerySpec("x122_ann_recall_report", x122AnnRecallReport, x122Oracle),
+    QuerySpec("x123_incremental_components", x123IncrementalComponents,
+      x123Oracle, Some(x123BenchAppendDay)),
+    QuerySpec("x124_neardup_family_lifecycle", x124NearDupFamilyLifecycle,
+      x124Oracle, Some(x124BenchAppendDay)),
+    QuerySpec("x125_int8_topk", x125Int8TopK, x125Oracle),
+    QuerySpec("x126_takedown_components", x126TakedownComponents,
+      x126Oracle, Some(x126BenchTakedown)),
+    QuerySpec("x127_jaccard_index_takedown", x127JaccardIndexTakedown,
+      x127Oracle, Some(x127BenchTakedownDay)),
+    QuerySpec("x128_exact_index_takedown", x128ExactIndexTakedown,
+      x128Oracle, Some(x128BenchTakedownDay)),
+    QuerySpec("x129_ivf_index_takedown", x129IvfIndexTakedown,
+      x129Oracle, Some(x129BenchTakedownDay)),
+    QuerySpec("x130_residual_pq_index_takedown", x130ResidualPqIndexTakedown,
+      x130Oracle, Some(x130BenchTakedownDay)),
+    QuerySpec("x131_quantization_ladder", x131QuantizationLadder,
+      x131Oracle, Some(x131BenchLadderDay)),
     // the streamed lifecycle must equal the batch lifecycle on the same
     // days — one oracle, three plans (full closure / batch / stream)
-    "x132_streaming_component_map" -> x124Oracle,
-    "x133_bpe_segment_chunks" -> x133Oracle,
-    "x134_deferred_takedown" -> x134Oracle,
+    QuerySpec("x132_streaming_component_map", x132StreamingComponentMap,
+      x124Oracle, Some(x132BenchStreamDay)),
+    QuerySpec("x133_bpe_segment_chunks", x133BpeSegmentChunks,
+      x133Oracle, Some(x133BenchSegmentDay)),
+    QuerySpec("x134_deferred_takedown", x134DeferredTakedown,
+      x134Oracle, Some(x134BenchDeferDay)),
     // pending (logical) deletion must probe exactly like the physical
     // purge — x129's oracle, second plan
-    "x135_deferred_ann_takedown" -> x129Oracle,
-    "x136_reingest_pending" -> x136Oracle,
-    "x137_curation_audit" -> x137Oracle,
+    QuerySpec("x135_deferred_ann_takedown", x135DeferredAnnTakedown,
+      x129Oracle, Some(x135BenchDeferDay)),
+    QuerySpec("x136_reingest_pending", x136ReingestPending,
+      x136Oracle, Some(x136BenchReingestDay)),
+    QuerySpec("x137_curation_audit", x137CurationAudit, x137Oracle),
     // file compaction must be read-invisible — x127's oracle, third
     // execution regime (append generations + takedown + grid rewrite)
-    "x138_compacted_index_probe" -> x138Oracle,
-    "x139_source_roundtrip" -> x139Oracle,
-    "x140_sql_emitter_roundtrip" -> x140Oracle,
+    QuerySpec("x138_compacted_index_probe", x138CompactedIndexProbe,
+      x138Oracle, Some(x138BenchCompactDay)),
+    QuerySpec("x139_source_roundtrip", x139SourceRoundtrip, x139Oracle),
+    QuerySpec("x140_sql_emitter_roundtrip", x140SqlEmitterRoundtrip, x140Oracle),
     // pending deletion must rank exactly like the physical purge —
     // x130's oracle, second regime (the x135 pattern on the PQ path)
-    "x141_deferred_pq_takedown" -> x130Oracle,
+    QuerySpec("x141_deferred_pq_takedown", x141DeferredPqTakedown,
+      x130Oracle, Some(x141BenchDeferDay)),
     // retrain must rank exactly like a rebuild on the survivors —
     // x120's replay restricted to the live corpus
-    "x142_pq_index_retrain" -> x142Oracle,
-    "x143_ivf_index_retrain" -> x143Oracle,
+    QuerySpec("x142_pq_index_retrain", x142PqIndexRetrain,
+      x142Oracle, Some(x142BenchRetrainDay)),
+    QuerySpec("x143_ivf_index_retrain", x143IvfIndexRetrain,
+      x143Oracle, Some(x143BenchRetrainDay)),
     // the emitted join + grouped-window SQL must match the window
     // replay exactly — x140's oracle posture on the q13 shape
-    "x144_sql_emitter_join_window" -> x144Oracle,
+    QuerySpec("x144_sql_emitter_join_window", x144SqlEmitterJoinWindow, x144Oracle),
     // the inventory's counts and stored params re-derived independently
-    "x145_index_describe" -> x145Oracle,
+    QuerySpec("x145_index_describe", x145IndexDescribe, x145Oracle),
     // re-banding from stored sets must preserve the exact-verified pair
     // set — x97's full-pair oracle, second banding regime
-    "x146_jaccard_rehash" -> x97Oracle,
+    QuerySpec("x146_jaccard_rehash", x146JaccardRehash, x97Oracle),
     // the when-to-retrain signal: every drift metric, its at-build
     // baseline and the ratio re-derived in SQL (seeds, argmax, 1−cos
     // distances, decimal means, exact p95, occupancy)
-    "x147_ivf_drift_report" -> x147Oracle,
+    QuerySpec("x147_ivf_drift_report", x147IvfDriftReport,
+      x147Oracle, Some(x147BenchDriftDay)),
     // PQ reconstruction error of the STORED codes vs the STORED banks,
     // re-derived via the x120 training replay (chosen-codeword d2 sums)
-    "x148_pq_drift_report" -> x148Oracle,
+    QuerySpec("x148_pq_drift_report", x148PqDriftReport,
+      x148Oracle, Some(x148BenchDriftDay)),
     // the emitted union + slice_head + ordered-string-agg SQL must
     // match the set-op/LIMIT-OFFSET/STRING_AGG replay exactly
-    "x149_sql_emitter_union_slice" -> x149Oracle,
-    "x150_maintenance_advisor" -> x150Oracle,
-    "x151_advised_maintenance" -> x151Oracle)
+    QuerySpec("x149_sql_emitter_union_slice", x149SqlEmitterUnionSlice, x149Oracle),
+    QuerySpec("x150_maintenance_advisor", x150MaintenanceAdvisor,
+      x150Oracle, Some(x150BenchAdvisorDay)),
+    QuerySpec("x151_advised_maintenance", x151AdvisedMaintenance,
+      x151Oracle, Some(x151BenchMaintenanceDay)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import graft.core._
 import graft.dsl._
+import graft.fuzz.DiffFuzz
 import graft.table.Table
 
 /** The correctness-gate query inventory: one entry per SURVEY §2 operator,
@@ -43,7 +44,7 @@ object Queries {
       .arrange(C("l_returnflag"), C("l_linestatus"))
       .toDF
 
-  private val q1Oracle =
+  private[graft] val q1Oracle =
     """SELECT l_returnflag, l_linestatus,
       |CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
       |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
@@ -688,10 +689,6 @@ object Queries {
       |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
 
   // ---------------------------------------------------------------
-  // registry
-  // ---------------------------------------------------------------
-
-  // ---------------------------------------------------------------
   // q28 — oracle-coverage closers: asin/acos, xor, str.strip,
   // dur.minutes, is_not_nan, unary pos, shift with non-null fill,
   // nulls_first/nulls_last arrange markers (observable via slice_head)
@@ -1033,116 +1030,61 @@ object Queries {
       |   SELECT CAST(CAST(l_quantity AS DECIMAL(10,2)) AS DECIMAL(22,2)) AS v
       |   FROM lineitem))""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_summarize_flagship" -> (q1Agg _),
-    "q02_select_mutate_arith" -> (q2Mutate _),
-    "q03_filter_isin_boolops" -> (q3Filter _),
-    "q04_arrange_slice_head" -> (q4ArrangeSlice _),
-    "q05_rename_drop" -> (q5RenameDrop _),
-    "q06_join_inner" -> (q6JoinInner _),
-    "q07_join_left" -> (q7JoinLeft _),
-    "q08_join_full" -> (q8JoinFull _),
-    "q09_join_cross" -> (q9CrossJoin _),
-    "q10_union_all" -> (q10Union _),
-    "q10b_union_distinct" -> (q10b _),
-    "q11_window_rank_family" -> (q11WindowRank _),
-    "q12_window_shift_cumsum" -> (q12WindowShift _),
-    "q13_grouped_mutate_window" -> (q13GroupedMutate _),
-    "q14_string_ops" -> (q14Strings _),
-    "q15_datetime_ops" -> (q15Datetime _),
-    "q16_duration_ops" -> (q16Duration _),
-    "q17_case_map_cast" -> (q17CaseCast _),
-    "q18_null_ops" -> (q18NullOps _),
-    "q19_horizontal_fns" -> (q19Horizontal _),
-    "q20_summarize_filter_kwarg" -> (q20AggKwargs _),
-    "q21_str_join_agg" -> (q21StrJoin _),
-    "q22_alias_self_join" -> (q22SelfJoin _),
-    "q23_numeric_math" -> (q23Math _),
-    "q24_trig_inf_nan" -> (q24Trig _),
-    "q25_parse_regex" -> (q25Parse _),
-    "q26_nested_slice" -> (q26NestedSlice _),
-    "q27_stats_aggregates" -> (q27Stats _),
-    "q28_coverage_closers" -> (q28Coverage _),
-    "q29_decimal_pipeline" -> (q29Decimal _),
-    "q30_diff_fuzz_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.query(s, dir)),
-    "q31_enum_cast" -> (q31Enum _),
-    "q32_time_type" -> (q32Time _),
-    "q33_uint_types" -> (q33UInt _),
-    "q34_window_fuzz_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.windowQuery(s, dir)),
-    "q35_agg_fuzz_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.aggQuery(s, dir)),
-    "q36_join_fuzz_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.joinQuery(s, dir)),
-    "q37_pipeline_fuzz_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.pipelineQuery(s, dir)),
-    "q38_datetime_fuzz_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.dtQuery(s, dir)),
-    "q39_ordered_agg_fuzz_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.oaQuery(s, dir)),
-    "q40_special_double_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.spQuery(s, dir)),
-    "q41_decimal_fuzz_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.decQuery(s, dir)),
-    "q42_cast_fuzz_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.castQuery(s, dir)),
-    "q43_rand_approx_properties" -> (q43RandApprox _),
-    "q44_quantile_fuzz_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.quantileQuery(s, dir)),
-    "q45_string_fuzz_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.strQuery(s, dir)),
-    "q46_special_key_battery" -> ((s: SparkSession, dir: String) =>
-      graft.fuzz.DiffFuzz.specialKeyQuery(s, dir)),
-    "q47_union_lca" -> (q47UnionLca _))
+  // ---------------------------------------------------------------
+  // registry — declared after every oracle val it reads (an earlier
+  // position would capture null at object initialization)
+  // ---------------------------------------------------------------
 
-  val oracles: Map[String, String] = Map(
-    "q01_summarize_flagship" -> q1Oracle,
-    "q02_select_mutate_arith" -> q2Oracle,
-    "q03_filter_isin_boolops" -> q3Oracle,
-    "q04_arrange_slice_head" -> q4Oracle,
-    "q05_rename_drop" -> q5Oracle,
-    "q06_join_inner" -> q6Oracle,
-    "q07_join_left" -> q7Oracle,
-    "q08_join_full" -> q8Oracle,
-    "q09_join_cross" -> q9Oracle,
-    "q10_union_all" -> q10Oracle,
-    "q10b_union_distinct" -> q10bOracle,
-    "q11_window_rank_family" -> q11Oracle,
-    "q12_window_shift_cumsum" -> q12Oracle,
-    "q13_grouped_mutate_window" -> q13Oracle,
-    "q14_string_ops" -> q14Oracle,
-    "q15_datetime_ops" -> q15Oracle,
-    "q16_duration_ops" -> q16Oracle,
-    "q17_case_map_cast" -> q17Oracle,
-    "q18_null_ops" -> q18Oracle,
-    "q19_horizontal_fns" -> q19Oracle,
-    "q20_summarize_filter_kwarg" -> q20Oracle,
-    "q21_str_join_agg" -> q21Oracle,
-    "q22_alias_self_join" -> q22Oracle,
-    "q23_numeric_math" -> q23Oracle,
-    "q24_trig_inf_nan" -> q24Oracle,
-    "q25_parse_regex" -> q25Oracle,
-    "q26_nested_slice" -> q26Oracle,
-    "q27_stats_aggregates" -> q27Oracle,
-    "q28_coverage_closers" -> q28Oracle,
-    "q29_decimal_pipeline" -> q29Oracle,
-    "q30_diff_fuzz_battery" -> graft.fuzz.DiffFuzz.oracle,
-    "q31_enum_cast" -> q31Oracle,
-    "q32_time_type" -> q32Oracle,
-    "q33_uint_types" -> q33Oracle,
-    "q34_window_fuzz_battery" -> graft.fuzz.DiffFuzz.windowOracle,
-    "q35_agg_fuzz_battery" -> graft.fuzz.DiffFuzz.aggOracle,
-    "q36_join_fuzz_battery" -> graft.fuzz.DiffFuzz.joinOracle,
-    "q37_pipeline_fuzz_battery" -> graft.fuzz.DiffFuzz.pipelineOracle,
-    "q38_datetime_fuzz_battery" -> graft.fuzz.DiffFuzz.dtOracle,
-    "q39_ordered_agg_fuzz_battery" -> graft.fuzz.DiffFuzz.oaOracle,
-    "q40_special_double_battery" -> graft.fuzz.DiffFuzz.spOracle,
-    "q41_decimal_fuzz_battery" -> graft.fuzz.DiffFuzz.decOracle,
-    "q42_cast_fuzz_battery" -> graft.fuzz.DiffFuzz.castOracle,
-    "q43_rand_approx_properties" -> q43Oracle,
-    "q44_quantile_fuzz_battery" -> graft.fuzz.DiffFuzz.quantileOracle,
-    "q45_string_fuzz_battery" -> graft.fuzz.DiffFuzz.strOracle,
-    "q46_special_key_battery" -> graft.fuzz.DiffFuzz.specialKeyOracle,
-    "q47_union_lca" -> q47Oracle)
+  val all: Seq[QuerySpec] = Seq(
+    QuerySpec("q01_summarize_flagship", q1Agg, q1Oracle),
+    QuerySpec("q02_select_mutate_arith", q2Mutate, q2Oracle),
+    QuerySpec("q03_filter_isin_boolops", q3Filter, q3Oracle),
+    QuerySpec("q04_arrange_slice_head", q4ArrangeSlice, q4Oracle),
+    QuerySpec("q05_rename_drop", q5RenameDrop, q5Oracle),
+    QuerySpec("q06_join_inner", q6JoinInner, q6Oracle),
+    QuerySpec("q07_join_left", q7JoinLeft, q7Oracle),
+    QuerySpec("q08_join_full", q8JoinFull, q8Oracle),
+    QuerySpec("q09_join_cross", q9CrossJoin, q9Oracle),
+    QuerySpec("q10_union_all", q10Union, q10Oracle),
+    QuerySpec("q10b_union_distinct", q10b, q10bOracle),
+    QuerySpec("q11_window_rank_family", q11WindowRank, q11Oracle),
+    QuerySpec("q12_window_shift_cumsum", q12WindowShift, q12Oracle),
+    QuerySpec("q13_grouped_mutate_window", q13GroupedMutate, q13Oracle),
+    QuerySpec("q14_string_ops", q14Strings, q14Oracle),
+    QuerySpec("q15_datetime_ops", q15Datetime, q15Oracle),
+    QuerySpec("q16_duration_ops", q16Duration, q16Oracle),
+    QuerySpec("q17_case_map_cast", q17CaseCast, q17Oracle),
+    QuerySpec("q18_null_ops", q18NullOps, q18Oracle),
+    QuerySpec("q19_horizontal_fns", q19Horizontal, q19Oracle),
+    QuerySpec("q20_summarize_filter_kwarg", q20AggKwargs, q20Oracle),
+    QuerySpec("q21_str_join_agg", q21StrJoin, q21Oracle),
+    QuerySpec("q22_alias_self_join", q22SelfJoin, q22Oracle),
+    QuerySpec("q23_numeric_math", q23Math, q23Oracle),
+    QuerySpec("q24_trig_inf_nan", q24Trig, q24Oracle),
+    QuerySpec("q25_parse_regex", q25Parse, q25Oracle),
+    QuerySpec("q26_nested_slice", q26NestedSlice, q26Oracle),
+    QuerySpec("q27_stats_aggregates", q27Stats, q27Oracle),
+    QuerySpec("q28_coverage_closers", q28Coverage, q28Oracle),
+    QuerySpec("q29_decimal_pipeline", q29Decimal, q29Oracle),
+    QuerySpec("q30_diff_fuzz_battery", DiffFuzz.query, DiffFuzz.oracle),
+    QuerySpec("q31_enum_cast", q31Enum, q31Oracle),
+    QuerySpec("q32_time_type", q32Time, q32Oracle),
+    QuerySpec("q33_uint_types", q33UInt, q33Oracle),
+    QuerySpec("q34_window_fuzz_battery", DiffFuzz.windowQuery, DiffFuzz.windowOracle),
+    QuerySpec("q35_agg_fuzz_battery", DiffFuzz.aggQuery, DiffFuzz.aggOracle),
+    QuerySpec("q36_join_fuzz_battery", DiffFuzz.joinQuery, DiffFuzz.joinOracle),
+    QuerySpec("q37_pipeline_fuzz_battery", DiffFuzz.pipelineQuery,
+      DiffFuzz.pipelineOracle),
+    QuerySpec("q38_datetime_fuzz_battery", DiffFuzz.dtQuery, DiffFuzz.dtOracle),
+    QuerySpec("q39_ordered_agg_fuzz_battery", DiffFuzz.oaQuery, DiffFuzz.oaOracle),
+    QuerySpec("q40_special_double_battery", DiffFuzz.spQuery, DiffFuzz.spOracle),
+    QuerySpec("q41_decimal_fuzz_battery", DiffFuzz.decQuery, DiffFuzz.decOracle),
+    QuerySpec("q42_cast_fuzz_battery", DiffFuzz.castQuery, DiffFuzz.castOracle),
+    QuerySpec("q43_rand_approx_properties", q43RandApprox, q43Oracle),
+    QuerySpec("q44_quantile_fuzz_battery", DiffFuzz.quantileQuery,
+      DiffFuzz.quantileOracle),
+    QuerySpec("q45_string_fuzz_battery", DiffFuzz.strQuery, DiffFuzz.strOracle),
+    QuerySpec("q46_special_key_battery", DiffFuzz.specialKeyQuery,
+      DiffFuzz.specialKeyOracle),
+    QuerySpec("q47_union_lca", q47UnionLca, q47Oracle))
 }

@@ -142,10 +142,10 @@ object index {
     * `graft.writer` (a fresh UUID) + a bumped `graft.epoch` on the
     * catalog-only `<name>_lease` table at window start, refuses to
     * start while a FOREIGN stamp is in place, re-checks the stamp
-    * before every swap ([[swapViaRename]] / [[rewriteBucketedMinus]] /
-    * the cell overwrites) — if another process stamped over the
-    * window, the mutator aborts BEFORE renaming anything — and clears
-    * its stamp on exit (including on failure). [[deferTakedown]], the
+    * before every swap ([[swapViaRename]] / the cell overwrites) — if
+    * another process stamped over the window, the mutator aborts
+    * BEFORE renaming anything — and clears its stamp on exit
+    * (including on failure). [[deferTakedown]], the
     * one out-of-window writer, checks the same stamp: a defer landing
     * while a FOREIGN process's window is open is exactly the
     * cross-process lost-defer scenario, so it fails loudly instead.
@@ -360,13 +360,13 @@ object index {
   }
 
   /** Rewrite a managed table under the rename-aside swap discipline
-    * ([[rewriteBucketedMinus]]'s shape for the flat tables — `_dels`,
-    * `_stats`, the component-map family — and, with `partitioned`,
-    * the retrain ops' cell tables): the new generation is written ONCE
-    * to `<table>_stage` (both stage and the `_old` name are reset
-    * first, so a crash-orphaned directory from a dead session can
-    * never fail the write — the [[resetManagedTable]] cross-session
-    * contract), the old generation is renamed aside before promotion
+    * (the takedown's bucketed rewrites in [[rewriteBucketedMinus]], the
+    * flat tables — `_dels`, `_stats`, the component-map family — and,
+    * with `partitioned`, the retrain ops' cell tables): the new
+    * generation is written ONCE to `<table>_stage` (both stage and the
+    * `_old` name are reset first, so a crash-orphaned directory from a
+    * dead session can never fail the write — the [[resetManagedTable]]
+    * cross-session contract), the old generation is renamed aside before promotion
     * so there is never a no-table-on-disk state, and a crash at any
     * step leaves a complete generation recoverable under a
     * deterministic name (a crashed PARTITIONED generation additionally
@@ -582,46 +582,35 @@ object index {
     * place, and the write ([[writeGrid]]) emits one file per bucket
     * from min(buckets, cores) tasks with NO exchange — the index is
     * never shuffled. `small`: the caller's one [[delIsSmall]] of `del`.
-    *
-    * Swap discipline: the old generation is renamed ASIDE
-    * (`<table>_takedown_old`) before the staged survivors are promoted
-    * — never a drop-first window where no data exists on disk, and a
-    * crash anywhere leaves a complete generation recoverable under a
-    * deterministic name (`_takedown_old` holds the pre-takedown data
-    * until the final drop; `_takedown_stage` holds survivors until
-    * promotion). The two catalog renames are still not one atomic
-    * step, hence the module-level single-writer contract (object doc). */
+    * The survivors replace the table through [[swapViaRename]]: the old
+    * generation is renamed aside to `<table>_old` before the staged
+    * survivors (`<table>_stage`) are promoted, so a crash leaves a
+    * complete generation under one of those names. The two catalog
+    * renames are still not one atomic step, hence the module-level
+    * single-writer contract (object doc). */
   private def rewriteBucketedMinus(spark: SparkSession, table: String,
       leaseName: String, idColName: String, del: DataFrame,
       bucketCols: Seq[String], small: Boolean): Unit = {
-    checkLease(spark, leaseName)
     val nb = numBuckets(spark, table)
     val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
       .map(r => (r.getString(0), r.getString(1)))
       .filter(_._1.startsWith("graft."))
-    val stage = s"${table}_takedown_stage"
-    val old = s"${table}_takedown_old"
-    resetManagedTable(spark, stage)
-    resetManagedTable(spark, old)
-    // above the broadcast gate the anti-join shuffles the scanned rows,
-    // so the fallback repartitions them back onto the bucket grid —
-    // one exchange of a table being fully rewritten anyway; below it
-    // the bucket-aligned scan flows into the write with NO exchange
-    val minus = delJoin(spark.table(table), del, idColName, "left_anti",
-      small)
-    withConf(spark, "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false") {
-      writeGrid(minus, nb, bucketCols, SaveMode.Overwrite, stage,
-        placed = small)
+    swapViaRename(spark, table, leaseName) { stage =>
+      // above the broadcast gate the anti-join shuffles the scanned rows,
+      // so the fallback repartitions them back onto the bucket grid —
+      // one exchange of a table being fully rewritten anyway; below it
+      // the bucket-aligned scan flows into the write with NO exchange
+      val minus = delJoin(spark.table(table), del, idColName, "left_anti",
+        small)
+      withConf(spark, "spark.sql.sources.bucketing.autoBucketedScan.enabled",
+          "false") {
+        writeGrid(minus, nb, bucketCols, SaveMode.Overwrite, stage,
+          placed = small)
+      }
+      if (props.nonEmpty)
+        spark.sql(s"ALTER TABLE $stage SET TBLPROPERTIES(" +
+          props.map { case (k, v) => s"'$k'='$v'" }.mkString(",") + ")")
     }
-    if (props.nonEmpty)
-      spark.sql(s"ALTER TABLE $stage SET TBLPROPERTIES(" +
-        props.map { case (k, v) => s"'$k'='$v'" }.mkString(",") + ")")
-    // pre-rename lease re-check — see [[swapViaRename]]
-    checkLease(spark, leaseName)
-    spark.sql(s"ALTER TABLE $table RENAME TO $old")
-    spark.sql(s"ALTER TABLE $stage RENAME TO $table")
-    resetManagedTable(spark, old)
   }
 
   /** Purge deleted ids from a cell-PARTITIONED index table (`_cells` /

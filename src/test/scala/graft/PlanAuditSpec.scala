@@ -10,8 +10,8 @@ import scala.collection.immutable.ListMap
   * cartesian product appearing where an equi-join used to be. At sf0.01
   * those are invisible in wall-clock; at 100 TB each one is an incident.
   *
-  * This spec builds every [[SparkEntry.queries]] entry (plus every
-  * [[SparkEntry.benchVariants]] production-posture substitute) against
+  * This spec builds every [[SparkEntry.specs]] query (plus every
+  * [[QuerySpec.bench]] production-posture substitute) against
   * the sf0.01 fixtures with AQE pinned OFF — the static physical plan is
   * deterministic for fixed input stats — and counts the operators whose
   * presence IS the cost model:
@@ -79,9 +79,9 @@ class PlanAuditSpec extends SparkSpec {
   test("every driver query matches its golden exchange budget") {
     // Bench-posture substitutes audit under "<name>@bench" — the bench
     // path is the production path, its plan shape matters most of all
-    val all: ListMap[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      ListMap((SparkEntry.queries.toSeq.sortBy(_._1) ++
-        SparkEntry.benchVariants.toSeq.sortBy(_._1).map { case (n, f) => (s"$n@bench", f) }): _*)
+    val specs = SparkEntry.specs.sortBy(_.name)
+    val all = ListMap(specs.map(q => q.name -> q.build) ++
+      specs.flatMap(q => q.bench.map(s"${q.name}@bench" -> _)): _*)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val observed = try {
       all.map { case (name, mk) =>

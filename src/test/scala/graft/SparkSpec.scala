@@ -12,18 +12,10 @@ object SparkSpec {
     // that knows about it (otherwise saveAsTable hits
     // LOCATION_ALREADY_EXISTS on the next JVM).
     val runDir = java.nio.file.Files.createTempDirectory("graft_test_")
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val s = SparkEntry.sessionBuilder(4)
       .config("spark.sql.warehouse.dir", runDir.resolve("warehouse").toString)
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=${runDir.resolve("metastore_db")};create=true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.timeType.enabled", "true") // Spark 4 TIME — graft Time type
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
