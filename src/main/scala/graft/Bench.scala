@@ -12,14 +12,6 @@ object Bench {
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = SparkEntry.sessionBuilder(cpus).getOrCreate()
-    // diagnostic knob: extra session confs as "k=v;k=v" — for A/B
-    // attribution runs (e.g. spark.graft.index.driftBaseline=false to
-    // cost the drift-baseline stamp); never set by the driver
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/codegen paths once on the smallest table
     spark.read.parquet(s"$sfDir/region.parquet").write

@@ -3322,7 +3322,7 @@ object ExtQueries {
         F.col("text"))
     val hits = Streams.nearDupCandidatesStream(stream, "doc_id", "ts", "text",
       k = 3, numPerm = 32, bands = 8, minEst = 0.5, replayable = true)
-    Streams.runToMemory(hits.toDF, name, OutputMode.Append())
+    Streams.runToMemory(hits.toDF(), name, OutputMode.Append())
     val out = ss.table(name).orderBy("doc_id", "dup_of", "est")
     ss.catalog.dropTempView(name)
     out
@@ -4190,8 +4190,8 @@ object ExtQueries {
     * even-half index loses every doc_id ≡ 0 (mod 4) — half its
     * documents, including half the planted re-crawl targets — then
     * x97's probe batch runs. Deleted documents' band keys and shingle
-    * sets are physically purged from the bucketed tables (stage
-    * rewrite + catalog rename, stats decremented by negative append),
+    * sets are physically purged from the bucketed tables (staged
+    * rewrite + one manifest flip, stats decremented by negative append),
     * so the probe must report exactly what an index BUILT on the
     * survivors reports — the oracle is x97's exact all-pairs Jaccard
     * with the index side restricted to survivors. Ghost rows in ANY of
@@ -4404,8 +4404,10 @@ object ExtQueries {
       // machinery under test), so a bounded rebuild must drop the
       // standing state first to get the bootstrap path, not 3 more
       // appended days with duplicate ids
-      Seq("x132b_cm_cmap", "x132b_cm_cremap", "x132b_cm_cedges",
-          "x132b_idx_buckets", "x132b_idx_sigs", "x132b_idx_stats")
+      (Seq("cmap", "cremap", "cedges")
+          .map(graft.functions.index.liveTable(ss, "x132b_cm", _)) ++
+        Seq("buckets", "sigs", "stats")
+          .map(graft.functions.index.liveTable(ss, "x132b_idx", _)))
         .foreach(t => ss.sql(s"DROP TABLE IF EXISTS $t"))
       x132StreamingBase(ss, dir); ()
     }
@@ -4830,8 +4832,8 @@ object ExtQueries {
     * PENDING, then retrain trains BOTH quantizer banks afresh on the
     * live survivors (seed-deterministic: ivfIters = pqIters = 0,
     * portableSeed), re-encodes exactly the live corpus from the
-    * caller's vector store, swaps under the rename-aside discipline
-    * and folds the pending set. The oracle is x120's full
+    * caller's vector store, and flips codes, banks and the folded
+    * pending set live together. The oracle is x120's full
     * training-and-ADC replay with the corpus CTE restricted to the
     * live survivors — i.e. the retrained index must rank bit-exactly
     * like one built from scratch on what survived: stale day-1 banks,

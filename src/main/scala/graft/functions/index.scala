@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, functions => F}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 
 /** Persistent near-duplicate index for INCREMENTAL crawls: signature
   * tables written once, bucket-placed on disk, probed by every future
@@ -27,17 +28,21 @@ import org.apache.spark.sql.types._
   * properties at build time and READ BACK by the probe — a probe can
   * never silently use mismatched parameters and miss pairs.
   *
+  * GENERATIONS: a family's tables are read together, so they are
+  * replaced together. Every mutator writes each table it rewrites under
+  * a fresh physical name, flips all of them live in ONE catalog write
+  * to the manifest on `<name>_lease` ([[commit]]), then drops the
+  * superseded tables. Every read resolves through that manifest
+  * ([[family]]), so a probe sees the old generation or the new one,
+  * never a mix; a probe whose EXECUTION overlaps the drop of the
+  * generation it resolved can fail on missing files and is retried by
+  * its caller. Builds write the canonical `<name>_<kind>` tables.
+  *
   * SINGLE-WRITER CONTRACT: the lifecycle mutators (build/append,
   * removeFrom*, compactTakedowns, compactIndex) assume one writer per
-  * index name and a maintenance window with no concurrent probes on
-  * the same SparkSession — they swap tables through catalog renames
-  * (two renames, not one atomic step) and pin per-statement writer
-  * confs session-wide for their duration ([[withConf]]). Probes racing
-  * a physical takedown can observe a missing-table window; concurrent
-  * statements can inherit a flipped conf. Deployments needing live
-  * probe traffic during maintenance should prefer [[deferTakedown]]
-  * (an append, no swap — probes filter pending ids without any window)
-  * and schedule the physical compaction inside the window.
+  * index name — a maintenance window ([[withLease]]) — and they pin
+  * per-statement writer confs session-wide for their duration
+  * ([[withConf]]): a concurrent statement can inherit a flipped conf.
   *
   * The one exception to "no writes outside the window" is the pending
   * set itself: [[deferTakedown]] appends to `<name>_dels` under live
@@ -48,26 +53,23 @@ import org.apache.spark.sql.types._
   * ACROSS processes the single-writer contract is no longer an honor
   * system: every window mutator stamps a writer lease on the
   * catalog-only `<name>_lease` table and re-checks it before each
-  * swap, so two drivers mutating one index fail LOUDLY instead of
+  * flip, so two drivers mutating one index fail LOUDLY instead of
   * silently colliding ([[releaseStaleLease]] recovers an abandoned
-  * stamp). Probes never read the lease; they instead carry a bounded
-  * retry over the swap's brief missing-table window ([[resolveRetry]])
-  * — a probe whose EXECUTION overlaps a swap may still need one
-  * caller-level retry, the documented residue of non-atomic renames.
+  * stamp).
   */
 object index {
 
   /** In-process writer locks, one per `<name>_dels` table: the pending
     * set is the ONE index table written outside the maintenance window
     * (every [[deferTakedown]] appends to it under live traffic), so
-    * unlike the swap-based rewrites its writers must coordinate. The
+    * unlike the window rewrites its writers must coordinate. The
     * lock serializes dels APPENDS against the [[compactTakedowns]]
-    * shrink-and-swap, which closes the lost-defer window completely
+    * shrink-and-flip, which closes the lost-defer window completely
     * for the tested topology (every writer in one JVM — Spark local,
     * or a driver-side maintenance service): a defer landing during the
     * long purge phase survives the shrink via the anti-join against
     * the pinned purge set, and a defer racing the shrink itself blocks
-    * for the milliseconds the swap takes. Writers in SEPARATE driver
+    * until the shrunk generation is live. Writers in SEPARATE driver
     * processes remain under the module's single-writer contract. */
   private val delsLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -133,50 +135,46 @@ object index {
   // ---------------- cross-driver writer lease ----------------
 
   /** CROSS-PROCESS writer lease, one per index name. [[delsLock]]
-    * closes every in-JVM race, but a deployment with two DRIVER
-    * processes mutating the same index rested on an honor-system
-    * single-writer contract — a second process's rename-aside rewrite
-    * racing the first's could silently drop or collide with an
-    * in-flight stage. The lease converts that silent corruption into a
-    * loud error: every maintenance-window mutator stamps
+    * closes every in-JVM race; the lease turns two DRIVER processes
+    * mutating one index into a loud error instead of one flipping over
+    * the other's generation. Every maintenance-window mutator stamps
     * `graft.writer` (a fresh UUID) + a bumped `graft.epoch` on the
     * catalog-only `<name>_lease` table at window start, refuses to
     * start while a FOREIGN stamp is in place, re-checks the stamp
-    * before every swap ([[swapViaRename]] / the cell overwrites) — if
-    * another process stamped over the window, the mutator aborts
-    * BEFORE renaming anything — and clears its stamp on exit
-    * (including on failure). [[deferTakedown]], the
-    * one out-of-window writer, checks the same stamp: a defer landing
-    * while a FOREIGN process's window is open is exactly the
-    * cross-process lost-defer scenario, so it fails loudly instead.
+    * before every flip ([[commit]]) and in-place cell rewrite, and
+    * clears its stamp on exit (including on failure). [[deferTakedown]],
+    * the one out-of-window writer, checks the same stamp.
+    *
+    * The same table holds the family's generation MANIFEST
+    * (`graft.live.<kind>`, see [[family]]). What the flip relies on: its
+    * stamp re-check and its pointer write are two catalog calls, not one
+    * compare-and-set (the catalog has no conditional property write), so
+    * a foreign window stamping between them goes unnoticed by that flip.
     *
     * In-process the lease is re-entrant per index name (nested
-    * mutators — compactTakedowns calling removeFrom* — and the legal
-    * defers-during-compaction topology share the JVM's token);
-    * in-process window serialization remains the module's
-    * single-writer contract plus the [[deferTakedown]] auto-compact
-    * guard. A window abandoned by a crashed driver leaves its stamp
-    * behind BY DESIGN — every later mutator fails loudly until an
-    * operator inspects the wreckage (rescue `_old`/`_stage`
-    * generations, see [[swapViaRename]]) and calls
-    * [[releaseStaleLease]]. Probes never read the lease — zero
-    * overhead on the probe path. */
+    * mutators and the legal defers-during-compaction topology share the
+    * JVM's token). A window abandoned by a crashed driver leaves its
+    * stamp behind BY DESIGN: later mutators fail loudly until an
+    * operator calls [[releaseStaleLease]]. The live generation is intact
+    * either way, and the next window sweeps what the crashed one staged
+    * but never flipped ([[sweepUnflipped]]). */
+  private final case class Held(token: String, depth: Int, epoch: Long)
   private val heldLeases =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int)]()
+    new java.util.concurrent.ConcurrentHashMap[String, Held]()
   private def leaseTable(name: String): String = s"${name}_lease"
 
-  // lease properties are read through the catalog API, NOT SHOW
-  // TBLPROPERTIES: SHOW passes values through the SQL redaction regex
-  // (anything matching token/secret/... comes back "*(redacted)"),
-  // and a redacted writer stamp would mis-compare as foreign
+  /** A table's catalog properties in one catalog call — NOT SHOW
+    * TBLPROPERTIES, which redacts values matching token/secret/..., so a
+    * writer stamp would mis-compare as foreign. */
+  private def tableProps(spark: SparkSession,
+      table: String): Map[String, String] =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).properties
+
   private def leaseProps(spark: SparkSession,
-      name: String): Map[String, String] = {
-    val cat = spark.sessionState.catalog
-    val ident =
-      org.apache.spark.sql.catalyst.TableIdentifier(leaseTable(name))
-    if (!cat.tableExists(ident)) Map.empty
-    else cat.getTableMetadata(ident).properties
-  }
+      name: String): Map[String, String] =
+    try tableProps(spark, leaseTable(name))
+    catch { case _: NoSuchTableException => Map.empty }
 
   private def readLeaseWriter(spark: SparkSession,
       name: String): Option[String] =
@@ -187,23 +185,25 @@ object index {
       s"index: another writer's maintenance window is stamped on " +
         s"'$name' (graft.writer=$writer on ${leaseTable(name)}). A " +
         "concurrent driver process is mutating this index, or a " +
-        "previous window crashed without clearing its stamp. Inspect " +
-        "(crashed windows leave complete generations under _stage/_old " +
-        "names), then call index.releaseStaleLease to clear the stamp.")
+        "previous window crashed without clearing its stamp. The live " +
+        "generation is intact, and the next window on this index sweeps " +
+        "any generation a crashed window staged but never flipped. Call " +
+        "index.releaseStaleLease to clear the stamp.")
 
   /** Run `body` inside a maintenance window on `name`: stamp the
-    * lease, fail loudly if a foreign stamp is in place, clear on exit.
-    * Re-entrant per name within the JVM. */
+    * lease, fail loudly if a foreign stamp is in place, sweep unflipped
+    * generations, clear the stamp on exit. Re-entrant per name within
+    * the JVM. */
   private def withLease[T](spark: SparkSession, name: String)
       (body: => T): T = {
     val key = name.toLowerCase
     val joined = heldLeases.computeIfPresent(key,
-      (_, v) => (v._1, v._2 + 1))
+      (_, h) => h.copy(depth = h.depth + 1))
     if (joined != null) {
       try body
       finally {
         heldLeases.computeIfPresent(key,
-          (_, v) => if (v._2 <= 1) null else (v._1, v._2 - 1))
+          (_, h) => if (h.depth <= 1) null else h.copy(depth = h.depth - 1))
         ()
       }
     } else {
@@ -211,16 +211,18 @@ object index {
       if (!spark.catalog.tableExists(lt))
         spark.sql(s"CREATE TABLE IF NOT EXISTS $lt (lease_anchor INT) " +
           "USING parquet")
-      readLeaseWriter(spark, name).foreach(w =>
+      val props = leaseProps(spark, name)
+      props.get("graft.writer").filter(_.nonEmpty).foreach(w =>
         throw staleLeaseError(name, w))
       val token = java.util.UUID.randomUUID().toString
-      val epoch = leaseProps(spark, name)
-        .get("graft.epoch").map(_.toLong).getOrElse(0L) + 1
+      val epoch = props.get("graft.epoch").map(_.toLong).getOrElse(0L) + 1
       spark.sql(s"ALTER TABLE $lt SET TBLPROPERTIES(" +
         s"'graft.epoch'='$epoch','graft.writer'='$token')")
-      heldLeases.put(key, (token, 1))
-      try body
-      finally {
+      heldLeases.put(key, Held(token, 1, epoch))
+      try {
+        sweepUnflipped(spark, name)
+        body
+      } finally {
         heldLeases.remove(key)
         // clear only our own stamp: a rogue overstamper's token must
         // stay visible as evidence, not be wiped on our way out
@@ -232,16 +234,16 @@ object index {
   }
 
   /** Abort (loudly) if the lease stamp on `name` is no longer this
-    * JVM's window token — called by every swap immediately before its
-    * catalog renames: a foreign overstamp means another process
-    * entered a window mid-flight, and renaming now could collide with
-    * ITS stage. One catalog read; no Spark job. */
+    * JVM's window token — called before every flip and in-place cell
+    * rewrite: a foreign overstamp means another process entered a
+    * window mid-flight, and going live now could flip over ITS
+    * generation. One catalog read; no Spark job. */
   private def checkLease(spark: SparkSession, name: String): Unit = {
     val held = heldLeases.get(name.toLowerCase)
     require(held != null,
-      s"index: internal — table swap on '$name' outside a lease window")
+      s"index: internal — index write on '$name' outside a lease window")
     readLeaseWriter(spark, name) match {
-      case Some(w) if w != held._1 => throw staleLeaseError(name, w)
+      case Some(w) if w != held.token => throw staleLeaseError(name, w)
       case _ => ()
     }
   }
@@ -250,7 +252,7 @@ object index {
     * stamped on `name` — the [[deferTakedown]] foreign-window test. */
   private def jvmHoldsLease(name: String, token: String): Boolean = {
     val held = heldLeases.get(name.toLowerCase)
-    held != null && held._1 == token
+    held != null && held.token == token
   }
 
   /** Clear an abandoned maintenance-window stamp on index `name` — the
@@ -268,134 +270,188 @@ object index {
 
   /** One-at-a-time guard for [[deferTakedown]]'s inline auto-compaction
     * trigger: two defer threads crossing the pending ceiling together
-    * must not run [[compactTakedowns]] concurrently (the family-table
-    * rename-aside rewrites are not serialized against each other) — the
-    * loser SKIPS, and the next defer past the ceiling re-triggers. */
+    * must not run [[compactTakedowns]] concurrently (their windows
+    * would share one lease and stage over each other) — the loser
+    * SKIPS, and the next defer past the ceiling re-triggers. */
   private val autoCompactRunning = new java.util.concurrent
     .ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicBoolean]()
 
-  // ---------------- probe-side swap-window retry ----------------
+  // ---------------- generation manifest ----------------
 
-  /** Resolve `table` with a bounded retry over the rename-aside swap's
-    * reader-visible window: between `RENAME TO _old` and
-    * `RENAME _stage TO table` the canonical name resolves to nothing
-    * for the milliseconds the two catalog renames take, and a probe
-    * constructed exactly then used to throw TABLE_OR_VIEW_NOT_FOUND.
-    * Every probe-side table read goes through here; mutators do NOT
-    * (a missing table is a real error inside a maintenance window).
-    * Bounded at ~1 s — a table still missing then is genuinely gone.
-    * A probe that resolved but OVERLAPS a swap in execution can still
-    * hit moved files; that residue stays under the module's
-    * maintenance-window contract (callers retry the probe — pinned in
-    * ConcurrencySpec's probes-during-swap arm). */
-  private def resolveRetry(spark: SparkSession, table: String): DataFrame =
-    retryMissing(table)(spark.table(table))
+  /** Every table kind a family can hold, named `<name>_<kind>`, in
+    * [[describeIndex]] order. */
+  private val kinds = Seq("buckets", "sigs", "stats", "fps", "cells",
+    "centroids", "pqcells", "pqbank", "dels", "cmap", "cremap", "cedges")
+  private val livePrefix = "graft.live."
 
-  /** [[resolveRetry]] for SHOW TBLPROPERTIES — parameter reads race the
-    * same rename window. */
-  private def showPropsRetry(spark: SparkSession,
-      table: String): Map[String, String] =
-    retryMissing(table)(spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap)
-
-  private def retryMissing[T](table: String)(body: => T): T = {
-    var attempt = 0
-    while (true) {
-      try return body
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if attempt < 40 && e.getMessage != null &&
-              e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND") =>
-          attempt += 1
-          Thread.sleep(25)
-      }
-    }
-    throw new IllegalStateException(s"unreachable: $table")
+  /** One snapshot of family `name`'s manifest ([[family]]): the live
+    * physical table of each kind. A kind with no pointer is live under
+    * its canonical name `<name>_<kind>` — generation 0, what builds
+    * write. */
+  private[graft] final class Family(val spark: SparkSession,
+      val name: String, val pointers: Map[String, String]) {
+    def table(kind: String): String =
+      pointers.getOrElse(kind, s"${name}_$kind")
+    def exists(kind: String): Boolean = spark.catalog.tableExists(table(kind))
+    def read(kind: String): DataFrame = spark.table(table(kind))
+    def props(kind: String): Map[String, String] =
+      tableProps(spark, table(kind))
   }
 
-  /** Whether dels table `d` logically exists for a probe — catalog
-    * existence with the rename window papered over: mid-swap the
-    * canonical name is briefly absent while `_stage`/`_old` hold the
-    * generations, and answering "no pending set" then would leak
-    * pending ids into a probe. The final re-check of the canonical
-    * name covers a swap that completed between the probes. */
-  private def delsVisible(spark: SparkSession, d: String): Boolean =
-    spark.catalog.tableExists(d) ||
-      spark.catalog.tableExists(s"${d}_stage") ||
-      spark.catalog.tableExists(s"${d}_old") ||
-      spark.catalog.tableExists(d)
+  /** The manifest snapshot of index `name`, in one catalog read — the one
+    * resolver every read of an index table goes through. */
+  private[graft] def family(spark: SparkSession, name: String): Family =
+    new Family(spark, name, leaseProps(spark, name).collect {
+      case (k, v) if k.startsWith(livePrefix) =>
+        k.stripPrefix(livePrefix) -> v
+    })
 
-  /** Make an Overwrite build idempotent ACROSS sessions: drop the
-    * catalog entry and clear any leftover managed-table directory from a
-    * previous session whose metastore is gone (a fresh in-memory
-    * catalog refuses `saveAsTable` onto an existing managed location —
-    * LOCATION_ALREADY_EXISTS). A daily index rebuild must not depend on
+  /** The live physical table of `kind` ("buckets", "cells", "dels", ...)
+    * in index `name`: how code outside this module names an index
+    * table. */
+  def liveTable(spark: SparkSession, name: String, kind: String): String =
+    family(spark, name).table(kind)
+
+  /** Run `read` over one manifest snapshot of `name`, so every table it
+    * resolves belongs to one generation. If the manifest moved meanwhile
+    * (a flip dropped, or will drop, what `read` resolved), `read` runs
+    * again on a fresh snapshot, failed or not. */
+  private def withFamily[T](spark: SparkSession, name: String,
+      tries: Int = 0)(read: Family => T): T = {
+    val f = family(spark, name)
+    val r = scala.util.Try(read(f))
+    if (tries < 8 && family(spark, name).pointers != f.pointers)
+      withFamily(spark, name, tries + 1)(read)
+    else r.get
+  }
+
+  private val generationSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Drop every table of family `name` — canonical `<name>_<kind>` or
+    * generation `<name>_<kind>_g<epoch>_<seq>` — that the manifest does
+    * not point at: a generation staged but never flipped by a crashed
+    * window, or a superseded one whose drop never ran. Found by their
+    * warehouse directories, which every managed table has and which a
+    * write that died before registering its table leaves too. Runs at
+    * the start of every window. */
+  private def sweepUnflipped(spark: SparkSession, name: String): Unit = {
+    val f = family(spark, name)
+    val live = kinds.map(f.table(_).toLowerCase).toSet
+    val wh = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val pat = (java.util.regex.Pattern.quote(name.toLowerCase) + "_(" +
+      kinds.mkString("|") + ")(_g\\d+_\\d+)?").r
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(new org.apache.hadoop.fs.Path(wh,
+        s"${name.toLowerCase}_*")))
+      .toSeq.flatten.map(_.getPath.getName)
+      .filter(t => pat.matches(t) && !live(t))
+      .foreach(resetManagedTable(spark, _))
+  }
+
+  /** Test seam of [[commit]]: called on the driver with a label after
+    * each staged write and just before the flip. A throw there stands
+    * for a crash at that point. */
+  @volatile private[graft] var commitHook: String => Unit = _ => ()
+
+  /** The tables one operation on family `name` stages ([[commit]]). */
+  private final class Generation(spark: SparkSession, name: String) {
+    private val staged =
+      scala.collection.mutable.LinkedHashMap.empty[String, String]
+
+    /** The table this operation reads for `kind`: the one it staged,
+      * else the live one. */
+    def table(kind: String): String =
+      staged.synchronized(staged.get(kind))
+        .getOrElse(liveTable(spark, name, kind))
+
+    /** Write `kind`'s next generation under a fresh physical name (the
+      * window's lease epoch and a JVM-wide counter: two windows never
+      * pick one name); it goes live at [[flip]]. Concurrent stages must
+      * be distinct kinds. */
+    def stage(kind: String)(write: String => Unit): Unit = {
+      val epoch = heldLeases.get(name.toLowerCase).epoch
+      val t = s"${name}_${kind}_g${epoch}_${generationSeq.incrementAndGet()}"
+        .toLowerCase
+      staged.synchronized {
+        require(!staged.contains(kind), s"index: $kind staged twice")
+        staged(kind) = t
+      }
+      write(t)
+      commitHook(s"staged $kind")
+    }
+
+    /** Make every staged kind live with ONE manifest write, then drop
+      * the tables those pointers superseded. */
+    def flip(): Unit = {
+      val batch = staged.synchronized(staged.toList)
+      if (batch.nonEmpty) {
+        checkLease(spark, name)
+        commitHook("flip")
+        val before = family(spark, name)
+        spark.sql(s"ALTER TABLE ${leaseTable(name)} SET TBLPROPERTIES(" +
+          batch.map { case (k, t) => s"'$livePrefix$k'='$t'" }
+            .mkString(",") + ")")
+        staged.synchronized(staged.clear())
+        batch.foreach { case (k, _) =>
+          resetManagedTable(spark, before.table(k)) }
+      }
+    }
+
+    def abort(): Unit =
+      staged.synchronized {
+        val ts = staged.values.toList
+        staged.clear()
+        ts
+      }.foreach(resetManagedTable(spark, _))
+  }
+
+  /** Run one mutator's `body` in a lease window and make everything it
+    * staged live in one flip at its end. If `body` fails, nothing it
+    * staged goes live: the staged tables are dropped and the old
+    * generation keeps serving. A body may flip early (the dels shrink
+    * flips under its writer lock); anything staged after that flips at
+    * the end. */
+  private def commit[T](spark: SparkSession, name: String)
+      (body: Generation => T): T =
+    withLease(spark, name) {
+      val gen = new Generation(spark, name)
+      try { val r = body(gen); gen.flip(); r }
+      catch {
+        case e: Throwable =>
+          try gen.abort() catch { case d: Throwable => e.addSuppressed(d) }
+          throw e
+      }
+    }
+
+  /** Drop `table` and clear its managed directory, whether or not the
+    * catalog still knows it — how an Overwrite build resets and how a
+    * generation is dropped. A fresh in-memory catalog refuses
+    * `saveAsTable` onto an existing managed location
+    * (LOCATION_ALREADY_EXISTS), so a daily rebuild must not depend on
     * the previous builder's metastore surviving. */
   private[graft] def resetManagedTable(spark: SparkSession, table: String): Unit = {
-    // A PARTITIONED table's per-partition locations go STALE after a
-    // catalog rename (the table directory moves, the partition entries
-    // keep their absolute pre-rename paths — i.e. they alias ANOTHER
-    // table's live data after a rename-aside swap). DROP TABLE deletes
-    // managed-partition data at those registered locations, so dropping
-    // a renamed-aside generation would eat the PROMOTED table's
-    // directories. Purge the partition METADATA first (retainData —
-    // catalog-only), so the drop below can only ever delete this
-    // table's own directory.
-    val cat = spark.sessionState.catalog
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    if (cat.tableExists(ident) &&
-        cat.getTableMetadata(ident).partitionColumnNames.nonEmpty) {
-      val specs = cat.listPartitions(ident).map(_.spec)
-      if (specs.nonEmpty)
-        cat.dropPartitions(ident, specs, ignoreIfNotExists = true,
-          purge = false, retainData = true)
-    }
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(path)) fs.delete(path, true)
-    if (table.toLowerCase.endsWith("_dels")) invalidatePendingCount(table)
+    if (table.toLowerCase.contains("_dels")) invalidatePendingCount(table)
     ()
   }
 
-  /** Rewrite a managed table under the rename-aside swap discipline
-    * (the takedown's bucketed rewrites in [[rewriteBucketedMinus]], the
-    * flat tables — `_dels`, `_stats`, the component-map family — and,
-    * with `partitioned`, the retrain ops' cell tables): the new
-    * generation is written ONCE to `<table>_stage` (both stage and the
-    * `_old` name are reset first, so a crash-orphaned directory from a
-    * dead session can never fail the write — the [[resetManagedTable]]
-    * cross-session contract), the old generation is renamed aside before promotion
-    * so there is never a no-table-on-disk state, and a crash at any
-    * step leaves a complete generation recoverable under a
-    * deterministic name (a crashed PARTITIONED generation additionally
-    * needs `RECOVER PARTITIONS` after its rescue rename — renames
-    * leave partition metadata stale, see below and
-    * [[resetManagedTable]]). Replaces the old stage-then-Overwrite
-    * shape, which wrote the data TWICE and recreated the table in
-    * place. */
-  private def swapViaRename(spark: SparkSession, table: String,
-      leaseName: String, partitioned: Boolean = false)
-      (writeStage: String => Unit): Unit = {
-    checkLease(spark, leaseName)
-    val stage = s"${table}_stage"
-    val old = s"${table}_old"
-    resetManagedTable(spark, stage)
-    resetManagedTable(spark, old)
-    writeStage(stage)
-    // re-check right before the renames: a foreign process stamping
-    // over the window mid-write must abort HERE, with the standing
-    // table untouched and only a stage orphan left behind
-    checkLease(spark, leaseName)
-    spark.sql(s"ALTER TABLE $table RENAME TO $old")
-    spark.sql(s"ALTER TABLE $stage RENAME TO $table")
-    // renaming a PARTITIONED managed table moves its directory but the
-    // catalog's per-partition locations keep pointing at the old path —
-    // every read would silently scan nothing. Rebuild them from the
-    // directory layout (≤ nlist partitions — one cheap listing).
-    if (partitioned) spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-    resetManagedTable(spark, old)
+  /** What an Overwrite build does first: clear the manifest pointers of
+    * `f`'s kinds `ks` and drop their live and canonical tables. Returns
+    * the family the build writes, with those kinds canonical again. */
+  private def resetFamily(f: Family, ks: Seq[String]): Family = {
+    val pointed = ks.filter(f.pointers.contains)
+    if (pointed.nonEmpty)
+      f.spark.sql(s"ALTER TABLE ${leaseTable(f.name)} UNSET TBLPROPERTIES " +
+        "IF EXISTS (" + pointed.map(k => s"'$livePrefix$k'").mkString(",") +
+        ")")
+    ks.flatMap(k => Seq(f.table(k), s"${f.name}_$k")).distinct
+      .foreach(resetManagedTable(f.spark, _))
+    new Family(f.spark, f.name, f.pointers -- ks)
   }
 
   /** Run independent TABLE-WRITE thunks concurrently (guide §2.6 —
@@ -462,19 +518,20 @@ object index {
       s"index: bands must be >= 1 and divide numPerm " +
         s"(got numPerm=$numPerm, bands=$bands)")
     val spark = df.sparkSession
-    if (mode == SaveMode.Append && spark.catalog.tableExists(s"${name}_buckets")) {
-      val stored = readParams(spark, name)
+    val prior = family(spark, name)
+    if (mode == SaveMode.Append && prior.exists("buckets")) {
+      val stored = params(prior)
       require(stored == ((k, numPerm, bands)),
         s"index: append parameters (k=$k, numPerm=$numPerm, bands=$bands) " +
           s"do not match the build (k=${stored._1}, numPerm=${stored._2}, " +
           s"bands=${stored._3})")
     }
-    if (mode == SaveMode.Overwrite)
-      // _dels too: a fresh build is a fresh corpus — stale pending
-      // logical takedowns against the OLD build must not filter it
-      Seq(s"${name}_buckets", s"${name}_stats", s"${name}_sigs",
-          s"${name}_dels")
-        .foreach(resetManagedTable(spark, _))
+    // appends extend the live generation. _dels is reset too: a fresh
+    // build is a fresh corpus — stale pending logical takedowns against
+    // the OLD build must not filter it
+    val live =
+      if (mode != SaveMode.Overwrite) prior
+      else resetFamily(prior, Seq("buckets", "stats", "sigs", "dels"))
     val rowsPerBand = numPerm / bands
     // signatures + band keys are each read by two writers below —
     // persist for the duration of the (synchronous) build
@@ -499,21 +556,22 @@ object index {
       //   probe time, so Append just adds this batch's counts.
       inParallel(Seq(
         () => writeGrid(keys, buckets, Seq("band", "band_hash"), mode,
-          s"${name}_buckets"),
+          live.table("buckets")),
         () => keys.groupBy("band", "band_hash")
           .agg(F.count(F.lit(1)).as("cnt"))
-          .write.mode(mode).format("parquet").saveAsTable(s"${name}_stats"),
+          .write.mode(mode).format("parquet")
+          .saveAsTable(live.table("stats")),
         () => writeGrid(sh.select(F.col("id"), F.col("sh"),
             F.size(F.col("sh")).cast(DoubleType).as("n")),
-          buckets, Seq("id"), mode, s"${name}_sigs")))
-      spark.sql(s"ALTER TABLE ${name}_buckets SET TBLPROPERTIES(" +
+          buckets, Seq("id"), mode, live.table("sigs"))))
+      spark.sql(s"ALTER TABLE ${live.table("buckets")} SET TBLPROPERTIES(" +
         s"'graft.k'='$k','graft.numPerm'='$numPerm','graft.bands'='$bands')")
       // at-build drift baseline for the banding geometry (fresh builds
       // only — hot buckets accumulating across appends IS the drift
       // the report measures): one tiny aggregation over `_stats`
       if (mode == SaveMode.Overwrite && driftConfOn(spark))
-        stampDrift(spark, s"${name}_buckets",
-          jaccardDriftMetrics(spark, spark.table(s"${name}_stats")))
+        stampDrift(spark, live.table("buckets"),
+          jaccardDriftMetrics(spark, live.read("stats")))
     } finally {
       keys.unpersist(blocking = false)
       sh.unpersist(blocking = false)
@@ -544,9 +602,9 @@ object index {
     * a takedown rewrite must re-place survivors on the SAME grid or
     * every future probe's exchange-free bucket join silently breaks. */
   private def numBuckets(spark: SparkSession, table: String): Int =
-    spark.sql(s"DESCRIBE FORMATTED $table").collect()
-      .find(_.getString(0).trim == "Num Buckets")
-      .map(_.getString(1).trim.toInt)
+    spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .bucketSpec.map(_.numBuckets)
       .getOrElse(throw new IllegalArgumentException(
         s"index: table $table has no bucket spec — not a graft index table?"))
 
@@ -574,33 +632,26 @@ object index {
     df.join(side, F.col(idColName) === F.col("_ix_del"), how)
   }
 
-  /** Rewrite bucketed index table `table` minus the rows whose
-    * `idColName` is in `del`, preserving the bucket spec and every
-    * graft.* table property. Scale shape: the table is SCANNED once
-    * with its bucket alignment forced (autoBucketedScan off → one
-    * partition per bucket), the deletion set broadcast anti-joins in
-    * place, and the write ([[writeGrid]]) emits one file per bucket
-    * from min(buckets, cores) tasks with NO exchange — the index is
-    * never shuffled. `small`: the caller's one [[delIsSmall]] of `del`.
-    * The survivors replace the table through [[swapViaRename]]: the old
-    * generation is renamed aside to `<table>_old` before the staged
-    * survivors (`<table>_stage`) are promoted, so a crash leaves a
-    * complete generation under one of those names. The two catalog
-    * renames are still not one atomic step, hence the module-level
-    * single-writer contract (object doc). */
-  private def rewriteBucketedMinus(spark: SparkSession, table: String,
-      leaseName: String, idColName: String, del: DataFrame,
+  /** Stage bucketed index table `kind` minus the rows whose `idColName`
+    * is in `del`, preserving the bucket spec and every graft.* table
+    * property. Scale shape: the live table is SCANNED once with its
+    * bucket alignment forced (autoBucketedScan off → one partition per
+    * bucket), the deletion set broadcast anti-joins in place, and the
+    * write ([[writeGrid]]) emits one file per bucket from
+    * min(buckets, cores) tasks with NO exchange — the index is never
+    * shuffled. `small`: the caller's one [[delIsSmall]] of `del`. */
+  private def rewriteBucketedMinus(spark: SparkSession, gen: Generation,
+      kind: String, idColName: String, del: DataFrame,
       bucketCols: Seq[String], small: Boolean): Unit = {
-    val nb = numBuckets(spark, table)
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .filter(_._1.startsWith("graft."))
-    swapViaRename(spark, table, leaseName) { stage =>
+    val src = gen.table(kind)
+    val nb = numBuckets(spark, src)
+    val props = tableProps(spark, src).toSeq.filter(_._1.startsWith("graft."))
+    gen.stage(kind) { stage =>
       // above the broadcast gate the anti-join shuffles the scanned rows,
       // so the fallback repartitions them back onto the bucket grid —
       // one exchange of a table being fully rewritten anyway; below it
       // the bucket-aligned scan flows into the write with NO exchange
-      val minus = delJoin(spark.table(table), del, idColName, "left_anti",
+      val minus = delJoin(spark.table(src), del, idColName, "left_anti",
         small)
       withConf(spark, "spark.sql.sources.bucketing.autoBucketedScan.enabled",
           "false") {
@@ -613,27 +664,24 @@ object index {
     }
   }
 
-  /** Purge deleted ids from a cell-PARTITIONED index table (`_cells` /
-    * `_pqcells`): only the directories of AFFECTED cells are rewritten
-    * (dynamic partition overwrite), everything else is untouched on
-    * disk — at 100 TB a takedown batch touches its ≤ nlist cells, not
-    * the corpus. The affected-cell list is driver-sized by construction
-    * (≤ nlist ints — the same bound as the centroid bank every probe
-    * already collects). A cell whose every row was deleted is absent
-    * from the dynamic overwrite and would keep its ghost directory —
-    * those partitions are dropped explicitly. */
-  private def removeFromCellTable(spark: SparkSession, table: String,
-      leaseName: String, del0: DataFrame): Unit = {
+  /** Purge deleted ids from the live cell-PARTITIONED index table of
+    * `kind` (`cells` / `pqcells`) in place: only the directories of
+    * AFFECTED cells are rewritten (dynamic partition overwrite),
+    * everything else is untouched on disk — at 100 TB a takedown batch
+    * touches its ≤ nlist cells, not the corpus. The affected-cell list
+    * is driver-sized by construction (≤ nlist ints — the same bound as
+    * the centroid bank every probe already collects). A cell whose
+    * every row was deleted is absent from the dynamic overwrite and
+    * would keep its ghost directory — those partitions are dropped
+    * explicitly. */
+  private def removeFromCellTable(spark: SparkSession, name: String,
+      kind: String, del0: DataFrame): Unit = {
+    checkLease(spark, name)
+    val table = liveTable(spark, name, kind)
     // the deletion set is consumed three times (count gate, affected
     // semi-join, survivor anti-join) — pin it for the op
     val del = dedup.cachedPinned(del0)
-    try removeFromCellTablePinned(spark, table, leaseName, del)
-    finally { del.unpersist(blocking = false); () }
-  }
-
-  private def removeFromCellTablePinned(spark: SparkSession, table: String,
-      leaseName: String, del: DataFrame): Unit = {
-    checkLease(spark, leaseName)
+    try {
     val small = delIsSmall(spark, del)
     val aff = delJoin(spark.table(table), del, "n_id", "left_semi", small)
       .select("cell").distinct().collect().map(_.getInt(0))
@@ -658,6 +706,7 @@ object index {
     (aff.toSet -- survivorCells).foreach { c =>
       spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (cell=$c)")
     }
+    } finally { del.unpersist(blocking = false); () }
   }
 
   /** DEFERRED (logical) takedown — the 100 TB posture: the physical
@@ -692,17 +741,14 @@ object index {
     * set for deployments that don't want to trust cadence alone
     * (probes past [[minusPending]]'s broadcast gate stay correct
     * either way, via the shuffled fallback). Default 0 = off: the
-    * deferred write stays O(batch). CAVEAT: the inline compaction's
-    * physical purges swap index tables through catalog renames, i.e.
-    * it runs under the module's single-writer MAINTENANCE-WINDOW
-    * contract — a probe racing the triggered compaction can observe
-    * the rename window. Do not enable the ceiling on an index probed
-    * by live traffic while defers land; the defer-only path (ceiling
-    * off) has no swap and no window. */
+    * deferred write stays O(batch). The inline compaction's physical
+    * purges flip generations like any window, so probes keep reading
+    * one generation or the next; a probe executing across the drop of
+    * the generation it resolved may need one caller-level retry. */
   def deferTakedown(ids: DataFrame, idCol: String, name: String): Unit = {
     similarity.requireIntegralId(ids, idCol, "index.deferTakedown")
     val spark = ids.sparkSession
-    require(!spark.catalog.tableExists(s"${name}_cmap"),
+    require(!spark.catalog.tableExists(liveTable(spark, name, "cmap")),
       s"index.deferTakedown: '$name' has a component map — map deletions " +
         "can SPLIT families, which probe-time filtering cannot express; " +
         "call removeComponentIds (already O(batch)) for the map")
@@ -714,9 +760,9 @@ object index {
     // probe read the broadcast gate for free ([[minusPending]])
     val cnt = delsLock(s"${name}_dels").synchronized {
       // cross-process guard: a FOREIGN driver's maintenance window
-      // means its shrink/rewrite could rename _dels out from under
-      // this append — exactly the lost-defer scenario the in-JVM lock
-      // cannot see. Fail loudly; a window held by THIS JVM is the
+      // means its shrink could flip _dels past this append — exactly
+      // the lost-defer scenario the in-JVM lock cannot see. Fail
+      // loudly; a window held by THIS JVM is the
       // legal defers-during-compaction topology and proceeds. The
       // stamp read can race a window's EXIT (stamp still visible for
       // the instant between the held-map removal and the clear), so an
@@ -734,17 +780,19 @@ object index {
           case _ => leaseOk = true
         }
       }
+      // resolved under the lock: the shrink flips _dels under it too
+      val dels = liveTable(spark, name, "dels")
       delFrame(ids, idCol).select(F.col("_ix_del").as("id"))
         .write.mode(SaveMode.Append).format("parquet")
-        .saveAsTable(s"${name}_dels")
-      refreshPendingCount(spark, s"${name}_dels")
+        .saveAsTable(dels)
+      refreshPendingCount(spark, dels)
     }
     val autoCap = spark.conf
       .get("spark.graft.index.autoCompactPendingThreshold", "0").toLong
     if (autoCap > 0 && cnt > autoCap) {
       // one inline compaction at a time per index: concurrent defer
-      // threads crossing the ceiling together must not run the
-      // rename-aside rewrites concurrently — losers skip, and the next
+      // threads crossing the ceiling together must not run
+      // compactions concurrently — losers skip, and the next
       // defer past the ceiling re-triggers ([[autoCompactRunning]])
       val guard = autoCompactRunning.computeIfAbsent(name.toLowerCase,
         _ => new java.util.concurrent.atomic.AtomicBoolean(false))
@@ -759,60 +807,63 @@ object index {
     * remove exactly the PURGED ids from `<name>_dels`. Run on the
     * compaction cadence (weekly, monthly — whenever one index rewrite
     * is worth reclaiming the space); reads are identical before and
-    * after, because probes already exclude pending ids.
+    * after, because probes already exclude pending ids. Each family's
+    * purge commits as it completes; the shrunk pending set commits
+    * last.
     *
     * The final shrink is an anti-join of the CURRENT dels against the
     * pinned set, not a blind truncate: a [[deferTakedown]] that lands
     * between the pin and this rewrite was never purged, and wiping it
     * here would silently resurrect that id — it must stay pending for
     * the next compaction. The shrink itself (re-read, anti-join,
-    * rename-aside swap) runs under the in-process dels writer lock
-    * ([[delsLock]]), so a defer racing the swap blocks instead of
-    * appending into a table about to be renamed out from under it —
-    * within one JVM no defer can be lost at ANY interleaving (pinned
-    * by ConcurrencySpec's defers-during-compaction arm); writers in
-    * separate driver processes stay under the single-writer contract. */
+    * stage, flip) runs under the in-process dels writer lock
+    * ([[delsLock]]), so a defer racing it blocks instead of appending
+    * to a generation about to be superseded — within one JVM no defer
+    * can be lost at ANY interleaving (pinned by ConcurrencySpec's
+    * defers-during-compaction arm); writers in separate driver
+    * processes stay under the single-writer contract. */
   def compactTakedowns(spark: SparkSession, name: String): Unit = {
-    if (!spark.catalog.tableExists(s"${name}_dels")) return
-    withLease(spark, name) {
-      // pin the pending set OUTSIDE the dels table: the purges below
-      // run while it is being consumed, and the final rewrite would
-      // yank a lazy plan's source out from under a late re-read
-      val ids = spark.table(s"${name}_dels").select("id")
+    def has(kind: String) =
+      spark.catalog.tableExists(liveTable(spark, name, kind))
+    if (!has("dels")) return
+    commit(spark, name) { gen =>
+      // pin the pending set OUTSIDE the dels table: defers keep landing
+      // while the purges below consume it, and the shrink must remove
+      // exactly the ids they purged
+      val ids = spark.table(gen.table("dels")).select("id")
         .localCheckpoint(true)
-      if (spark.catalog.tableExists(s"${name}_buckets"))
-        removeFromJaccardIndex(ids, "id", name)
-      if (spark.catalog.tableExists(s"${name}_fps"))
-        removeFromExactIndex(ids, "id", name)
-      if (spark.catalog.tableExists(s"${name}_cells"))
-        removeFromIvfIndex(ids, "id", name)
-      if (spark.catalog.tableExists(s"${name}_pqcells"))
-        removeFromPqIndex(ids, "id", name)
-      shrinkDels(spark, name, ids)
+      if (has("buckets")) removeFromJaccardIndex(ids, "id", name)
+      if (has("fps")) removeFromExactIndex(ids, "id", name)
+      if (has("cells")) removeFromIvfIndex(ids, "id", name)
+      if (has("pqcells")) removeFromPqIndex(ids, "id", name)
+      shrinkDels(spark, gen, name, ids)
     }
   }
 
-  /** Remove exactly `purged0`'s ids from `<name>_dels` — the tail of
-    * every op that folds pending takedowns into a physical rewrite
-    * ([[compactTakedowns]], the retrain ops). Keeps only ids deferred
-    * AFTER the caller's pin; the purge set is pending-set-sized, so
-    * its join is gated like every other deletion join ([[delJoin]]
-    * discipline). Runs under the dels writer lock — see
-    * [[compactTakedowns]]'s contract note. */
-  private def shrinkDels(spark: SparkSession, name: String,
+  /** Stage `<name>_dels` minus exactly `purged0`'s ids and flip `gen`
+    * — the tail of every op that folds pending takedowns into a
+    * physical rewrite ([[compactTakedowns]], the retrain ops), so the
+    * shrunk pending set goes live together with everything `gen`
+    * staged. Keeps only ids deferred AFTER the caller's pin; the purge
+    * set is pending-set-sized, so its join is gated like every other
+    * deletion join ([[delJoin]] discipline). Runs under the dels
+    * writer lock — see [[compactTakedowns]]'s contract note. */
+  private def shrinkDels(spark: SparkSession, gen: Generation, name: String,
       purged0: DataFrame): Unit = {
     val purged = purged0.withColumnRenamed("id", "_ix_purged")
     val purgedSide =
       if (delIsSmall(spark, purged)) F.broadcast(purged)
       else purged.hint("shuffle_hash")
     delsLock(s"${name}_dels").synchronized {
-      swapViaRename(spark, s"${name}_dels", name) { stage =>
-        spark.table(s"${name}_dels")
+      val src = gen.table("dels")
+      gen.stage("dels") { stage =>
+        spark.table(src)
           .join(purgedSide, F.col("id") === F.col("_ix_purged"), "left_anti")
           .write.mode(SaveMode.Overwrite).format("parquet")
           .saveAsTable(stage)
       }
-      refreshPendingCount(spark, s"${name}_dels")
+      gen.flip()
+      refreshPendingCount(spark, gen.table("dels"))
       ()
     }
   }
@@ -826,37 +877,42 @@ object index {
     * each bucketed table onto its own grid (one file per bucket,
     * written by min(buckets, cores) tasks, no exchange — the
     * [[rewriteBucketedMinus]] scan shape with an empty deletion set),
-    * rewrites each cell-partitioned table to one file per cell, and
     * folds the `_stats` append log (one row per build/append/takedown
-    * per bucket) into one row per live bucket.
+    * per bucket) into one row per live bucket, commits them as one
+    * generation, and then rewrites each cell-partitioned table in
+    * place to one file per cell.
     * Reads are identical before and after — only the file layout
     * moves. Pending logical takedowns are NOT folded (that is
     * [[compactTakedowns]]'s job); `<name>_dels` is untouched. Runs
     * under the module's single-writer maintenance-window contract. */
   def compactIndex(spark: SparkSession, name: String): Unit =
-    withLease(spark, name) {
+    commit(spark, name) { gen =>
+      def has(kind: String) =
+        spark.catalog.tableExists(liveTable(spark, name, kind))
       val none = spark.range(0).select(F.col("id").as("_ix_del"))
       val small = delIsSmall(spark, none)
-      if (spark.catalog.tableExists(s"${name}_buckets")) {
-        rewriteBucketedMinus(spark, s"${name}_buckets", name, "id", none,
+      if (has("buckets")) {
+        rewriteBucketedMinus(spark, gen, "buckets", "id", none,
           Seq("band", "band_hash"), small)
-        rewriteBucketedMinus(spark, s"${name}_sigs", name, "id", none,
+        rewriteBucketedMinus(spark, gen, "sigs", "id", none,
           Seq("id"), small)
         // zero-sum buckets (fully taken down) drop out; a bucket absent
         // from _stats reads as count 0 either way — no probe change
-        swapViaRename(spark, s"${name}_stats", name) { stage =>
-          spark.table(s"${name}_stats")
+        val stats = gen.table("stats")
+        gen.stage("stats") { stage =>
+          spark.table(stats)
             .groupBy("band", "band_hash").agg(F.sum("cnt").as("cnt"))
             .filter(F.col("cnt") =!= 0L)
             .write.mode(SaveMode.Overwrite).format("parquet")
             .saveAsTable(stage)
         }
       }
-      if (spark.catalog.tableExists(s"${name}_fps"))
-        rewriteBucketedMinus(spark, s"${name}_fps", name, "id", none,
-          Seq("fp"), small)
-      Seq(s"${name}_cells", s"${name}_pqcells")
-        .filter(spark.catalog.tableExists).foreach { t =>
+      if (has("fps"))
+        rewriteBucketedMinus(spark, gen, "fps", "id", none, Seq("fp"),
+          small)
+      gen.flip()
+      Seq("cells", "pqcells").filter(has).map(liveTable(spark, name, _))
+        .foreach { t =>
           // one task per cell = one file per cell; the dynamic
           // overwrite replaces exactly the cells present — here, all
           // of them (the removeFromCellTable write shape, no deletion)
@@ -886,30 +942,21 @@ object index {
     * This is the no-trained-state family's [[retrainPqIndex]]: the
     * signature family's "geometry" is its hash parameters.
     *
-    * Swap discipline and single-writer contract as everywhere
-    * ([[swapViaRename]]). Re-banding to FINER bands (more bands, same
-    * numPerm) can only widen candidate generation, so exact-verified
-    * probe results are preserved or improved — the x146 oracle pins
-    * the preserved case.
-    *
-    * Torn failure: the `_buckets` and `_stats` swaps commit
-    * concurrently and independently, so if one fails `_stats` can sit
-    * at the NEW banding while `_buckets` (and its TBLPROPERTIES
-    * geometry) stay OLD, or the reverse. Probe results stay correct —
-    * band keys that match no stats row take the uncapped cool path —
-    * but the `maxBucket` hot-bucket cap of [[probeJaccardIndex]] stops
-    * firing, so the bounded-work guarantee is lost. Recovery: re-run
-    * this rehash with the intended parameters; it rewrites both tables
-    * from `_sigs` and leaves them at one banding again. */
+    * Both tables go live in one flip ([[commit]]), so probes never see
+    * `_stats` at one banding and `_buckets` at the other. Re-banding to
+    * FINER bands (more bands, same numPerm) can only widen candidate
+    * generation, so exact-verified probe results are preserved or
+    * improved — the x146 oracle pins the preserved case. */
   def rehashJaccardIndex(spark: SparkSession, name: String,
       numPerm: Int, bands: Int): Unit = {
     require(bands >= 1 && numPerm % bands == 0,
       s"index: bands must be >= 1 and divide numPerm " +
         s"(got numPerm=$numPerm, bands=$bands)")
-    val (k, _, _) = readParams(spark, name)
-    val nb = numBuckets(spark, s"${name}_buckets")
     val rowsPerBand = numPerm / bands
-    withLease(spark, name) {
+    commit(spark, name) { gen =>
+      val live = family(spark, name)
+      val (k, _, _) = params(live)
+      val nb = numBuckets(spark, live.table("buckets"))
       // materialize the signature BEFORE deriving band keys (the build
       // path's posture): inlined into lshBandKeys' array, the
       // numPerm-wide minhash would be re-evaluated once per band key —
@@ -918,24 +965,24 @@ object index {
       // persisted (id, sig) frame feeds both grid writes; each derives
       // its 64 keys from the materialized signature for free.
       val sg = dedup.cachedPinned(
-        spark.table(s"${name}_sigs").select(F.col("id"),
+        live.read("sigs").select(F.col("id"),
           dedup.minhashFromHashes(F.col("sh"), numPerm).as("_rh_sig")))
       val keys = sg.select(F.col("id"),
         F.posexplode(dedup.lshBandKeys(F.col("_rh_sig"),
           bands, rowsPerBand)).as(Seq("band", "band_hash")))
       try {
-        // the two generation swaps touch DISTINCT tables over the same
-        // pinned signature frame — run them concurrently (inParallel,
-        // guide §2.6) instead of two sequential write+rename floors
+        // the two stages touch DISTINCT tables over the same pinned
+        // signature frame — run them concurrently (inParallel, guide
+        // §2.6) instead of two sequential write floors
         inParallel(Seq(
-          () => swapViaRename(spark, s"${name}_buckets", name) { stage =>
+          () => gen.stage("buckets") { stage =>
             writeGrid(keys, nb, Seq("band", "band_hash"),
               SaveMode.Overwrite, stage)
             spark.sql(s"ALTER TABLE $stage SET TBLPROPERTIES(" +
               s"'graft.k'='$k','graft.numPerm'='$numPerm'," +
               s"'graft.bands'='$bands')")
           },
-          () => swapViaRename(spark, s"${name}_stats", name) { stage =>
+          () => gen.stage("stats") { stage =>
             keys.groupBy("band", "band_hash")
               .agg(F.count(F.lit(1)).as("cnt"))
               .write.mode(SaveMode.Overwrite).format("parquet")
@@ -944,22 +991,21 @@ object index {
         // a re-band is this family's retrain: restamp the geometry
         // baseline, so the report's ratio returns to 1
         if (driftConfOn(spark))
-          stampDrift(spark, s"${name}_buckets",
-            jaccardDriftMetrics(spark, spark.table(s"${name}_stats")))
+          stampDrift(spark, gen.table("buckets"),
+            jaccardDriftMetrics(spark, spark.table(gen.table("stats"))))
       } finally { sg.unpersist(blocking = false); () }
     }
   }
 
   // ---------------- codebook / centroid RETRAIN ----------------
 
-  /** The pinned pending set of `name` (None when no `_dels` table): an
-    * eager, lineage-severed copy, because retrain both consumes it
+  /** The pinned pending set of family `f` (None when no `_dels` table):
+    * an eager, lineage-severed copy, because retrain both consumes it
     * (training/encode exclusion) and then folds it into `_dels` via
-    * [[shrinkDels]] — a lazy plan would re-read a table being swapped. */
-  private def pinnedPending(spark: SparkSession,
-      name: String): Option[DataFrame] =
-    if (!spark.catalog.tableExists(s"${name}_dels")) None
-    else Some(spark.table(s"${name}_dels").select("id").localCheckpoint(true))
+    * [[shrinkDels]], while defers keep appending to the live table. */
+  private def pinnedPending(f: Family): Option[DataFrame] =
+    if (!f.exists("dels")) None
+    else Some(f.read("dels").select("id").localCheckpoint(true))
 
   /** `df` minus a pinned pending set on `idColName` — the [[delJoin]]
     * gate applied to the retrain exclusion joins. No distinct: an
@@ -984,8 +1030,10 @@ object index {
     * on the current live corpus (the same Lloyd-as-Spark-jobs path as
     * the build — `portableSeed` keeps the iters = 0 seed path exactly
     * replayable, the x143 oracle gate), re-assigns every live vector
-    * in one codegen pass, and swaps both tables under the rename-aside
-    * discipline. Self-contained: `_cells` stores the vectors, so no
+    * in one codegen pass, and commits the cells, the bank and the
+    * shrunk pending set as ONE generation ([[commit]]) — probes never
+    * route rows assigned against one bank through the other.
+    * Self-contained: `_cells` stores the vectors, so no
     * external source is needed (contrast [[retrainPqIndex]]). Passing
     * `nlist` > 0 RESIZES the cell geometry in the same pass — the
     * growth path an append-only corpus eventually needs (see the
@@ -995,7 +1043,7 @@ object index {
     * way: pending ids are EXCLUDED from both the training sample and
     * the re-encode (the rewrite is their physical purge — deleted data
     * must not shape the new geometry either), and the pinned pending
-    * set is folded out of `_dels` afterwards ([[shrinkDels]] — a defer
+    * set is folded out of `_dels` ([[shrinkDels]] — a defer
     * landing mid-retrain stays pending, the compactTakedowns
     * contract). Probe results change ONLY through candidate geometry:
     * with nprobe = nlist a post-retrain probe is still exactly the
@@ -1006,40 +1054,30 @@ object index {
     * the broadcast-literal new bank) plus the one exchange every cell
     * rewrite pays (repartition onto the new cell grid → one file per
     * cell); the corpus is never joined or shuffled otherwise. Runs
-    * under the module's single-writer maintenance-window contract.
-    *
-    * CRASH WINDOW — cross-TABLE consistency: the two interdependent
-    * swaps (`_cells` then `_centroids`) are sequential, so a crash
-    * between them leaves rows ASSIGNED against the new bank while
-    * probes still read the OLD bank — probes keep running but route
-    * with degraded recall, a SILENT state (no error is thrown). The
-    * single-table rename rescue ([[swapViaRename]]) is not enough
-    * here: recover by re-running the retrain (idempotent — it trains
-    * on the live survivors again), or by rescuing BOTH `_old`
-    * generations as a PAIR — never one without the other. */
+    * under the module's single-writer maintenance-window contract. */
   def retrainIvfIndex(spark: SparkSession, name: String, iters: Int = 5,
       sampleN: Int = 20000, sampleOneIn: Long = 0L,
       portableSeed: Boolean = false, nlist: Int = 0): Unit =
-   withLease(spark, name) {
-    val dim = readIvfDim(spark, name)
+   commit(spark, name) { gen =>
+    val f = family(spark, name)
+    val dim = ivfDim(f)
     // nlist > 0 RESIZES the cell geometry — the growth path an
     // append-only corpus eventually needs (cells sized for day 1 go
     // hot as the corpus grows; nlist ∝ √n keeps probe cost flat).
     // Safe here precisely because retrain re-assigns EVERY live row:
     // unlike append-time cell ids, nothing persisted refers to the old
-    // geometry after the swap. 0 (default) keeps the stored width.
+    // geometry after the flip. 0 (default) keeps the stored width.
     val nlistEff =
       if (nlist > 0) nlist
-      else readIvfBank(spark, name).length / (dim + 1)
-    val pend = pinnedPending(spark, name)
-    val live = minusPinned(spark, spark.table(s"${name}_cells"), pend, "n_id")
+      else ivfBank(f).length / (dim + 1)
+    val pend = pinnedPending(f)
+    val live = minusPinned(spark, f.read("cells"), pend, "n_id")
     val bank = similarity.trainIvfCentroids(live, "n_id", "n_vec", nlistEff,
       iters, sampleN, sampleOneIn, portableSeed)
     require(bank.nonEmpty,
       s"index.retrainIvfIndex: '$name' has no live vectors to retrain on")
     val bankLit = F.typedlit(bank.toSeq)
-    swapViaRename(spark, s"${name}_cells", name, partitioned = true) {
-        stage =>
+    gen.stage("cells") { stage =>
       live.select(F.col("n_id"), F.col("n_vec"), F.col("n_nrm"),
           F.element_at(F.call_function("graft_centroid_topk",
             F.col("n_vec"), bankLit, F.lit(1)), 1).as("cell"))
@@ -1049,18 +1087,13 @@ object index {
       spark.sql(s"ALTER TABLE $stage SET TBLPROPERTIES(" +
         s"'graft.dim'='$dim')")
     }
-    swapViaRename(spark, s"${name}_centroids", name) { stage =>
-      import spark.implicits._
-      bank.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
-        .toDF("pos", "v").coalesce(1)
-        .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(stage)
-    }
-    pend.foreach(p => shrinkDels(spark, name, p))
+    gen.stage("centroids")(writeIvfBank(spark, bank, _))
     // retrain restamps the drift baseline: the new geometry fits the
     // live corpus by construction, so the report's ratio returns to 1
     if (driftConfOn(spark))
-      stampDrift(spark, s"${name}_cells",
-        ivfDriftMetrics(spark, spark.table(s"${name}_cells"), bank, dim))
+      stampDrift(spark, gen.table("cells"),
+        ivfDriftMetrics(spark, spark.table(gen.table("cells")), bank, dim))
+    pend.foreach(p => shrinkDels(spark, gen, name, p))
    }
 
   /** RETRAIN both quantizer banks of PQ index `name` (IVF centroids +
@@ -1068,6 +1101,9 @@ object index {
     * [[retrainIvfIndex]]'s sibling for the code-storing layout, and
     * the remedy for the recall decay [[buildPqIndex]]'s
     * stored-bank-append contract accumulates on a drifting corpus.
+    * The codes, the banks and the shrunk pending set go live as ONE
+    * generation ([[commit]]): no probe decodes new codes with old
+    * codebooks.
     *
     * PQ codes are LOSSY — the original vectors are deliberately not
     * persisted — so re-encoding needs the authoritative vector store:
@@ -1077,7 +1113,7 @@ object index {
     * rows `df` carries for already-removed ids can never resurrect
     * (the takedown contract), and the rewrite must cover ALL live ids:
     * coverage is enforced by counting the staged table against the
-    * live set before the swap, so a partial vector store aborts with
+    * live set before the flip, so a partial vector store aborts with
     * the index untouched rather than silently shrinking it.
     *
     * The storage contract holds by default: nlist, m, ksub (inferred
@@ -1089,7 +1125,7 @@ object index {
     * `nlist`/`m`/`ksub` > 0 override the stored widths (nlist ∝ √n
     * keeps probe cost flat; a larger m buys recall at more ints per
     * row) — nothing persisted refers to the old geometry after the
-    * swap, and the updated widths land in TBLPROPERTIES/`_pqbank` so
+    * flip, and the updated widths land in TBLPROPERTIES/`_pqbank` so
     * later appends and probes read the resized contract. The residual
     * flag alone is immutable (it is a semantic, not a width). Pending
     * ids are excluded from training and encode and folded out of
@@ -1099,17 +1135,7 @@ object index {
     * id semi-join of `df` against the live id set (the one join the
     * lossy layout forces — O(corpus), like the rewrite itself) plus
     * the cell-grid exchange; no other shuffle. Single-writer
-    * maintenance-window contract.
-    *
-    * CRASH WINDOW — cross-TABLE consistency: the `_pqcells` and
-    * `_pqbank` swaps are sequential, so a crash between them leaves
-    * codes ENCODED against the new banks while probes still decode
-    * with the OLD codebooks — for PQ that is silently WRONG ADC
-    * distances, not just recall loss, and no error is thrown. The
-    * single-table rename rescue ([[swapViaRename]]) is not enough
-    * here: recover by re-running the retrain (idempotent), or by
-    * rescuing BOTH `_old` generations as a PAIR — never one without
-    * the other. */
+    * maintenance-window contract. */
   def retrainPqIndex(df: DataFrame, idCol: String, vecCol: String,
       name: String, ivfIters: Int = 2, pqIters: Int = 0,
       sampleN: Int = 20000, sampleOneIn: Long = 0L,
@@ -1117,26 +1143,26 @@ object index {
       ksub: Int = 0): Unit = {
     val spark = df.sparkSession
     similarity.requireIntegralId(df, idCol, "index.retrainPqIndex")
-    withLease(spark, name) {
-    val dim = readPqProp(spark, name, "graft.dim").toInt
+    commit(spark, name) { gen =>
+    val f = family(spark, name)
+    val dim = pqProp(f, "graft.dim").toInt
     val mEff =
-      if (m > 0) m else readPqProp(spark, name, "graft.m").toInt
+      if (m > 0) m else pqProp(f, "graft.m").toInt
     require(dim % mEff == 0,
       s"index.retrainPqIndex: m=$mEff must divide dim=$dim")
-    val residual =
-      readPqPropOr(spark, name, "graft.residual", "false").toBoolean
+    val residual = pqPropOr(f, "graft.residual", "false").toBoolean
     val nlistEff =
       if (nlist > 0) nlist
-      else readPqBank(spark, name, "ivf").length / (dim + 1)
+      else pqBank(f, "ivf").length / (dim + 1)
     // cb layout is m × ksub × (dim/m) doubles → ksub = |cb| / dim; a
     // tiny build that trained kEff < ksub codewords retrains at kEff —
     // the effective budget the stored codes were paid at
     val ksubEff =
       if (ksub > 0) ksub
-      else readPqBank(spark, name, "cb").length / dim
-    val pend = pinnedPending(spark, name)
+      else pqBank(f, "cb").length / dim
+    val pend = pinnedPending(f)
     val liveIds = minusPinned(spark,
-      spark.table(s"${name}_pqcells").select("n_id"), pend, "n_id")
+      f.read("pqcells").select("n_id"), pend, "n_id")
     val nLive = liveIds.count()
     require(nLive > 0,
       s"index.retrainPqIndex: '$name' has no live vectors to retrain on")
@@ -1146,7 +1172,7 @@ object index {
     // must abort BEFORE the training and the full re-encode write, not
     // after paying them — one anti-join count over the id columns
     // (dwarfed by the encode it guards), with the standing index and
-    // catalog untouched (no stage table is ever created). The staged
+    // catalog untouched (nothing is staged yet). The staged
     // post-write gate below stays: it additionally catches duplicate
     // and ragged-vector rows the id-level pre-check cannot see.
     val missing = liveIds
@@ -1166,33 +1192,20 @@ object index {
         mEff, ksubEff, pqIters, sampleN, sampleOneIn, portableSeed)
       else similarity.trainPqCodebooks(liveVecs, "n_id", "n_vec", mEff,
         ksubEff, pqIters, sampleN, sampleOneIn, portableSeed)
-    // recon baseline computed BEFORE the swaps: the encode-side scan
-    // re-reads liveVecs, whose plan still points at the OLD generation
-    // — after the rename-aside swap those files are gone. The values
-    // depend only on the live vectors and the NEW banks, so computing
-    // here and stamping after the swap is the same number.
-    val reconBase =
-      if (driftConfOn(spark))
-        Some(pqReconStatsAtEncode(
-          similarity.cleanDim(liveVecs, "n_vec", dim), "n_id", "n_vec",
-          bank, cb, mEff, dim, residual))
-      else None
-    swapViaRename(spark, s"${name}_pqcells", name, partitioned = true) {
-        stage =>
+    gen.stage("pqcells") { stage =>
       encodeCells(similarity.cleanDim(liveVecs, "n_vec", dim),
           "n_id", "n_vec", bank, cb, mEff, dim, residual)
         .repartition(F.col("cell"))
         .write.mode(SaveMode.Overwrite).partitionBy("cell")
         .format("parquet").saveAsTable(stage)
-      // coverage gate BEFORE any rename: a vector store carrying
+      // coverage gate BEFORE the flip: a vector store carrying
       // duplicate rows or ragged vectors for live ids (the pre-check
       // above already killed MISSING ids cheaply) must abort with the
-      // standing index intact, not swap in a corrupted generation.
+      // standing index intact, not flip in a corrupted generation.
       // Row count alone can be fooled — a duplicate masking a ragged
       // drop leaves the total at nLive — so distinct-id coverage is
       // asserted too (one gate job; its tiny exchange is the price of
-      // the abort contract). Throwing here leaves only a stage
-      // orphan, which the next retrain's reset clears.
+      // the abort contract). Throwing here drops the staged tables.
       val gate = spark.table(stage)
         .agg(F.count(F.lit(1)), F.count_distinct(F.col("n_id"))).head()
       val staged = gate.getLong(0)
@@ -1206,24 +1219,23 @@ object index {
         s"'graft.dim'='$dim', 'graft.m'='$mEff', " +
         s"'graft.residual'='$residual')")
     }
-    swapViaRename(spark, s"${name}_pqbank", name) { stage =>
-      import spark.implicits._
-      val rows = bank.zipWithIndex.map { case (v, i) => ("ivf", i, v) } ++
-        cb.zipWithIndex.map { case (v, i) => ("cb", i, v) }
-      rows.toSeq.toDF("kind", "pos", "v").coalesce(1)
-        .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(stage)
-    }
-    pend.foreach(p => shrinkDels(spark, name, p))
+    gen.stage("pqbank")(writePqBank(spark, bank, cb, _))
     // restamp the drift baseline against the fresh banks — the
-    // report's ratio returns to 1 after a retrain (see retrainIvf)
-    reconBase.foreach { case (rMean, rP95) =>
+    // report's ratio returns to 1 after a retrain (see retrainIvf).
+    // Recon error comes from the encode side: it depends only on the
+    // live vectors and the NEW banks.
+    if (driftConfOn(spark)) {
+      val (rMean, rP95) = pqReconStatsAtEncode(
+        similarity.cleanDim(liveVecs, "n_vec", dim), "n_id", "n_vec",
+        bank, cb, mEff, dim, residual)
       // widths from the TRAINED banks (≤ the requested ones on a
       // sample smaller than nlist/ksub), matching the report's view
-      stampDrift(spark, s"${name}_pqcells",
-        pqOccMetrics(spark, spark.table(s"${name}_pqcells"),
+      stampDrift(spark, gen.table("pqcells"),
+        pqOccMetrics(spark, spark.table(gen.table("pqcells")),
           bank.length / (dim + 1), cb.length / dim) ++
           Seq("recon_mean" -> rMean, "recon_p95" -> rP95))
     }
+    pend.foreach(p => shrinkDels(spark, gen, name, p))
     }
   }
 
@@ -1243,37 +1255,28 @@ object index {
     * Scale shape: one metadata-cheap count per table (parquet
     * row-group stats — no data columns scanned) plus catalog property
     * reads, over a fixed ≤ 12-suffix inventory — driver-bounded by
-    * construction. The counts ride ONE union-of-aggregates job that
-    * executes at the CALLER'S action (lazy, at-action-time semantics —
-    * not a snapshot at call time): a concurrent mutator committing
-    * between describeIndex() and the collect is visible in the counts,
-    * and a table dropped in that window fails the action rather than
-    * returning a stale row. Callers needing a point-in-time snapshot
-    * under concurrent mutation should collect immediately while
-    * holding the family's maintenance lease (the same `_lease` table
-    * every mutator takes). */
-  def describeIndex(spark: SparkSession, name: String): DataFrame = {
+    * construction. Every table comes from one manifest snapshot; the
+    * counts ride ONE union-of-aggregates job that runs at the CALLER'S
+    * action, so an append landing before it is counted, and a flip
+    * landing before it fails the action rather than mixing
+    * generations (describe again). */
+  def describeIndex(spark: SparkSession, name: String): DataFrame =
+   withFamily(spark, name) { f =>
     import spark.implicits._
-    val suffixes = Seq("buckets", "sigs", "stats", "fps", "cells",
-      "centroids", "pqcells", "pqbank", "dels", "cmap", "cremap",
-      "cedges")
-    val parts = suffixes.flatMap { sfx =>
-      val t = s"${name}_$sfx"
-      if (!spark.catalog.tableExists(t)) None
+    val parts = kinds.flatMap { sfx =>
+      if (!f.exists(sfx)) None
       else {
         // graft.drift.* baselines are data-derived doubles surfaced
         // (with their comparison) by [[driftIndexReport]], not here —
         // `params` stays the build-call parameters probes read back
-        val params = showPropsRetry(spark, t).toSeq
+        val params = f.props(sfx).toSeq
           .filter { case (k, _) =>
             k.startsWith("graft.") && !k.startsWith("graft.drift.") }
           .sortBy(_._1)
           .map { case (k, v) => s"$k=$v" }.mkString(",")
         // one lazy single-row aggregate per table; the union below
-        // makes the whole inventory ONE Spark job (the old form ran
-        // one sequential count() job per suffix — up to 12 fixed
-        // scheduling floors for a metadata-cheap listing)
-        Some(resolveRetry(spark, t)
+        // makes the whole inventory ONE Spark job
+        Some(f.read(sfx)
           .agg(F.count(F.lit(1)).as("n_rows"))
           .select(F.lit(sfx).as("part"), F.col("n_rows"),
             F.lit(params).as("params")))
@@ -1282,7 +1285,7 @@ object index {
     if (parts.isEmpty)
       Seq.empty[(String, Long, String)].toDF("part", "n_rows", "params")
     else parts.reduce(_.unionAll(_))
-  }
+   }
 
   // ---------------- geometry drift / index health ----------------
 
@@ -1303,8 +1306,8 @@ object index {
     *    which needs the caller's vector store like every
     *    vector-touching PQ op): mean/p95 of the squared quantization
     *    error of the STORED codes decoded against the STORED banks —
-    *    also a canary for a code space corrupted by the documented
-    *    cross-table crash window, which probes cannot see;
+    *    also a canary for codes that no longer match their banks,
+    *    which probes cannot see;
     *  - occupancy shape (both): empty-cell count and hot-cell ratio
     *    (max cell size ÷ uniform share) — drifting mass concentrates
     *    in few cells, degrading probe cost at fixed nprobe — plus
@@ -1424,8 +1427,7 @@ object index {
     * true vectors supplied by `df` — the one join the lossy layout
     * forces (the [[retrainPqIndex]] posture). Returns
     * `(total, matched, distinct, mean, p95)` from ONE left-join
-    * aggregation job (was a separate live `count()` + an inner-join
-    * agg): `total` counts live rows times source multiplicity,
+    * aggregation job: `total` counts live rows times source multiplicity,
     * `matched` counts rows whose source vector arrived, and
     * `distinct` counts the DISTINCT live ids a vector arrived for —
     * so `matched == total && distinct == matched` iff the store
@@ -1433,22 +1435,17 @@ object index {
     * missing live ids OR duplicating them must fail, since either
     * silently skews a drift metric. (matched == total alone misses
     * the duplicate-only source: a duplicated live id inflates total
-    * and matched equally — the r14 verdict's gate bug — while
-    * distinct < matched exposes it.) On every PASSING store the
-    * aggregated multiset is identical to the old inner join's, so
-    * the reported values are bit-equal. */
-  private def pqReconStats(spark: SparkSession, name: String,
+    * and matched equally, while distinct < matched exposes it.) */
+  private def pqReconStats(f: Family,
       df: DataFrame, idCol: String,
       vecCol: String): (Long, Long, Long, Double, Double) = {
-    import spark.implicits._
-    val dim = readPqProp(spark, name, "graft.dim").toInt
-    val mEff = readPqProp(spark, name, "graft.m").toInt
-    val residual =
-      readPqPropOr(spark, name, "graft.residual", "false").toBoolean
-    val ivfBank = readPqBank(spark, name, "ivf")
-    val cbLit = F.typedlit(readPqBank(spark, name, "cb").toSeq)
-    val live = minusPending(spark, name,
-        resolveRetry(spark, s"${name}_pqcells"), "n_id")
+    val spark = f.spark
+    val dim = pqProp(f, "graft.dim").toInt
+    val mEff = pqProp(f, "graft.m").toInt
+    val residual = pqPropOr(f, "graft.residual", "false").toBoolean
+    val ivfBank = pqBank(f, "ivf")
+    val cbLit = F.typedlit(pqBank(f, "cb").toSeq)
+    val live = minusPending(f, f.read("pqcells"), "n_id")
       .select("n_id", "codes", "cell")
     val src = df.select(F.col(idCol).cast(LongType).as("n_id"),
       F.col(vecCol).as("_dr_v"))
@@ -1465,11 +1462,7 @@ object index {
     // cell routes the lookup (never a recomputed argmax)
     val (framed, vecExpr) =
       if (residual) {
-        val nlist = ivfBank.length / (dim + 1)
-        val cdf = F.broadcast((0 until nlist).map(c =>
-            (c, ivfBank.slice(c * dim, (c + 1) * dim).toSeq)).toDF(
-            "cell", "_dr_cent"))
-        (joined.join(cdf, "cell"),
+        (joined.join(centroidFrame(spark, ivfBank, dim, "_dr_cent"), "cell"),
           F.call_function("graft_vec_sub", F.col("_dr_v"),
             F.col("_dr_cent")))
       } else (joined, F.col("_dr_v"))
@@ -1559,9 +1552,9 @@ object index {
       ()
     }
 
-  private def driftBaselines(spark: SparkSession,
-      table: String): Map[String, Double] =
-    showPropsRetry(spark, table).collect {
+  private def driftBaselines(f: Family,
+      kind: String): Map[String, Double] =
+    f.props(kind).collect {
       case (k, v) if k.startsWith("graft.drift.") =>
         k.stripPrefix("graft.drift.") -> v.toDouble
     }
@@ -1588,34 +1581,31 @@ object index {
     * have no trained state: their parameters ARE the geometry, so
     * there is nothing to drift ([[rehashJaccardIndex]] is their
     * retrain). */
-  def driftIndexReport(spark: SparkSession, name: String): DataFrame = {
+  def driftIndexReport(spark: SparkSession, name: String): DataFrame =
+   withFamily(spark, name) { f =>
     import spark.implicits._
     val rows = scala.collection.mutable.ArrayBuffer
       .empty[(String, String, Double, Option[Double], Option[Double])]
-    if (spark.catalog.tableExists(s"${name}_cells")) {
-      val dim = readIvfDim(spark, name)
-      val bank = readIvfBank(spark, name)
-      val live = minusPending(spark, name,
-        resolveRetry(spark, s"${name}_cells"), "n_id")
+    if (f.exists("cells")) {
+      val dim = ivfDim(f)
+      val bank = ivfBank(f)
+      val live = minusPending(f, f.read("cells"), "n_id")
       rows ++= driftRows(ivfDriftMetrics(spark, live, bank, dim),
-        driftBaselines(spark, s"${name}_cells"), "ivf")
+        driftBaselines(f, "cells"), "ivf")
     }
-    if (spark.catalog.tableExists(s"${name}_pqcells")) {
-      val dim = readPqProp(spark, name, "graft.dim").toInt
-      val ivfBank = readPqBank(spark, name, "ivf")
-      val nlist = ivfBank.length / (dim + 1)
-      val ksubEff = readPqBank(spark, name, "cb").length / dim
-      val live = minusPending(spark, name,
-        resolveRetry(spark, s"${name}_pqcells"), "n_id")
+    if (f.exists("pqcells")) {
+      val dim = pqProp(f, "graft.dim").toInt
+      val nlist = pqBank(f, "ivf").length / (dim + 1)
+      val ksubEff = pqBank(f, "cb").length / dim
+      val live = minusPending(f, f.read("pqcells"), "n_id")
       rows ++= driftRows(pqOccMetrics(spark, live, nlist, ksubEff),
-        driftBaselines(spark, s"${name}_pqcells"), "pq")
+        driftBaselines(f, "pqcells"), "pq")
     }
-    if (spark.catalog.tableExists(s"${name}_stats"))
-      rows ++= driftRows(
-        jaccardDriftMetrics(spark, resolveRetry(spark, s"${name}_stats")),
-        driftBaselines(spark, s"${name}_buckets"), "jaccard")
+    if (f.exists("stats"))
+      rows ++= driftRows(jaccardDriftMetrics(spark, f.read("stats")),
+        driftBaselines(f, "buckets"), "jaccard")
     rows.toSeq.toDF("family", "metric", "value", "baseline", "ratio")
-  }
+   }
 
   /** [[driftIndexReport]]'s PQ reconstruction-error rows — mean/p95 of
     * the squared quantization error of the stored codes against the
@@ -1630,28 +1620,27 @@ object index {
     val spark = df.sparkSession
     import spark.implicits._
     similarity.requireIntegralId(df, idCol, "index.driftPqReport")
+    withFamily(spark, name) { f =>
     // coverage audit rides the same single aggregation job as the
-    // metrics (pqReconStats' left-join gate) — the separate live
-    // count() job this health check used to pay is gone; the live
-    // count in the error message is computed only on the failure path.
+    // metrics (pqReconStats' left-join gate); the live count in the
+    // error message is computed only on the failure path.
     // Both directions fail: matched < total ⇒ a live id got no vector;
     // distinct < matched ⇒ a live id got MORE than one (a dup-only
     // source inflates matched and total equally, so matched == total
     // alone would pass it and silently double-count recon_mean/p95)
     val (total, matched, distinct, mean, p95) =
-      pqReconStats(spark, name, df, idCol, vecCol)
+      pqReconStats(f, df, idCol, vecCol)
     require(matched == total && distinct == matched, {
-      val nLive = minusPending(spark, name,
-          resolveRetry(spark, s"${name}_pqcells"), "n_id")
-        .count()
+      val nLive = minusPending(f, f.read("pqcells"), "n_id").count()
       s"index.driftPqReport: vector source covered $distinct distinct " +
         s"ids ($matched of $total join rows matched) of $nLive live " +
         "indexed ids — it must cover every live id exactly once at " +
         "the stored width"
     })
     driftRows(Seq("recon_mean" -> mean, "recon_p95" -> p95),
-        driftBaselines(spark, s"${name}_pqcells"), "pq")
+        driftBaselines(f, "pqcells"), "pq")
       .toDF("family", "metric", "value", "baseline", "ratio")
+    }
   }
 
   /** Drift metrics that rise MONOTONICALLY with geometry decay — the
@@ -1713,19 +1702,20 @@ object index {
     // floor (guide §2.4). The dels count stays an exact job (not the
     // advisory pendingCounts cache): pending_frac is a VALUE the x150
     // oracle re-derives, not a join-strategy gate.
-    val present = primaries.filter { case (_, sfx) =>
-      spark.catalog.tableExists(s"${name}_$sfx") }
-    val countFrames =
-      (if (delsVisible(spark, s"${name}_dels"))
-         Seq("dels" -> s"${name}_dels") else Seq.empty) ++
-        present.map { case (fam, sfx) => fam -> s"${name}_$sfx" }
-    val counts: Map[String, Long] =
-      if (countFrames.isEmpty) Map.empty
-      else countFrames.map { case (label, t) =>
-          resolveRetry(spark, t).agg(F.count(F.lit(1)).as("_adv_n"))
-            .select(F.lit(label).as("_adv_t"), F.col("_adv_n"))
-        }.reduce(_.unionAll(_)).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (present, counts) = withFamily(spark, name) { f =>
+      val present = primaries.filter { case (_, sfx) => f.exists(sfx) }
+      val countFrames =
+        (if (f.exists("dels")) Seq("dels" -> "dels") else Seq.empty) ++
+          present
+      val counts: Map[String, Long] =
+        if (countFrames.isEmpty) Map.empty
+        else countFrames.map { case (label, sfx) =>
+            f.read(sfx).agg(F.count(F.lit(1)).as("_adv_n"))
+              .select(F.lit(label).as("_adv_t"), F.col("_adv_n"))
+          }.reduce(_.unionAll(_)).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      (present, counts)
+    }
     val nPending = counts.getOrElse("dels", 0L)
     val pend = present.map { case (fam, _) =>
       val n = counts(fam)
@@ -1763,7 +1753,7 @@ object index {
     * Every executed verb takes the cross-driver writer lease itself
     * (re-entrant in-process), so the sequence inherits the
     * single-writer contract; a crash mid-sequence leaves each
-    * completed verb's rename-aside generation intact and the advice
+    * completed verb's generation live and the advice
     * re-derivable — re-running the executor is idempotent-by-advice
     * (remedied signals come back `ok` and are skipped). Retrain's
     * restamp pulls the drifted ratios back to exactly 1, which is
@@ -1839,26 +1829,26 @@ object index {
     * change rows. */
   private[graft] def minusPending(spark: SparkSession, name: String,
       df: DataFrame, idColName: String): DataFrame =
-    // delsVisible, not tableExists: mid-shrink-swap the canonical name
-    // is briefly absent while _stage/_old hold the generations, and
-    // answering "no pending set" then would LEAK pending ids into the
-    // probe; resolveRetry then rides out the rename window itself
-    if (!delsVisible(spark, s"${name}_dels")) df
+    withFamily(spark, name)(minusPending(_, df, idColName))
+
+  private def minusPending(f: Family, df: DataFrame,
+      idColName: String): DataFrame =
+    if (!f.exists("dels")) df
     else {
-      val dels = resolveRetry(spark, s"${name}_dels")
-        .select(F.col("id").as("_ix_pending"))
+      val spark = f.spark
+      val dels = f.read("dels").select(F.col("id").as("_ix_pending"))
       val cap = spark.conf
         .get("spark.graft.index.pendingBroadcastThreshold", "10000000").toLong
       // cold-start count OUTSIDE the map's compute (computeIfAbsent
       // would hold the bin lock for the whole job, blocking writers'
       // refreshPendingCount puts hashed to the same bin); two racing
       // cold probes at worst both count — the cache is advisory
-      val key = pendingKey(spark, s"${name}_dels")
+      val key = pendingKey(spark, f.table("dels"))
       val cached = pendingCounts.get(key)
       val cnt: Long =
         if (cached != null) cached.longValue
         else {
-          val c = resolveRetry(spark, s"${name}_dels").count()
+          val c = dels.count()
           putPendingCount(key, c)
           c
         }
@@ -1877,7 +1867,8 @@ object index {
     * row would keep matching future probes as a dup verdict). After the
     * call, probes behave exactly as if the index had been rebuilt on
     * the survivors — the build's hash parameters are untouched, so
-    * that equality is literal (the x127 oracle). `_stats` is never
+    * that equality is literal (the x127 oracle). `_buckets` and
+    * `_sigs` go live in one flip. `_stats` is never
     * rewritten: the probe aggregates stats with SUM, so the takedown
     * appends one NEGATIVE count row per affected bucket (computed from
     * the same single scan posture — the corpus is never shuffled). */
@@ -1885,12 +1876,12 @@ object index {
       name: String): Unit = {
     similarity.requireIntegralId(ids, idCol, "index.removeFromJaccardIndex")
     val spark = ids.sparkSession
-    withLease(spark, name) {
+    commit(spark, name) { gen =>
     val del = dedup.cachedPinned(delFrame(ids, idCol))
     try {
       // the decrement is computed from the PRE-rewrite buckets table,
-      // pinned eagerly (localCheckpoint — the source is about to be
-      // swapped), but APPENDED only after the rewrite commits: a retry
+      // pinned eagerly (localCheckpoint — the flip drops that table),
+      // but APPENDED only after the rewrite commits: a retry
       // after a mid-takedown failure then finds the rows already gone
       // and appends nothing, instead of decrementing the same buckets
       // twice and dragging _stats sums below live counts (maxBucket
@@ -1899,18 +1890,18 @@ object index {
       // which is pair-complete). Coalesced to the cores: the bucketed
       // scan alone checkpoints and appends one task and file per bucket.
       val small = delIsSmall(spark, del)
-      val dec = delJoin(spark.table(s"${name}_buckets"), del, "id",
-          "left_semi", small)
+      val dec = delJoin(spark.table(liveTable(spark, name, "buckets")),
+          del, "id", "left_semi", small)
         .groupBy("band", "band_hash")
         .agg((-F.count(F.lit(1))).as("cnt"))
         .coalesce(spark.sparkContext.defaultParallelism)
         .localCheckpoint(true)
-      rewriteBucketedMinus(spark, s"${name}_buckets", name, "id", del,
+      rewriteBucketedMinus(spark, gen, "buckets", "id", del,
         Seq("band", "band_hash"), small)
-      rewriteBucketedMinus(spark, s"${name}_sigs", name, "id", del,
-        Seq("id"), small)
+      rewriteBucketedMinus(spark, gen, "sigs", "id", del, Seq("id"), small)
+      gen.flip()
       dec.write.mode(SaveMode.Append).format("parquet")
-        .saveAsTable(s"${name}_stats")
+        .saveAsTable(liveTable(spark, name, "stats"))
     } finally { del.unpersist(blocking = false); () }
     }
   }
@@ -1923,11 +1914,11 @@ object index {
       name: String): Unit = {
     similarity.requireIntegralId(ids, idCol, "index.removeFromExactIndex")
     val spark = ids.sparkSession
-    withLease(spark, name) {
+    commit(spark, name) { gen =>
       // pinned: the set is consumed twice (count gate + join)
       val del = dedup.cachedPinned(delFrame(ids, idCol))
-      try rewriteBucketedMinus(spark, s"${name}_fps", name, "id", del,
-        Seq("fp"), delIsSmall(spark, del))
+      try rewriteBucketedMinus(spark, gen, "fps", "id", del, Seq("fp"),
+        delIsSmall(spark, del))
       finally { del.unpersist(blocking = false); () }
     }
   }
@@ -1944,8 +1935,7 @@ object index {
     similarity.requireIntegralId(ids, idCol, "index.removeFromIvfIndex")
     val spark = ids.sparkSession
     withLease(spark, name) {
-      removeFromCellTable(spark, s"${name}_cells", name,
-        delFrame(ids, idCol))
+      removeFromCellTable(spark, name, "cells", delFrame(ids, idCol))
     }
   }
 
@@ -1963,16 +1953,18 @@ object index {
     similarity.requireIntegralId(ids, idCol, "index.removeFromPqIndex")
     val spark = ids.sparkSession
     withLease(spark, name) {
-      removeFromCellTable(spark, s"${name}_pqcells", name,
-        delFrame(ids, idCol))
+      removeFromCellTable(spark, name, "pqcells", delFrame(ids, idCol))
     }
   }
 
   /** The hash parameters recorded at build time: (k, numPerm, bands). */
-  def readParams(spark: SparkSession, name: String): (Int, Int, Int) = {
-    val props = showPropsRetry(spark, s"${name}_buckets")
+  def readParams(spark: SparkSession, name: String): (Int, Int, Int) =
+    withFamily(spark, name)(params)
+
+  private def params(f: Family): (Int, Int, Int) = {
+    val props = f.props("buckets")
     def p(key: String): Int = props.getOrElse(key, throw new IllegalArgumentException(
-      s"index: table ${name}_buckets has no '$key' property — " +
+      s"index: table ${f.table("buckets")} has no '$key' property — " +
         "not built by buildJaccardIndex?")).toInt
     (p("graft.k"), p("graft.numPerm"), p("graft.bands"))
   }
@@ -1996,8 +1988,9 @@ object index {
     * never replicated per surviving candidate. */
   def probeJaccardIndex(spark: SparkSession, dfNew: DataFrame,
       idCol: String, textCol: String, name: String,
-      minJ: Double = 0.8, maxBucket: Int = 0): DataFrame = {
-    val (k, numPerm, bands) = readParams(spark, name)
+      minJ: Double = 0.8, maxBucket: Int = 0): DataFrame =
+   withFamily(spark, name) { f =>
+    val (k, numPerm, bands) = params(f)
     val rowsPerBand = numPerm / bands
     val sh = dedup.cached(dfNew.select(F.col(idCol).cast(LongType).as("id"),
         dedup.shingleHashes(F.col(textCol), k).as("sh"))
@@ -2007,15 +2000,14 @@ object index {
     val newKeys = sh.select(F.col("id").as("id_new"),
       F.posexplode(dedup.lshBandKeys(F.col("sig"), bands, rowsPerBand))
         .as(Seq("band", "band_hash")))
-    val idx = minusPending(spark, name,
-      resolveRetry(spark, s"${name}_buckets"), "id")
+    val idx = minusPending(f, f.read("buckets"), "id")
     val bucketCols = Seq("band", "band_hash")
     val cand0 =
       if (maxBucket <= 0)
         newKeys.join(idx, bucketCols)
           .select(F.col("id_new"), F.col("id").as("id_indexed"))
       else {
-        val idxCnt = resolveRetry(spark, s"${name}_stats")
+        val idxCnt = f.read("stats")
           .groupBy(bucketCols.map(F.col): _*)
           .agg(F.sum("cnt").as("_mi")).filter(F.col("_mi") > maxBucket)
         // cool buckets: the bucketed join, index side never moves
@@ -2055,7 +2047,7 @@ object index {
     // (no exchange on the index side), batch shingles from the cache
     val inter = F.call_function("graft_intersect_count",
       F.col("sh_new"), F.col("sh")).cast(DoubleType)
-    cand.join(resolveRetry(spark, s"${name}_sigs"),
+    cand.join(f.read("sigs"),
         F.col("id_indexed") === F.col("id"))
       .join(sh.select(F.col("id").as("id_new"), F.col("sh").as("sh_new"),
         F.col("n").as("n_new")), Seq("id_new"))
@@ -2077,7 +2069,7 @@ object index {
         (inter / (F.col("n_new") + F.col("n") - inter)) >= minJ)
       .select(F.col("id_new"), F.col("id_indexed"),
         (inter / (F.col("n_new") + F.col("n") - inter)).as("jaccard"))
-  }
+   }
 
   // ---------------- persistent exact-dedup index ----------------
 
@@ -2096,30 +2088,33 @@ object index {
       name: String, canonicalize: Boolean = false, buckets: Int = 64,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
     val spark = df.sparkSession
-    if (mode == SaveMode.Append && spark.catalog.tableExists(s"${name}_fps")) {
-      val stored = readExactCanonicalize(spark, name)
+    val prior = family(spark, name)
+    if (mode == SaveMode.Append && prior.exists("fps")) {
+      val stored = exactCanonicalize(prior)
       require(stored == canonicalize,
         s"index: append canonicalize=$canonicalize does not match the " +
           s"build's canonicalize=$stored")
     }
-    if (mode == SaveMode.Overwrite)
-      Seq(s"${name}_fps", s"${name}_dels").foreach(resetManagedTable(spark, _))
+    val fps = (if (mode != SaveMode.Overwrite) prior
+      else resetFamily(prior, Seq("fps", "dels"))).table("fps")
     val key = if (canonicalize) text.foldedText(F.col(textCol))
       else F.col(textCol)
     writeGrid(df.select(F.col(idCol).cast(LongType).as("id"),
         text.fingerprintMd5(key).as("fp")),
-      buckets, Seq("fp"), mode, s"${name}_fps")
+      buckets, Seq("fp"), mode, fps)
     if (mode == SaveMode.Overwrite)
-      spark.sql(s"ALTER TABLE ${name}_fps SET TBLPROPERTIES(" +
+      spark.sql(s"ALTER TABLE $fps SET TBLPROPERTIES(" +
         s"'graft.canonicalize'='$canonicalize')")
   }
 
-  private def readExactCanonicalize(spark: SparkSession, name: String): Boolean = {
-    val props = showPropsRetry(spark, s"${name}_fps")
-    props.getOrElse("graft.canonicalize", throw new IllegalArgumentException(
-      s"index: table ${name}_fps has no 'graft.canonicalize' property — " +
-        "not built by buildExactIndex?")).toBoolean
-  }
+  private def exactCanonicalize(f: Family): Boolean =
+    f.props("fps").getOrElse("graft.canonicalize",
+      throw new IllegalArgumentException(
+        s"index: table ${f.table("fps")} has no 'graft.canonicalize' " +
+          "property — not built by buildExactIndex?")).toBoolean
+
+  private def exactKey(f: Family, textCol: org.apache.spark.sql.Column) =
+    if (exactCanonicalize(f)) text.foldedText(textCol) else textCol
 
   /** The fingerprint key an exact index `name` was built with, applied
     * to `textCol` — folded or raw per the stored property, so a caller
@@ -2127,15 +2122,14 @@ object index {
     * the build. */
   def exactIndexKey(spark: SparkSession, name: String,
       textCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    if (readExactCanonicalize(spark, name)) text.foldedText(textCol)
-    else textCol
+    withFamily(spark, name)(exactKey(_, textCol))
 
   /** The indexed fingerprint set of exact index `name`, as a one-column
     * (`fp`) frame — the static side of a stream-static probe. */
   def probeExactIndexFingerprints(spark: SparkSession,
       name: String): DataFrame =
-    minusPending(spark, name, resolveRetry(spark, s"${name}_fps"), "id")
-      .select("fp")
+    withFamily(spark, name)(f =>
+      minusPending(f, f.read("fps"), "id").select("fp"))
 
   /** Probe the exact index: every (id_new, id_indexed, fingerprint)
     * match between the batch and the indexed history. The fold mode
@@ -2145,16 +2139,14 @@ object index {
     * `probeExactIndex(...)` ids — or [[dedupAgainstExactIndex]] — to
     * keep just the genuinely-new documents. */
   def probeExactIndex(spark: SparkSession, dfNew: DataFrame,
-      idCol: String, textCol: String, name: String): DataFrame = {
-    val key = exactIndexKey(spark, name, F.col(textCol))
+      idCol: String, textCol: String, name: String): DataFrame =
+   withFamily(spark, name) { f =>
     val newFps = dfNew.select(F.col(idCol).cast(LongType).as("id_new"),
-      text.fingerprintMd5(key).as("fp"))
-    newFps.join(
-        minusPending(spark, name, resolveRetry(spark, s"${name}_fps"), "id"),
-        "fp")
+      text.fingerprintMd5(exactKey(f, F.col(textCol))).as("fp"))
+    newFps.join(minusPending(f, f.read("fps"), "id"), "fp")
       .select(F.col("id_new"), F.col("id").as("id_indexed"),
         F.col("fp").as("fingerprint"))
-  }
+   }
 
   /** The batch minus everything the index has seen: the one-call
     * incremental exact dedup (schema of `dfNew`, unchanged). */
@@ -2191,15 +2183,15 @@ object index {
     require(nlist >= 1, s"index: nlist must be >= 1 (got $nlist)")
     val spark = df.sparkSession
     val dim = df.select(F.size(F.col(vecCol))).head().getInt(0)
-    val appending =
-      mode == SaveMode.Append && spark.catalog.tableExists(s"${name}_cells")
-    if (!appending)
-      Seq(s"${name}_cells", s"${name}_centroids", s"${name}_dels")
-        .foreach(resetManagedTable(spark, _))
+    val prior = family(spark, name)
+    val appending = mode == SaveMode.Append && prior.exists("cells")
+    val live =
+      if (appending) prior
+      else resetFamily(prior, Seq("cells", "centroids", "dels"))
     val bank: Array[Double] =
       if (appending) {
-        val stored = readIvfBank(spark, name)
-        val storedDim = readIvfDim(spark, name)
+        val stored = ivfBank(live)
+        val storedDim = ivfDim(live)
         require(storedDim == dim,
           s"index: append dim $dim does not match the build's $storedDim")
         stored
@@ -2222,38 +2214,48 @@ object index {
     def writeCells(): Unit =
       cells.repartition(F.col("cell"))
         .write.mode(mode).partitionBy("cell")
-        .format("parquet").saveAsTable(s"${name}_cells")
+        .format("parquet").saveAsTable(live.table("cells"))
     if (appending) writeCells()
     else {
-      import spark.implicits._
       inParallel(Seq(
         () => writeCells(),
-        () => bank.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
-          .toDF("pos", "v").coalesce(1)
-          .write.mode(SaveMode.Overwrite).format("parquet")
-          .saveAsTable(s"${name}_centroids")))
-      spark.sql(s"ALTER TABLE ${name}_cells SET TBLPROPERTIES(" +
+        () => writeIvfBank(spark, bank, live.table("centroids"))))
+      spark.sql(s"ALTER TABLE ${live.table("cells")} SET TBLPROPERTIES(" +
         s"'graft.dim'='$dim')")
       // at-build drift baseline ([[driftIndexReport]]): one extra
       // column-pruned aggregation over the fresh generation
       if (driftConfOn(spark))
-        stampDrift(spark, s"${name}_cells",
-          ivfDriftMetrics(spark, spark.table(s"${name}_cells"), bank, dim))
+        stampDrift(spark, live.table("cells"),
+          ivfDriftMetrics(spark, live.read("cells"), bank, dim))
     }
   }
 
   /** The flat centroid bank recorded at build time (layout of
     * [[similarity.trainIvfCentroids]]: centroids ++ norms). */
   def readIvfBank(spark: SparkSession, name: String): Array[Double] =
-    resolveRetry(spark, s"${name}_centroids").orderBy("pos")
-      .collect().map(_.getDouble(1))
+    withFamily(spark, name)(ivfBank)
 
-  private def readIvfDim(spark: SparkSession, name: String): Int = {
-    val props = showPropsRetry(spark, s"${name}_cells")
-    props.getOrElse("graft.dim", throw new IllegalArgumentException(
-      s"index: table ${name}_cells has no 'graft.dim' property — " +
+  private def ivfBank(f: Family): Array[Double] =
+    f.read("centroids").orderBy("pos").collect().map(_.getDouble(1))
+
+  private def ivfDim(f: Family): Int =
+    f.props("cells").getOrElse("graft.dim", throw new IllegalArgumentException(
+      s"index: table ${f.table("cells")} has no 'graft.dim' property — " +
         "not built by buildIvfIndex?")).toInt
-  }
+
+  /** The index `cells` restricted to the cells query frame `q0` probes.
+    * Under the broadcast contract the query batch is small, so one tiny
+    * job collects its distinct probed cells and turns them into a
+    * STATIC partition filter: the scan reads only nprobe-ish of nlist
+    * directories. (Dynamic partition pruning won't fire here on its
+    * own — its selectivity heuristic wants a filtered build side, and
+    * the exploded query stream has no such predicate.) Large
+    * non-broadcast probes skip this and scan all cells once. */
+  private def probedCells(cells: DataFrame, q0: DataFrame,
+      broadcastQueries: Boolean): DataFrame =
+    if (!broadcastQueries) cells
+    else cells.filter(F.col("cell").isin(q0.select("cell").distinct()
+      .collect().map(r => Integer.valueOf(r.getInt(0))).toSeq: _*))
 
   /** Probe the IVF index: exact cosine top-k of each query over the
     * vectors in its `nprobe` nearest cells. The centroid bank comes from
@@ -2268,32 +2270,23 @@ object index {
       idCol: String, vecCol: String, name: String, k: Int,
       nprobe: Int = 8, broadcastQueries: Boolean = true): DataFrame = {
     require(k >= 1 && nprobe >= 1, "index: k and nprobe must be >= 1")
-    val bankLit = F.typedlit(readIvfBank(spark, name).toSeq)
+    withFamily(spark, name) { f =>
+    val bankLit = F.typedlit(ivfBank(f).toSeq)
     val q0 = queries.select(F.col(idCol).cast(LongType).as("q_id"),
       F.col(vecCol).as("q_vec"),
       similarity.norm(F.col(vecCol)).as("q_nrm"),
       F.explode(F.call_function("graft_centroid_topk",
         F.col(vecCol), bankLit, F.lit(nprobe))).as("cell"))
     val q = if (broadcastQueries) F.broadcast(q0) else q0
-    val c0 = minusPending(spark, name,
-      resolveRetry(spark, s"${name}_cells"), "n_id")
-    // Under the broadcast contract the query batch is small, so one tiny
-    // job collects its distinct probed cells and turns them into a
-    // STATIC partition filter: the scan reads only nprobe-ish of nlist
-    // directories. (Dynamic partition pruning won't fire here on its
-    // own — its selectivity heuristic wants a filtered build side, and
-    // the exploded query stream has no such predicate.) Large
-    // non-broadcast probes skip this and scan all cells once.
-    val c = if (broadcastQueries) {
-      val cells = q0.select("cell").distinct().collect().map(_.getInt(0))
-      c0.filter(F.col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
-    } else c0
+    val c = probedCells(minusPending(f, f.read("cells"), "n_id"), q0,
+      broadcastQueries)
     val scored = c.join(q, "cell")
       .filter(F.col("n_id") =!= F.col("q_id"))
       .select(F.col("q_id"), F.col("n_id"),
         (similarity.dot(F.col("q_vec"), F.col("n_vec"))
           / F.col("q_nrm") / F.col("n_nrm")).as("cos"))
     similarity.twoStageTopK(scored, k)
+    }
   }
 
   /** Persistent IVF-PQ index — the disk layout of billion-vector ANN:
@@ -2327,8 +2320,8 @@ object index {
       residual: Boolean = false): Unit = {
     require(nlist >= 1 && m >= 1 && ksub >= 1)
     val spark = df.sparkSession
-    val appending =
-      mode == SaveMode.Append && spark.catalog.tableExists(s"${name}_pqcells")
+    val prior = family(spark, name)
+    val appending = mode == SaveMode.Append && prior.exists("pqcells")
     val dimRow = df.select(F.size(F.col(vecCol))).head(1)
     if (dimRow.isEmpty) {
       require(appending,
@@ -2337,23 +2330,22 @@ object index {
       return
     }
     val dim = dimRow.head.getInt(0)
-    if (!appending)
-      Seq(s"${name}_pqcells", s"${name}_pqbank", s"${name}_dels")
-        .foreach(resetManagedTable(spark, _))
+    val live =
+      if (appending) prior
+      else resetFamily(prior, Seq("pqcells", "pqbank", "dels"))
     // stored parameters govern appends — including the RESIDUAL flag: a
     // batch encoded raw into a residual index (or vice versa) would
     // land in an incompatible code space. Indexes built before the flag
     // existed are raw-coded by construction, hence the "false" default.
     val resEff =
-      if (appending)
-        readPqPropOr(spark, name, "graft.residual", "false").toBoolean
+      if (appending) pqPropOr(live, "graft.residual", "false").toBoolean
       else residual
     val (bank, cb) =
       if (appending) {
-        val storedDim = readPqProp(spark, name, "graft.dim").toInt
+        val storedDim = pqProp(live, "graft.dim").toInt
         require(storedDim == dim,
           s"index: append dim $dim does not match the build's $storedDim")
-        (readPqBank(spark, name, "ivf"), readPqBank(spark, name, "cb"))
+        (pqBank(live, "ivf"), pqBank(live, "cb"))
       } else {
         val ivf = similarity.trainIvfCentroids(df, idCol, vecCol, nlist,
           ivfIters, sampleN, sampleOneIn, portableSeed)
@@ -2369,7 +2361,7 @@ object index {
             pqIters, sampleN, sampleOneIn, portableSeed)
         (ivf, cbTrain)
       }
-    val mEff = if (appending) readPqProp(spark, name, "graft.m").toInt else m
+    val mEff = if (appending) pqProp(live, "graft.m").toInt else m
     // ragged-row hygiene (the hammingTopK posture): a vector that isn't
     // exactly `dim` wide has no defined code — exclude it rather than
     // persist a NULL/misaligned encoding into the index
@@ -2382,18 +2374,13 @@ object index {
     def writeCells(): Unit =
       cells.repartition(F.col("cell"))
         .write.mode(mode).partitionBy("cell")
-        .format("parquet").saveAsTable(s"${name}_pqcells")
+        .format("parquet").saveAsTable(live.table("pqcells"))
     if (appending) writeCells()
     else {
-      import spark.implicits._
-      val rows = bank.zipWithIndex.map { case (v, i) => ("ivf", i, v) } ++
-        cb.zipWithIndex.map { case (v, i) => ("cb", i, v) }
       inParallel(Seq(
         () => writeCells(),
-        () => rows.toSeq.toDF("kind", "pos", "v").coalesce(1)
-          .write.mode(SaveMode.Overwrite).format("parquet")
-          .saveAsTable(s"${name}_pqbank")))
-      spark.sql(s"ALTER TABLE ${name}_pqcells SET TBLPROPERTIES(" +
+        () => writePqBank(spark, bank, cb, live.table("pqbank"))))
+      spark.sql(s"ALTER TABLE ${live.table("pqcells")} SET TBLPROPERTIES(" +
         s"'graft.dim'='$dim', 'graft.m'='$m', 'graft.residual'='$resEff')")
       // at-build drift baseline: occupancy/codeword skew from the
       // stored codes + reconstruction error on the encode side (one
@@ -2402,8 +2389,8 @@ object index {
       if (driftConfOn(spark)) {
         val (rMean, rP95) = pqReconStatsAtEncode(clean, idCol, vecCol,
           bank, cb, mEff, dim, resEff)
-        stampDrift(spark, s"${name}_pqcells",
-          pqOccMetrics(spark, spark.table(s"${name}_pqcells"),
+        stampDrift(spark, live.table("pqcells"),
+          pqOccMetrics(spark, live.read("pqcells"),
             bank.length / (dim + 1), cb.length / dim) ++
             Seq("recon_mean" -> rMean, "recon_p95" -> rP95))
       }
@@ -2446,8 +2433,7 @@ object index {
       name: String): Unit = {
     requireComponentIds(nodes, idCol, pairs, "index.buildComponentMap")
     val spark = nodes.sparkSession
-    Seq(s"${name}_cmap", s"${name}_cremap", s"${name}_cedges")
-      .foreach(resetManagedTable(spark, _))
+    val live = resetFamily(family(spark, name), Seq("cmap", "cremap", "cedges"))
     // the pair frame is often an expensive pipeline (an LSH pair join,
     // a probe) and is consumed twice (CC + the edge log) — pin it for
     // the call (cachedPinned: dedup.cached would auto-release after the
@@ -2473,18 +2459,14 @@ object index {
           .select(F.col("id"),
             F.coalesce(F.col("_cm_c"), F.col("id")).as("rep0"))
           .write.mode(SaveMode.Overwrite).format("parquet")
-          .saveAsTable(s"${name}_cmap"),
+          .saveAsTable(live.table("cmap")),
         () => e.join(comp.select(F.col("id").as("id_a"),
             F.col("component").as("_cm_c")), Seq("id_a"), "left")
           .select(F.col("id_a"), F.col("id_b"),
             F.coalesce(F.col("_cm_c"), F.col("id_a")).as("rep0"))
           .write.mode(SaveMode.Overwrite).format("parquet")
-          .saveAsTable(s"${name}_cedges"),
-        () => spark.emptyDataFrame
-          .select(F.lit(0L).as("rep0"), F.lit(0L).as("rep"))
-          .where(F.lit(false))
-          .write.mode(SaveMode.Overwrite).format("parquet")
-          .saveAsTable(s"${name}_cremap")))
+          .saveAsTable(live.table("cedges")),
+        () => writeEmptyRemap(spark, live.table("cremap"))))
     } finally {
       comp.unpersist(blocking = false)
       e.unpersist(blocking = false)
@@ -2499,9 +2481,10 @@ object index {
       idCol: String, name: String): Unit = {
     requireComponentIds(nodes, idCol, pairs, "index.appendComponentEdges")
     val spark = nodes.sparkSession
-    withLease(spark, name) {
-    val cmap = spark.table(s"${name}_cmap")
-    val remap = spark.table(s"${name}_cremap")
+    commit(spark, name) { gen =>
+    val live = family(spark, name)
+    val cmap = live.read("cmap")
+    val remap = live.read("cremap")
     // the batch's pair frame is typically an expensive near-dup
     // pipeline (LSH pairs ∪ index-probe hits) and is consumed THREE
     // times below (endpoint set, contraction/CC, the edge log) — pin
@@ -2554,14 +2537,14 @@ object index {
           .select(F.col("id_a"), F.col("id_b"),
             F.coalesce(F.col("_cm_c"), F.col("_cm_ca")).as("rep0"))
           .write.mode(SaveMode.Append).format("parquet")
-          .saveAsTable(s"${name}_cedges"),
+          .saveAsTable(live.table("cedges")),
         () => newIds
           .join(comp.withColumnRenamed("component", "_cm_c"), Seq("id"),
             "left")
           .select(F.col("id"),
             F.coalesce(F.col("_cm_c"), F.col("id")).as("rep0"))
           .write.mode(SaveMode.Append).format("parquet")
-          .saveAsTable(s"${name}_cmap")))
+          .saveAsTable(live.table("cmap"))))
       // remap rewrite: old reps whose component changed re-point every
       // rep0 that currently resolves to them; existing entries are
       // composed through today's changes so the table stays FLAT
@@ -2580,11 +2563,10 @@ object index {
             F.coalesce(F.col("_cm_to"), F.col("rep")).as("rep"))
           .unionByName(changed.select(F.col("_cm_from").as("rep0"),
             F.col("_cm_to").as("rep")))
-        // the remap table is overwritten while also being read: break
-        // the read-write cycle through the stage-write-then-rename swap
-        // (distributed — no driver materialization, whatever the merge
-        // history's size; one write, not stage-then-copy)
-        swapViaRename(spark, s"${name}_cremap", name) { stage =>
+        // the remap is rewritten from itself: the next generation is
+        // staged under its own name (distributed — no driver
+        // materialization, whatever the merge history's size)
+        gen.stage("cremap") { stage =>
           newRemap.write.mode(SaveMode.Overwrite).format("parquet")
             .saveAsTable(stage)
         }
@@ -2605,29 +2587,25 @@ object index {
     * results are identical before and after — compaction only moves
     * where the resolution happens. */
   def compactComponentMap(spark: SparkSession, name: String): Unit =
-    withLease(spark, name) {
-      swapViaRename(spark, s"${name}_cmap", name) { stage =>
-        readComponentMap(spark, name)
+    commit(spark, name) { gen =>
+      val live = family(spark, name)
+      val remap = F.broadcast(live.read("cremap"))
+      gen.stage("cmap") { stage =>
+        resolvedMap(live)
           .select(F.col("id"), F.col("component").as("rep0"))
           .write.mode(SaveMode.Overwrite).format("parquet")
           .saveAsTable(stage)
       }
       // the edge log shares the rep0 resolution invariant — fold the
-      // remap into it too before truncating
-      swapViaRename(spark, s"${name}_cedges", name) { stage =>
-        spark.table(s"${name}_cedges")
-          .join(F.broadcast(spark.table(s"${name}_cremap")),
-            Seq("rep0"), "left")
+      // remap into it too; all three tables flip together
+      gen.stage("cedges") { stage =>
+        live.read("cedges").join(remap, Seq("rep0"), "left")
           .select(F.col("id_a"), F.col("id_b"),
             F.coalesce(F.col("rep"), F.col("rep0")).as("rep0"))
           .write.mode(SaveMode.Overwrite).format("parquet")
           .saveAsTable(stage)
       }
-      spark.emptyDataFrame
-        .select(F.lit(0L).as("rep0"), F.lit(0L).as("rep"))
-        .where(F.lit(false))
-        .write.mode(SaveMode.Overwrite).format("parquet")
-        .saveAsTable(s"${name}_cremap")
+      gen.stage("cremap")(writeEmptyRemap(spark, _))
     }
 
   /** TAKEDOWN — remove documents from the component map (the
@@ -2649,20 +2627,20 @@ object index {
       name: String): Unit = {
     similarity.requireIntegralId(ids, idCol, "index.removeComponentIds")
     val spark = ids.sparkSession
-    withLease(spark, name) {
+    commit(spark, name) { gen =>
     val del = ids.select(F.col(idCol).cast(LongType).as("id")).distinct()
-    val remap = spark.table(s"${name}_cremap")
-    val cmap = spark.table(s"${name}_cmap")
-    val cedges = spark.table(s"${name}_cedges")
+    val live = family(spark, name)
+    val remap = live.read("cremap")
+    val cmap = live.read("cmap")
+    val cedges = live.read("cedges")
     def resolve(df: DataFrame): DataFrame = df
       .join(F.broadcast(remap), Seq("rep0"), "left")
       .withColumn("_cm_cur", F.coalesce(F.col("rep"), F.col("rep0")))
       .drop("rep")
     // affected components: current labels of any deleted id's row.
     // MATERIALIZED eagerly (batch-bounded: ≤ one component per deleted
-    // id) — every later step filters by it, and some of those steps run
-    // AFTER the map table has been rewritten, so a lazy plan over the
-    // old table would silently re-read the new one. Materialization is
+    // id) — every later step filters by it, and a lazy plan would
+    // re-run the map scan and remap join for each. Materialization is
     // count-gated like connectedComponents' local shortcut: a takedown
     // of ~100M ids would otherwise collect() ~800 MB onto the driver,
     // so above `spark.graft.cmap.localAffectedThreshold` (default 1M
@@ -2702,7 +2680,7 @@ object index {
         .join(F.broadcast(del), Seq("id"), "left_anti")
         .join(comp2.withColumnRenamed("component", "_cm_c"), Seq("id"), "left")
         .select(F.col("id"), F.coalesce(F.col("_cm_c"), F.col("id")).as("rep0"))
-      swapViaRename(spark, s"${name}_cmap", name) { stage =>
+      gen.stage("cmap") { stage =>
         keepRows.unionByName(survivors)
           .write.mode(SaveMode.Overwrite).format("parquet")
           .saveAsTable(stage)
@@ -2712,14 +2690,14 @@ object index {
           F.col("component").as("_cm_c")), Seq("id_a"), "left")
         .select(F.col("id_a"), F.col("id_b"),
           F.coalesce(F.col("_cm_c"), F.col("id_a")).as("rep0"))
-      swapViaRename(spark, s"${name}_cedges", name) { stage =>
+      gen.stage("cedges") { stage =>
         keepEdges.unionByName(relabeled)
           .write.mode(SaveMode.Overwrite).format("parquet")
           .saveAsTable(stage)
       }
       // remap entries resolving into affected components point at rows
       // that just got fresh labels — drop them; others are untouched
-      swapViaRename(spark, s"${name}_cremap", name) { stage =>
+      gen.stage("cremap") { stage =>
         remap.join(F.broadcast(aff),
             F.col("rep") === F.col("_cm_aff"), "left_anti")
           .write.mode(SaveMode.Overwrite).format("parquet")
@@ -2746,11 +2724,40 @@ object index {
     * every edge ever appended would return. One broadcast join; the map
     * is never shuffled. */
   def readComponentMap(spark: SparkSession, name: String): DataFrame =
-    resolveRetry(spark, s"${name}_cmap")
-      .join(F.broadcast(resolveRetry(spark, s"${name}_cremap")),
-        Seq("rep0"), "left")
+    withFamily(spark, name)(resolvedMap)
+
+  private def resolvedMap(f: Family): DataFrame =
+    f.read("cmap")
+      .join(F.broadcast(f.read("cremap")), Seq("rep0"), "left")
       .select(F.col("id"),
         F.coalesce(F.col("rep"), F.col("rep0")).as("component"))
+
+  /** A flat IVF centroid bank (centroids ++ norms) as table `table`:
+    * `(pos, v)`, one file. */
+  private def writeIvfBank(spark: SparkSession, bank: Array[Double],
+      table: String): Unit = {
+    import spark.implicits._
+    bank.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
+      .toDF("pos", "v").coalesce(1)
+      .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
+  }
+
+  /** Both PQ banks as table `table`: `(kind, pos, v)` with kind `ivf`
+    * (the centroid bank) or `cb` (the flat codebook), one file. */
+  private def writePqBank(spark: SparkSession, bank: Array[Double],
+      cb: Array[Double], table: String): Unit = {
+    import spark.implicits._
+    (bank.zipWithIndex.map { case (v, i) => ("ivf", i, v) } ++
+      cb.zipWithIndex.map { case (v, i) => ("cb", i, v) }).toSeq
+      .toDF("kind", "pos", "v").coalesce(1)
+      .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
+  }
+
+  /** An empty component remap `(rep0, rep)` as table `table`. */
+  private def writeEmptyRemap(spark: SparkSession, table: String): Unit =
+    spark.emptyDataFrame.select(F.lit(0L).as("rep0"), F.lit(0L).as("rep"))
+      .where(F.lit(false))
+      .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
 
   /** `(n_id, cell, _rc_r = v − centroid(cell))` over a width-clean
     * frame: the residual-encode plumbing shared by build/probe/train —
@@ -2760,21 +2767,26 @@ object index {
     * (nlist × dim doubles, driver-sized). */
   private def residualFrame(clean: DataFrame, idCol: String,
       vecCol: String, ivfBank: Array[Double], dim: Int): DataFrame = {
-    val spark = clean.sparkSession
-    import spark.implicits._
-    val nlist = ivfBank.length / (dim + 1)
-    val cents = Array.tabulate(nlist)(c =>
-      ivfBank.slice(c * dim, (c + 1) * dim))
-    val cdf = F.broadcast(cents.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "_rc_cent"))
     val bankLit = F.typedlit(ivfBank.toSeq)
     clean.select(F.col(idCol).as("n_id"), F.col(vecCol).as("_rc_v"),
         F.element_at(F.call_function("graft_centroid_topk",
           F.col(vecCol), bankLit, F.lit(1)), 1).as("cell"))
-      .join(cdf, "cell")
+      .join(centroidFrame(clean.sparkSession, ivfBank, dim, "_rc_cent"),
+        "cell")
       .select(F.col("n_id"), F.col("cell"),
         F.call_function("graft_vec_sub", F.col("_rc_v"), F.col("_rc_cent"))
           .as("_rc_r"))
+  }
+
+  /** The centroid rows of a flat IVF bank (centroids ++ norms, so
+    * nlist = |bank| / (dim + 1)) as a broadcast `(cell, col)` frame —
+    * nlist × dim doubles, driver-sized. */
+  private def centroidFrame(spark: SparkSession, ivfBank: Array[Double],
+      dim: Int, col: String): DataFrame = {
+    import spark.implicits._
+    F.broadcast((0 until ivfBank.length / (dim + 1)).map(c =>
+        (c, ivfBank.slice(c * dim, (c + 1) * dim).toSeq))
+      .toDF("cell", col))
   }
 
   /** `(n_id, codes, cell)` for a width-clean vector frame under the
@@ -2803,21 +2815,17 @@ object index {
     }
   }
 
-  private def readPqBank(spark: SparkSession, name: String,
-      kind: String): Array[Double] =
-    resolveRetry(spark, s"${name}_pqbank").filter(F.col("kind") === kind)
+  private def pqBank(f: Family, kind: String): Array[Double] =
+    f.read("pqbank").filter(F.col("kind") === kind)
       .orderBy("pos").select("v").collect().map(_.getDouble(0))
 
-  private def readPqProp(spark: SparkSession, name: String,
-      key: String): String =
-    showPropsRetry(spark, s"${name}_pqcells")
-      .getOrElse(key, throw new IllegalArgumentException(
-        s"index: table ${name}_pqcells has no '$key' property — " +
-          "not built by buildPqIndex?"))
+  private def pqProp(f: Family, key: String): String =
+    f.props("pqcells").getOrElse(key, throw new IllegalArgumentException(
+      s"index: table ${f.table("pqcells")} has no '$key' property — " +
+        "not built by buildPqIndex?"))
 
-  private def readPqPropOr(spark: SparkSession, name: String,
-      key: String, default: String): String =
-    showPropsRetry(spark, s"${name}_pqcells").getOrElse(key, default)
+  private def pqPropOr(f: Family, key: String, default: String): String =
+    f.props("pqcells").getOrElse(key, default)
 
   /** Probe the PQ index: ADC top-k of each query over the stored CODES
     * of its `nprobe` nearest cells — the scan reads only the probed
@@ -2833,13 +2841,13 @@ object index {
       idCol: String, vecCol: String, name: String, k: Int,
       nprobe: Int = 8, broadcastQueries: Boolean = true): DataFrame = {
     require(k >= 1 && nprobe >= 1, "index: k and nprobe must be >= 1")
-    val ivfBank = readPqBank(spark, name, "ivf")
+    withFamily(spark, name) { f =>
+    val ivfBank = pqBank(f, "ivf")
     val bankLit = F.typedlit(ivfBank.toSeq)
-    val cbLit = F.typedlit(readPqBank(spark, name, "cb").toSeq)
-    val m = readPqProp(spark, name, "graft.m").toInt
-    val storedDim = readPqProp(spark, name, "graft.dim").toInt
-    val residual =
-      readPqPropOr(spark, name, "graft.residual", "false").toBoolean
+    val cbLit = F.typedlit(pqBank(f, "cb").toSeq)
+    val m = pqProp(f, "graft.m").toInt
+    val storedDim = pqProp(f, "graft.dim").toInt
+    val residual = pqPropOr(f, "graft.residual", "false").toBoolean
     // queries that don't match the index's trained width have no
     // defined distance table — exclude, don't crash (see buildPqIndex)
     val clean = similarity.cleanDim(queries, vecCol, storedDim)
@@ -2847,18 +2855,11 @@ object index {
       if (residual) {
         // residual index: the stored codes quantize v − centroid(cell),
         // so each probed cell gets its OWN table from q − centroid(cell)
-        import spark.implicits._
-        val nlist = ivfBank.length / (storedDim + 1)
-        val cents = Array.tabulate(nlist)(c =>
-          ivfBank.slice(c * storedDim, (c + 1) * storedDim))
-        val cdf = F.broadcast(cents.zipWithIndex
-          .map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cell", "_rc_cent"))
         clean.select(F.col(idCol).cast(LongType).as("q_id"),
             F.col(vecCol).as("_rc_qv"),
             F.explode(F.call_function("graft_centroid_topk",
               F.col(vecCol), bankLit, F.lit(nprobe))).as("cell"))
-          .join(cdf, "cell")
+          .join(centroidFrame(spark, ivfBank, storedDim, "_rc_cent"), "cell")
           .select(F.col("q_id"), F.col("cell"),
             F.call_function("graft_pq_dists",
               F.call_function("graft_vec_sub",
@@ -2870,12 +2871,8 @@ object index {
         F.call_function("graft_pq_dists", F.col(vecCol), cbLit, F.lit(m))
           .as("dt"))
     val q = if (broadcastQueries) F.broadcast(q0) else q0
-    val c0 = minusPending(spark, name,
-      resolveRetry(spark, s"${name}_pqcells"), "n_id")
-    val c = if (broadcastQueries) {
-      val cells = q0.select("cell").distinct().collect().map(_.getInt(0))
-      c0.filter(F.col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
-    } else c0
+    val c = probedCells(minusPending(f, f.read("pqcells"), "n_id"), q0,
+      broadcastQueries)
     val scored = c.join(q, "cell")
       .filter(F.col("n_id") =!= F.col("q_id"))
       .select(F.col("q_id"), F.col("n_id"),
@@ -2884,5 +2881,6 @@ object index {
     similarity.twoStageTopK(scored, k)
       .select(F.col("q_id"), F.col("n_id"),
         (-F.col("cos")).as("adc_dist"), F.col("rank"))
+    }
   }
 }

@@ -87,7 +87,7 @@ object joins {
     val hiAxis = axis(F.col(s"${hi}_iv"), intervals.schema(hi).dataType)
     def bin(c: Column): Column = F.floor(c / binWidth)
     val p = points.withColumn("__bin", bin(pAxis))
-    val iv = intervals.select(ivRenamed: _*)
+    val iv = intervals.select(ivRenamed.toIndexedSeq: _*)
       .filter(loAxis <= hiAxis)
       .withColumn("__bin", F.explode(F.sequence(bin(loAxis), bin(hiAxis))))
     p.join(iv, by :+ "__bin")
@@ -130,7 +130,7 @@ object joins {
     def bin(c: Column): Column = F.floor(c / binWidth)
     val l = left.filter(aLo <= aHi)
       .withColumn("__bin", F.explode(F.sequence(bin(aLo), bin(aHi))))
-    val r = right.select(rRenamed: _*).filter(bLo <= bHi)
+    val r = right.select(rRenamed.toIndexedSeq: _*).filter(bLo <= bHi)
       .withColumn("__bin", F.explode(F.sequence(bin(bLo), bin(bHi))))
     l.join(r, by :+ "__bin")
       .filter(aLo <= bHi && bLo <= aHi &&

@@ -2508,7 +2508,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "keeping ROW_NUMBER() OVER (ORDER BY score DESC, id) <= k, " +
           "EXCEPT that rows with a NULL score are excluded from the " +
           "ranking entirely (a window would order them last). k must be " +
-          "a literal INT >= 1; id must be BIGINT.", null),
+          "a literal INT >= 1; id must be BIGINT.",
+        null, "", "", "", "", "", ""),
       (children: Seq[Expression]) => {
         // arity-check before indexing: a wrong-arity SQL call must be
         // an analysis error, not an IndexOutOfBoundsException
@@ -2529,7 +2530,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "array<struct<item,cnt>> (cnt DESC, item ASC). Counts are lower " +
           "bounds within N/(capacity+1) of true frequency; exact when the " +
           "distinct-item count never exceeds capacity. NULL items are " +
-          "skipped. capacity and k must be literal INTs >= 1.", null),
+          "skipped. capacity and k must be literal INTs >= 1.",
+        null, "", "", "", "", "", ""),
       (children: Seq[Expression]) => {
         if (children.size != 3)
           throw new org.apache.spark.sql.AnalysisException(

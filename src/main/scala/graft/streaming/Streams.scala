@@ -365,7 +365,8 @@ object Streams {
         // index append) — pin it for the micro-batch
         val b = dedup.cachedPinned(batch.toDF())
         try {
-          val bootstrap = !s.catalog.tableExists(s"${indexName}_buckets")
+          val bootstrap =
+            !s.catalog.tableExists(index.liveTable(s, indexName, "buckets"))
           val inBatch = dedup.jaccardPairsLsh(b, idCol, textCol,
             minJ = minJ).select("id_a", "id_b")
           val edges =
@@ -375,7 +376,7 @@ object Streams {
                   minJ = minJ)
                 .select(F.col("id_new").as("id_a"),
                   F.col("id_indexed").as("id_b")))
-          if (!s.catalog.tableExists(s"${mapName}_cmap"))
+          if (!s.catalog.tableExists(index.liveTable(s, mapName, "cmap")))
             index.buildComponentMap(b.select(idCol), edges, idCol, mapName)
           else
             index.appendComponentEdges(b.select(idCol), edges, idCol,
@@ -395,9 +396,9 @@ object Streams {
     // FileIndex; refresh them here so a post-stream read sees the
     // appended state
     val caller = docs.sparkSession
-    Seq(s"${mapName}_cmap", s"${mapName}_cremap", s"${mapName}_cedges",
-        s"${indexName}_buckets", s"${indexName}_sigs",
-        s"${indexName}_stats")
+    (Seq("cmap", "cremap", "cedges").map(index.liveTable(caller, mapName, _))
+      ++ Seq("buckets", "sigs", "stats")
+        .map(index.liveTable(caller, indexName, _)))
       .foreach(t =>
         if (caller.catalog.tableExists(t)) caller.catalog.refreshTable(t))
   }

@@ -63,13 +63,13 @@ class ComponentMapSpec extends SparkSpec {
       assert(members.keys.min == c, s"component $c is not its min id")
     }
     // compaction folds the remap into the map without changing reads
-    val remapBefore = spark.table("cmspec_cremap").count()
+    val remapBefore = spark.table(live("cmspec", "cremap")).count()
     assert(remapBefore > 0, "the replay must have produced real merges")
     index.compactComponentMap(spark, "cmspec")
     val afterCompact = index.readComponentMap(spark, "cmspec").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(afterCompact == want, "compaction changed the resolution")
-    assert(spark.table("cmspec_cremap").count() == 0L)
+    assert(spark.table(live("cmspec", "cremap")).count() == 0L)
     // and appends keep working after a compaction: bridge two existing
     // components with a fresh node and check the merged label
     val bigNode = 100000L

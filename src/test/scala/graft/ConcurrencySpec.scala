@@ -97,8 +97,8 @@ class ConcurrencySpec extends SparkSpec {
 
   test("probes never fail while deferTakedown batches land concurrently") {
     // The deferred path's documented advantage over the physical
-    // rewrites (index.scala module doc): a defer is an APPEND — no
-    // table swap, no reader-visible window — so live probe traffic is
+    // rewrites (index.scala module doc): a defer is an APPEND to the
+    // live table — no new generation, nothing dropped — so live probe traffic is
     // safe during takedown ingestion. Pin it: one thread streams 20
     // defer batches while others probe continuously; every probe must
     // SUCCEED (no missing-table/missing-file error), never resurrect a
@@ -143,13 +143,14 @@ class ConcurrencySpec extends SparkSpec {
 
   test("no defer is lost while compactTakedowns runs concurrently") {
     // The dels shrink at the end of compactTakedowns re-reads the
-    // pending table and swaps it — the one write a concurrent
-    // deferTakedown could race. The in-process dels writer lock
-    // (index.scala delsLock) closes that window: a defer landing during
-    // the long purge phase survives the shrink via the anti-join
-    // against the pinned purge set, and a defer racing the swap itself
-    // blocks until the swap is done. Pin it: one thread streams 40
-    // defer batches while the main thread runs back-to-back
+    // pending table and flips in a shrunk generation — the one write a
+    // concurrent deferTakedown could race. The in-process dels writer
+    // lock (index.scala delsLock) closes that window: a defer landing
+    // during the long purge phase survives the shrink via the
+    // anti-join against the pinned purge set, and a defer racing the
+    // shrink itself blocks until the new generation is live. Pin it:
+    // one thread streams 40 defer batches while the main thread runs
+    // back-to-back
     // compactions; afterwards every id ever deferred must be purged —
     // a lost batch would leave its fingerprints behind.
     import spark.implicits._
@@ -172,24 +173,24 @@ class ConcurrencySpec extends SparkSpec {
     // fold whatever was still pending when the writer finished
     index.compactTakedowns(spark, "cc_cmp")
     assert(spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier("cc_cmp_dels")))
-    assert(spark.table("cc_cmp_dels").count() == 0L,
+      org.apache.spark.sql.catalyst.TableIdentifier(live("cc_cmp", "dels"))))
+    assert(spark.table(live("cc_cmp", "dels")).count() == 0L,
       "the final compaction must drain every pending id")
-    assert(spark.table("cc_cmp_fps").count() == 0L,
+    assert(spark.table(live("cc_cmp", "fps")).count() == 0L,
       "a defer lost to the shrink race leaves its fingerprints unpurged")
   }
 
   test("concurrent defers over the auto-compact ceiling: one compaction at a time, none lost") {
     // The inline auto-compaction guard (index.scala deferTakedown):
     // several defer threads crossing the pending ceiling together must
-    // not run compactTakedowns concurrently — the rename-aside rewrites
-    // of one compaction would collide with another's in-flight stage.
+    // not run compactTakedowns concurrently — one compaction's staged
+    // generations would collide with another's in-flight flip.
     // With the per-name guard, losers SKIP and the next defer past the
     // ceiling re-triggers. Pin the end-to-end invariant: 4 writer
     // threads × 15 batches under a low ceiling, no thread throws, and
     // after a final explicit compaction every id ever deferred is
     // physically purged — a lost defer or a collided rewrite leaves
-    // fingerprints behind (or a crashed rename loses a table).
+    // fingerprints behind (or a crashed flip loses a table).
     import spark.implicits._
     val docs = spark.range(0, 1200).select(F.col("id").as("doc_id"),
       F.concat(F.lit("ac body "), F.col("id")).as("text"))
@@ -205,9 +206,9 @@ class ConcurrencySpec extends SparkSpec {
       }))
       Await.result(writers, 5.minutes)
       index.compactTakedowns(spark, "cc_auto")
-      assert(spark.table("cc_auto_dels").count() == 0L,
+      assert(spark.table(live("cc_auto", "dels")).count() == 0L,
         "the final compaction must drain every pending id")
-      assert(spark.table("cc_auto_fps").count() == 0L,
+      assert(spark.table(live("cc_auto", "fps")).count() == 0L,
         "a defer lost to a racing inline compaction leaves fingerprints")
     } finally
       spark.conf.unset("spark.graft.index.autoCompactPendingThreshold")
@@ -215,16 +216,17 @@ class ConcurrencySpec extends SparkSpec {
 
   test("probes during rename-aside swaps converge under bounded retry") {
     // The reader contract for maintenance overlapping live probes
-    // (index.scala swapViaRename): probe CONSTRUCTION rides out the
-    // two-rename missing-table window itself (resolveRetry inside
-    // every probe-side read), and a probe whose EXECUTION overlaps a
-    // swap may fail once on moved files — the documented residue — so
-    // callers retry the probe. Pin both halves: one thread runs
-    // back-to-back compactIndex swaps (file compaction — reads are
-    // identical before and after, so every probe has ONE right
-    // answer), the others probe in a loop with a bounded whole-probe
-    // retry; every probe must eventually return exactly the expected
-    // rows, within the bound.
+    // (index.scala commit): each compactIndex stages a new generation
+    // and flips the manifest in one catalog write; probe CONSTRUCTION
+    // resolves every table from one manifest snapshot and re-resolves
+    // if a flip dropped what it resolved (withFamily), and a probe
+    // whose EXECUTION overlaps the drop may fail once on missing
+    // files — the documented residue — so callers retry the probe.
+    // Pin both halves: one thread runs back-to-back compactIndex
+    // flips (file compaction — reads are identical before and after,
+    // so every probe has ONE right answer), the others probe in a
+    // loop with a bounded whole-probe retry; every probe must
+    // eventually return exactly the expected rows, within the bound.
     import spark.implicits._
     val docs = spark.range(0, 300).select(F.col("id").as("doc_id"),
       F.concat(F.lit("swap body "), F.col("id")).as("text"))
@@ -268,7 +270,7 @@ class ConcurrencySpec extends SparkSpec {
   test("a foreign writer lease fails mutators loudly; releaseStaleLease recovers") {
     // The cross-driver lease (index.scala): a second driver process
     // mutating the same index is detected through the stamp on
-    // `<name>_lease`, converting silent rename collisions into a loud
+    // `<name>_lease`, converting silent generation collisions into a loud
     // error. Simulate the foreign driver by stamping a token this JVM
     // does not hold; every mutator class must refuse — the window
     // starter (compactIndex), the physical takedown, AND the
@@ -281,7 +283,7 @@ class ConcurrencySpec extends SparkSpec {
     index.compactIndex(spark, "cc_lease")
     spark.sql("ALTER TABLE cc_lease_lease SET TBLPROPERTIES(" +
       "'graft.writer'='foreign-driver-token')")
-    val before = spark.table("cc_lease_fps").count()
+    val before = spark.table(live("cc_lease", "fps")).count()
     val e1 = intercept[IllegalStateException] {
       index.compactIndex(spark, "cc_lease")
     }
@@ -296,13 +298,13 @@ class ConcurrencySpec extends SparkSpec {
       index.deferTakedown(Seq(2L).toDF("doc_id"), "doc_id", "cc_lease")
     }
     assert(e3.getMessage.contains("foreign-driver-token"))
-    assert(spark.table("cc_lease_fps").count() == before,
+    assert(spark.table(live("cc_lease", "fps")).count() == before,
       "refused mutators must leave the index untouched")
-    assert(!spark.catalog.tableExists("cc_lease_dels"),
+    assert(!spark.catalog.tableExists(live("cc_lease", "dels")),
       "a refused defer must not have appended")
     // recovery: clear the abandoned stamp, then mutate normally
     index.releaseStaleLease(spark, "cc_lease")
     index.removeFromExactIndex(Seq(1L).toDF("doc_id"), "doc_id", "cc_lease")
-    assert(spark.table("cc_lease_fps").count() == before - 1)
+    assert(spark.table(live("cc_lease", "fps")).count() == before - 1)
   }
 }

@@ -329,8 +329,8 @@ class EmptyInputSpec extends SparkSpec {
     assertEmpty(graft.functions.index.probeIvfIndex(spark,
       emb0, "vec_id", "embedding", "graft_empty_ivf", k = 3, nprobe = 4),
       "probeIvfIndex empty batch")
-    spark.sql("DROP TABLE IF EXISTS graft_empty_ivf_cells")
-    spark.sql("DROP TABLE IF EXISTS graft_empty_ivf_centroids")
+    spark.sql(s"DROP TABLE IF EXISTS ${live("graft_empty_ivf", "cells")}")
+    spark.sql(s"DROP TABLE IF EXISTS ${live("graft_empty_ivf", "centroids")}")
   }
 
   test("layout, profile and the curation composite on an empty corpus") {
@@ -358,7 +358,7 @@ class EmptyInputSpec extends SparkSpec {
     assert(hits.count() == 20L, "empty pending set must not drop matches")
     // compacting an empty pending set: no-op, probes unchanged
     index.compactTakedowns(spark, "ei_def")
-    assert(spark.table("ei_def_fps").count() == 20L)
+    assert(spark.table(live("ei_def", "fps")).count() == 20L)
     // compactIndex on a single-generation index: reads unchanged
     index.compactIndex(spark, "ei_def")
     assert(index.probeExactIndex(spark, docsSmall, "doc_id", "text",

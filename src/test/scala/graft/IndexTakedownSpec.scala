@@ -56,13 +56,13 @@ class IndexTakedownSpec extends SparkSpec {
     assert(index.readParams(spark, "td_jac") == paramsBefore,
       "hash parameters must survive the takedown rewrite")
     // rows physically gone from every table; stats SUM to live counts
-    assert(spark.table("td_jac_buckets")
+    assert(spark.table(live("td_jac", "buckets"))
       .filter(F.col("id").isin(0L, 4L, 8L, 21L)).count() == 0L)
-    assert(spark.table("td_jac_sigs")
+    assert(spark.table(live("td_jac", "sigs"))
       .filter(F.col("id").isin(0L, 4L, 8L, 21L)).count() == 0L)
-    val statSums = spark.table("td_jac_stats")
+    val statSums = spark.table(live("td_jac", "stats"))
       .groupBy("band", "band_hash").agg(F.sum("cnt").as("n"))
-    val liveCounts = spark.table("td_jac_buckets")
+    val liveCounts = spark.table(live("td_jac", "buckets"))
       .groupBy("band", "band_hash").agg(F.count(F.lit(1)).as("n"))
     val mism = statSums.withColumnRenamed("n", "stat_n")
       .join(liveCounts.withColumnRenamed("n", "live_n"),
@@ -135,30 +135,30 @@ class IndexTakedownSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == want, s"ivf takedown != brute force over survivors: ${
       (got diff want).take(5)} / ${(want diff got).take(5)}")
-    assert(spark.table("td_ivf_cells")
+    assert(spark.table(live("td_ivf", "cells"))
       .filter(F.col("n_id").isin(1L, 7L, 13L, 19L)).count() == 0L,
       "deleted rows must be physically gone")
     // appends after takedown still encode against the stored bank
     index.buildIvfIndex(e.filter(F.col("vec_id") === 1L)
         .select((F.col("vec_id") + 100L).as("vec_id"), F.col("v")),
       "vec_id", "v", "td_ivf", mode = org.apache.spark.sql.SaveMode.Append)
-    assert(spark.table("td_ivf_cells")
+    assert(spark.table(live("td_ivf", "cells"))
       .filter(F.col("n_id") === 101L).count() == 1L)
   }
 
   test("ivf: deleting a whole cell drops its partition directory, probes survive") {
     val e = vectors()
     index.buildIvfIndex(e, "vec_id", "v", "td_ivf2", nlist = 3, iters = 2)
-    val cells = spark.table("td_ivf2_cells")
+    val cells = spark.table(live("td_ivf2", "cells"))
     val victim = cells.select("cell").head().getInt(0)
     val victimIds = cells.filter(F.col("cell") === victim)
       .select(F.col("n_id").as("vec_id"))
     index.removeFromIvfIndex(victimIds, "vec_id", "td_ivf2")
-    val liveCells = spark.table("td_ivf2_cells")
+    val liveCells = spark.table(live("td_ivf2", "cells"))
       .select("cell").distinct().collect().map(_.getInt(0)).toSet
     assert(!liveCells.contains(victim),
       s"emptied cell $victim must not survive (live: $liveCells)")
-    val parts = spark.sql("SHOW PARTITIONS td_ivf2_cells")
+    val parts = spark.sql(s"SHOW PARTITIONS ${live("td_ivf2", "cells")}")
       .collect().map(_.getString(0)).toSet
     assert(!parts.contains(s"cell=$victim"),
       s"emptied partition must be dropped from the catalog: $parts")
@@ -176,17 +176,17 @@ class IndexTakedownSpec extends SparkSpec {
     index.buildPqIndex(e, "vec_id", "v", "td_pq", nlist = 3, m = 4,
       ksub = 8, ivfIters = 0, pqIters = 0, sampleOneIn = 1L,
       portableSeed = true, residual = true)
-    val rowsBefore = spark.table("td_pq_pqcells")
+    val rowsBefore = spark.table(live("td_pq", "pqcells"))
       .collect().map(r => (r.getLong(0), r.getSeq[Int](1), r.getInt(2))).toSet
-    val bankBefore = spark.table("td_pq_pqbank").collect()
+    val bankBefore = spark.table(live("td_pq", "pqbank")).collect()
       .map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSet
     val del = Seq(2L, 5L, 8L).toDF("vec_id")
     index.removeFromPqIndex(del, "vec_id", "td_pq")
-    val rowsAfter = spark.table("td_pq_pqcells")
+    val rowsAfter = spark.table(live("td_pq", "pqcells"))
       .collect().map(r => (r.getLong(0), r.getSeq[Int](1), r.getInt(2))).toSet
     assert(rowsAfter == rowsBefore.filterNot(r => Set(2L, 5L, 8L).contains(r._1)),
       "takedown must remove exactly the deleted rows, codes untouched")
-    val bankAfter = spark.table("td_pq_pqbank").collect()
+    val bankAfter = spark.table(live("td_pq", "pqbank")).collect()
       .map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSet
     assert(bankAfter == bankBefore, "quantizer banks must be kept")
     val got = index.probePqIndex(spark, e.filter(F.col("vec_id") < 4),
@@ -198,7 +198,7 @@ class IndexTakedownSpec extends SparkSpec {
     index.buildPqIndex(e.filter(F.col("vec_id") === 2L)
         .select((F.col("vec_id") + 100L).as("vec_id"), F.col("v")),
       "vec_id", "v", "td_pq", mode = org.apache.spark.sql.SaveMode.Append)
-    val reApp = spark.table("td_pq_pqcells").filter(F.col("n_id") === 102L)
+    val reApp = spark.table(live("td_pq", "pqcells")).filter(F.col("n_id") === 102L)
       .collect().map(r => (r.getSeq[Int](1), r.getInt(2)))
     val orig = rowsBefore.find(_._1 == 2L).get
     assert(reApp.length == 1 && reApp.head._1 == orig._2 &&
@@ -239,14 +239,14 @@ class IndexTakedownSpec extends SparkSpec {
     }
     assertClean("logical") // purge hasn't run — the filter must
     // rows are still physically present while pending
-    assert(spark.table("td_def_fps").filter(F.col("id").isin(0L, 4L, 7L))
+    assert(spark.table(live("td_def", "fps")).filter(F.col("id").isin(0L, 4L, 7L))
       .count() == 3L, "logical takedown must not rewrite anything yet")
     index.compactTakedowns(spark, "td_def")
-    assert(spark.table("td_def_dels").count() == 0L,
+    assert(spark.table(live("td_def", "dels")).count() == 0L,
       "compaction must truncate the pending set")
-    Seq("td_def_buckets" -> "id", "td_def_sigs" -> "id",
-      "td_def_fps" -> "id", "td_def_cells" -> "n_id",
-      "td_def_pqcells" -> "n_id").foreach { case (t, c) =>
+    Seq(live("td_def", "buckets") -> "id", live("td_def", "sigs") -> "id",
+      live("td_def", "fps") -> "id", live("td_def", "cells") -> "n_id",
+      live("td_def", "pqcells") -> "n_id").foreach { case (t, c) =>
       assert(spark.table(t).filter(F.col(c).isin(0L, 4L, 7L)).count() == 0L,
         s"compaction must purge $t")
     }
@@ -266,8 +266,8 @@ class IndexTakedownSpec extends SparkSpec {
     // a fresh Overwrite build clears stale pending deletions
     index.deferTakedown(Seq(3L).toDF("doc_id"), "doc_id", "td_def")
     index.buildExactIndex(d, "doc_id", "text", "td_def", buckets = 8)
-    assert(!spark.catalog.tableExists("td_def_dels") ||
-      spark.table("td_def_dels").count() == 0L,
+    assert(!spark.catalog.tableExists(live("td_def", "dels")) ||
+      spark.table(live("td_def", "dels")).count() == 0L,
       "an Overwrite rebuild must not inherit the old corpus's pending set")
   }
 
@@ -285,12 +285,14 @@ class IndexTakedownSpec extends SparkSpec {
     index.buildExactIndex(d.filter(F.col("doc_id") === 0L), "doc_id",
       "text", "td_re", buckets = 4,
       mode = org.apache.spark.sql.SaveMode.Append)
-    assert(spark.table("td_re_fps").filter(F.col("id") === 0L).count() == 2L,
+    assert(spark.table(live("td_re", "fps"))
+      .filter(F.col("id") === 0L).count() == 2L,
       "setup: both generations physically present")
     assert(!hits().contains(0L),
       "takedown wins: a re-ingest of a pending id stays hidden")
     index.compactTakedowns(spark, "td_re")
-    assert(spark.table("td_re_fps").filter(F.col("id") === 0L).count() == 0L,
+    assert(spark.table(live("td_re", "fps"))
+      .filter(F.col("id") === 0L).count() == 0L,
       "compaction must purge BOTH generations of a pending id")
     assert(!hits().contains(0L))
     // after compaction the pending set is empty — re-ingest is normal
@@ -314,7 +316,7 @@ class IndexTakedownSpec extends SparkSpec {
     def survivorIds(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("id").collect().map(_.getLong(0)).toSet
     val below = index.minusPending(spark, "td_gate",
-      spark.table("td_gate_fps"), "id")
+      spark.table(live("td_gate", "fps")), "id")
     assert(strategies(below).contains("broadcast"),
       s"below the gate the pending set must broadcast: ${strategies(below)}")
     val want = survivorIds(below)
@@ -322,7 +324,7 @@ class IndexTakedownSpec extends SparkSpec {
     spark.conf.set("spark.graft.index.pendingBroadcastThreshold", "2")
     try {
       val above = index.minusPending(spark, "td_gate",
-        spark.table("td_gate_fps"), "id")
+        spark.table(live("td_gate", "fps")), "id")
       val s = strategies(above)
       assert(s.contains("shuffled") && !s.contains("broadcast"),
         s"past the gate the anti-join must not broadcast: $s")
@@ -367,12 +369,12 @@ class IndexTakedownSpec extends SparkSpec {
       "fallback takedown != rebuild-on-survivors")
     // one file per bucket even on the fallback path (the explicit
     // grid repartition), and the grid itself survives for appends
-    assert(dataFiles("td_fb_buckets").size <= 8,
+    assert(dataFiles(live("td_fb", "buckets")).size <= 8,
       "fallback rewrite must still emit one file per bucket")
     val ex = index.probeExactIndex(spark, batch, "doc_id", "text",
       "td_fb").collect().map(_.getLong(1)).toSet
     assert(ex.nonEmpty && ex.intersect(Set(0L, 4L, 8L, 21L)).isEmpty)
-    assert(spark.table("td_fb_cells")
+    assert(spark.table(live("td_fb", "cells"))
       .filter(F.col("n_id").isin(0L, 4L, 8L, 21L)).count() == 0L)
   }
 
@@ -382,25 +384,26 @@ class IndexTakedownSpec extends SparkSpec {
     spark.conf.set("spark.graft.index.autoCompactPendingThreshold", "2")
     try {
       index.deferTakedown(Seq(0L).toDF("id"), "id", "td_auto")
-      assert(spark.table("td_auto_dels").count() == 1L,
+      assert(spark.table(live("td_auto", "dels")).count() == 1L,
         "at or below the ceiling the defer stays O(batch) — no compaction")
-      assert(spark.table("td_auto_fps").filter(F.col("id") === 0L)
+      assert(spark.table(live("td_auto", "fps")).filter(F.col("id") === 0L)
         .count() == 1L)
       index.deferTakedown(Seq(2L, 4L).toDF("id"), "id", "td_auto")
-      assert(spark.table("td_auto_dels").count() == 0L,
+      assert(spark.table(live("td_auto", "dels")).count() == 0L,
         "exceeding the ceiling must compact inline")
-      assert(spark.table("td_auto_fps")
+      assert(spark.table(live("td_auto", "fps"))
         .filter(F.col("id").isin(0L, 2L, 4L)).count() == 0L,
         "the inline compaction must physically purge all pending ids")
     } finally
       spark.conf.unset("spark.graft.index.autoCompactPendingThreshold")
   }
 
-  /** Data files of a managed table, recursively (partitioned tables
-    * nest under cell=N directories). */
+  /** Data files of a managed table at its catalog location, recursively
+    * (partitioned tables nest under cell=N directories). */
   private def dataFiles(table: String): Seq[String] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val root = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
+    val root = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .location)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = scala.collection.mutable.ArrayBuffer[String]()
     val it = fs.listFiles(root, true)
@@ -435,22 +438,22 @@ class IndexTakedownSpec extends SparkSpec {
         k = 4, nprobe = 4)
       .select("q_id", "n_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(dataFiles("td_cmp_buckets").size > 8,
+    assert(dataFiles(live("td_cmp", "buckets")).size > 8,
       "setup: three append generations must leave multiple files per bucket")
-    val cellsBefore = dataFiles("td_cmp_cells")
+    val cellsBefore = dataFiles(live("td_cmp", "cells"))
       .groupBy(p => p.split("/").reverse.find(_.startsWith("cell=")).get)
     assert(cellsBefore.values.exists(_.size > 1),
       "setup: appended cells must hold multiple files")
     index.compactIndex(spark, "td_cmp")
-    assert(dataFiles("td_cmp_buckets").size <= 8,
+    assert(dataFiles(live("td_cmp", "buckets")).size <= 8,
       s"buckets must fold to one file per bucket")
-    assert(dataFiles("td_cmp_sigs").size <= 8)
-    val cellsAfter = dataFiles("td_cmp_cells")
+    assert(dataFiles(live("td_cmp", "sigs")).size <= 8)
+    val cellsAfter = dataFiles(live("td_cmp", "cells"))
       .groupBy(p => p.split("/").reverse.find(_.startsWith("cell=")).get)
     assert(cellsAfter.values.forall(_.size == 1),
       "cells must fold to one file per cell")
     // stats folded to one row per bucket, still summing to live counts
-    val multi = spark.table("td_cmp_stats").groupBy("band", "band_hash")
+    val multi = spark.table(live("td_cmp", "stats")).groupBy("band", "band_hash")
       .count().filter(F.col("count") > 1L).count()
     assert(multi == 0L, "stats append log must fold to one row per bucket")
     assert(probeHits("td_cmp", batch) == jacBefore,
@@ -477,20 +480,20 @@ class IndexTakedownSpec extends SparkSpec {
     val cores = spark.sparkContext.defaultParallelism
     assert(cores < 8, s"setup: the grid must have more buckets than cores ($cores)")
     index.buildJaccardIndex(corpus(), "doc_id", "text", "td_grid", buckets = 8)
-    val statsBefore = dataFiles("td_grid_stats").size
+    val statsBefore = dataFiles(live("td_grid", "stats")).size
     val (_, ran) = ranDuring(index.removeFromJaccardIndex(
       Seq(0L, 4L, 8L, 21L).toDF("doc_id"), "doc_id", "td_grid"))
     val tasks = ran.stageTasks
     assert(tasks.nonEmpty && tasks.forall(_ <= cores),
       s"every takedown stage must run at most $cores tasks: $tasks")
-    Seq("td_grid_buckets", "td_grid_sigs").foreach { t =>
+    Seq(live("td_grid", "buckets"), live("td_grid", "sigs")).foreach { t =>
       val ids = dataFiles(t).map(p =>
         BucketingUtils.getBucketId(new org.apache.hadoop.fs.Path(p).getName))
       assert(ids.size <= 8 && ids.forall(_.isDefined) &&
         ids.distinct.size == ids.size,
         s"$t must keep one file per bucket: ${ids.sortBy(_.getOrElse(-1))}")
     }
-    val added = dataFiles("td_grid_stats").size - statsBefore
+    val added = dataFiles(live("td_grid", "stats")).size - statsBefore
     assert(added >= 1 && added <= cores,
       s"the _stats decrement must append at most $cores files: $added")
   }
@@ -506,7 +509,7 @@ class IndexTakedownSpec extends SparkSpec {
         case _: ShuffledHashJoinExec => "shuffled"
       }
     def pending() = index.minusPending(spark, "td_pcache",
-      spark.table("td_pcache_fps"), "id")
+      spark.table(live("td_pcache", "fps")), "id")
     spark.conf.set("spark.graft.index.pendingBroadcastThreshold", "5")
     try {
       index.deferTakedown(Seq(0L, 1L).toDF("doc_id"), "doc_id", "td_pcache")
@@ -517,7 +520,7 @@ class IndexTakedownSpec extends SparkSpec {
       // construction must NOT re-count, so the plan still broadcasts...
       (10L until 22L).toDF("id").write
         .mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-        .saveAsTable("td_pcache_dels")
+        .saveAsTable(live("td_pcache", "dels"))
       val stale = pending()
       assert(strategies(stale).contains("broadcast"),
         "probe construction must serve the gate from the cache, not a count job")
@@ -531,7 +534,7 @@ class IndexTakedownSpec extends SparkSpec {
         s"defer must refresh the cached gate count: $s")
       // compaction drains the pending set and refreshes to 0 → broadcast
       index.compactTakedowns(spark, "td_pcache")
-      assert(spark.table("td_pcache_dels").count() == 0L)
+      assert(spark.table(live("td_pcache", "dels")).count() == 0L)
       val drained = pending()
       assert(strategies(drained).contains("broadcast"))
       assert(drained.count() == 200L - 15L)
@@ -566,8 +569,8 @@ class IndexTakedownSpec extends SparkSpec {
     assert(bankAfter.toSeq != bankBefore.toSeq,
       "the removals change the md5 seed order — the bank must move")
     // pending ids are folded: physically absent AND drained from _dels
-    assert(spark.table("td_rtivf_dels").count() == 0L)
-    val ids = spark.table("td_rtivf_cells").select("n_id")
+    assert(spark.table(live("td_rtivf", "dels")).count() == 0L)
+    val ids = spark.table(live("td_rtivf", "cells")).select("n_id")
       .collect().map(_.getLong(0)).toSet
     val wantIds = survivors.select("vec_id").collect().map(_.getLong(0)).toSet
     assert(ids == wantIds, "cells must hold exactly the live survivors")
@@ -585,7 +588,7 @@ class IndexTakedownSpec extends SparkSpec {
         .select((F.col("vec_id") + 9000L).as("vec_id"), F.col("embedding")),
       "vec_id", "embedding", "td_rtivf",
       mode = org.apache.spark.sql.SaveMode.Append)
-    assert(spark.table("td_rtivf_cells")
+    assert(spark.table(live("td_rtivf", "cells"))
       .filter(F.col("n_id") === 9000L).count() == 1L)
   }
 
@@ -603,17 +606,17 @@ class IndexTakedownSpec extends SparkSpec {
       .toSet
     val before = probe()
     // a store covering only half the live ids must abort BEFORE any
-    // swap — the standing generation keeps serving identically
+    // flip — the standing generation keeps serving identically
     val err = intercept[IllegalArgumentException] {
       index.retrainPqIndex(e.filter(F.col("vec_id") % 2 === 0),
         "vec_id", "embedding", "td_rtpq", ivfIters = 0, pqIters = 0,
         sampleOneIn = 1L, portableSeed = true)
     }
     assert(err.getMessage.contains("missing"))
-    // the fail-fast pre-check aborts BEFORE the encode: no stage table
-    // was ever created, so the full re-encode write was never paid
-    assert(!spark.catalog.tableExists("td_rtpq_pqcells_stage"),
-      "a missing-id abort must fire before any stage write")
+    // the fail-fast pre-check aborts BEFORE the encode, and a failed
+    // operation leaves no unflipped generation behind
+    assert(unflippedGenerations("td_rtpq").isEmpty,
+      "a missing-id abort must leave no staged generation")
     assert(probe() == before, "a failed retrain must leave the index untouched")
     // a store with a DUPLICATE row for a live id passes the id-level
     // pre-check but must be caught by the staged distinct-id gate —
@@ -625,12 +628,15 @@ class IndexTakedownSpec extends SparkSpec {
         sampleOneIn = 1L, portableSeed = true)
     }
     assert(dup.getMessage.contains("exactly once"))
+    assert(unflippedGenerations("td_rtpq").isEmpty,
+      "a gate abort must drop the generation it staged")
     assert(probe() == before,
       "a duplicate-row abort must leave the index untouched")
     // full store: retrain succeeds and preserves the storage contract
     index.retrainPqIndex(e, "vec_id", "embedding", "td_rtpq",
       ivfIters = 0, pqIters = 0, sampleOneIn = 1L, portableSeed = true)
-    val props = spark.sql("SHOW TBLPROPERTIES td_rtpq_pqcells").collect()
+    val props = spark.sql(s"SHOW TBLPROPERTIES ${live("td_rtpq", "pqcells")}")
+      .collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(props("graft.dim") == "64" && props("graft.m") == "8"
       && props("graft.residual") == "true")
@@ -666,7 +672,7 @@ class IndexTakedownSpec extends SparkSpec {
         .select((F.col("vec_id") + 9100L).as("vec_id"), F.col("embedding")),
       "vec_id", "embedding", "td_rsivf",
       mode = org.apache.spark.sql.SaveMode.Append)
-    assert(spark.table("td_rsivf_cells")
+    assert(spark.table(live("td_rsivf", "cells"))
       .filter(F.col("n_id") === 9100L).count() == 1L)
     // PQ: resize m 8 → 4 and ksub 8 → 16; the resized index must rank
     // exactly like the direct computation at the NEW widths (the
@@ -678,10 +684,11 @@ class IndexTakedownSpec extends SparkSpec {
     index.retrainPqIndex(e, "vec_id", "embedding", "td_rspq",
       ivfIters = 0, pqIters = 0, sampleOneIn = 1L, portableSeed = true,
       m = 4, ksub = 16)
-    val props = spark.sql("SHOW TBLPROPERTIES td_rspq_pqcells").collect()
+    val props = spark.sql(s"SHOW TBLPROPERTIES ${live("td_rspq", "pqcells")}")
+      .collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(props("graft.m") == "4")
-    assert(spark.table("td_rspq_pqcells").head()
+    assert(spark.table(live("td_rspq", "pqcells")).head()
       .getSeq[Int](1).length == 4, "codes must be m ints wide")
     val viaIndex = index.probePqIndex(spark, qs, "vec_id", "embedding",
         "td_rspq", k = 3, nprobe = 4).collect()
@@ -719,8 +726,8 @@ class IndexTakedownSpec extends SparkSpec {
     // the tables themselves agree (same grid, same rows)
     def rows(t: String) = spark.table(t)
       .collect().map(_.toSeq).toSet
-    assert(rows("td_rh_buckets") == rows("td_rh2_buckets"))
-    assert(rows("td_rh_stats") == rows("td_rh2_stats"))
+    assert(rows(live("td_rh", "buckets")) == rows(live("td_rh2", "buckets")))
+    assert(rows(live("td_rh", "stats")) == rows(live("td_rh2", "stats")))
     // appends after the re-band hash at the NEW parameters
     index.buildJaccardIndex(
       d.filter(F.col("doc_id") === 1L)
@@ -886,7 +893,7 @@ class IndexTakedownSpec extends SparkSpec {
       .map(r => (r.getString(1), r.getString(5))).toMap
     assert(out("pending_frac") == "done" && out("assign_mean") == "done",
       s"backlog and drift must both execute: $out")
-    assert(spark.table("td_exec_dels").count() == 0L,
+    assert(spark.table(live("td_exec", "dels")).count() == 0L,
       "the executed compaction must drain the backlog")
     val post = index.adviseIndexMaintenance(spark, "td_exec").collect()
       .map(r => r.getString(1) -> r.getString(4)).toMap
@@ -906,13 +913,13 @@ class IndexTakedownSpec extends SparkSpec {
     val e = vectors()
     index.buildPqIndex(e, "vec_id", "v", "td_execpq",
       nlist = 2, m = 4, ksub = 4)
-    val bankBefore = spark.table("td_execpq_pqbank").collect().toSet
+    val bankBefore = spark.table(live("td_execpq", "pqbank")).collect().toSet
     val pq0 = index.runAdvisedMaintenance(spark, "td_execpq",
         driftRatio = 0.0).collect()
       .filter(_.getString(4) == "retrain").map(_.getString(5)).toSet
     assert(pq0 == Set("needs_vectors"),
       s"pq retrain without a store must be advice, not action: $pq0")
-    assert(spark.table("td_execpq_pqbank").collect().toSet == bankBefore,
+    assert(spark.table(live("td_execpq", "pqbank")).collect().toSet == bankBefore,
       "gated retrain must leave the banks untouched")
     val pq1 = index.runAdvisedMaintenance(spark, "td_execpq",
         driftRatio = 0.0, pqVectors = Some((e, "vec_id", "v"))).collect()
@@ -940,10 +947,10 @@ class IndexTakedownSpec extends SparkSpec {
   test("takedown of unknown ids is a no-op; non-integral ids fail loudly") {
     val d = corpus()
     index.buildExactIndex(d, "doc_id", "text", "td_noop", buckets = 4)
-    val before = spark.table("td_noop_fps").count()
+    val before = spark.table(live("td_noop", "fps")).count()
     index.removeFromExactIndex(Seq(99999L).toDF("doc_id"), "doc_id",
       "td_noop")
-    assert(spark.table("td_noop_fps").count() == before)
+    assert(spark.table(live("td_noop", "fps")).count() == before)
     val strIds = Seq("a").toDF("doc_id")
     Seq[(org.apache.spark.sql.DataFrame, String, String) => Unit](
       index.removeFromJaccardIndex, index.removeFromExactIndex,

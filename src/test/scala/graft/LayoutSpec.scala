@@ -107,9 +107,9 @@ class LayoutSpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS graft_ndx_buckets")
-      spark.sql("DROP TABLE IF EXISTS graft_ndx_sigs")
-      spark.sql("DROP TABLE IF EXISTS graft_ndx_stats")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ndx", "buckets")}")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ndx", "sigs")}")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ndx", "stats")}")
     }
   }
 
@@ -162,8 +162,8 @@ class LayoutSpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS graft_edx_fps")
-      spark.sql("DROP TABLE IF EXISTS graft_edxc_fps")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_edx", "fps")}")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_edxc", "fps")}")
     }
   }
 
@@ -198,7 +198,7 @@ class LayoutSpec extends SparkSpec {
         "graft_ivf_t", k = 3, nprobe = 1)
       val scans = narrow.queryExecution.executedPlan.collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec
-            if s.tableIdentifier.exists(_.table == "graft_ivf_t_cells") => s
+            if s.tableIdentifier.exists(_.table == live("graft_ivf_t", "cells")) => s
       }
       def prunes(s: org.apache.spark.sql.execution.FileSourceScanExec) =
         s.partitionFilters.exists(f =>
@@ -216,8 +216,8 @@ class LayoutSpec extends SparkSpec {
       assert(err.getMessage.contains("dim"))
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.sql("DROP TABLE IF EXISTS graft_ivf_t_cells")
-      spark.sql("DROP TABLE IF EXISTS graft_ivf_t_centroids")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ivf_t", "cells")}")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ivf_t", "centroids")}")
     }
   }
 
@@ -233,7 +233,7 @@ class LayoutSpec extends SparkSpec {
         "graft_pq_t", nlist = 4, m = 4, ksub = 8, ivfIters = 2,
         pqIters = 0, portableSeed = true)
       // the corpus floats are NOT persisted — only (n_id, codes, cell)
-      assert(spark.table("graft_pq_t_pqcells").schema.fieldNames.toSet ==
+      assert(spark.table(live("graft_pq_t", "pqcells")).schema.fieldNames.toSet ==
         Set("n_id", "codes", "cell"))
       val queries = all.filter(F.col("id") < 5)
       val got = index.probePqIndex(spark, queries, "id", "v",
@@ -255,7 +255,8 @@ class LayoutSpec extends SparkSpec {
         "graft_pq_t", k = 3, nprobe = 1)
       val scans = narrow.queryExecution.executedPlan.collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec
-            if s.tableIdentifier.exists(_.table == "graft_pq_t_pqcells") => s
+            if s.tableIdentifier.exists(
+              _.table == live("graft_pq_t", "pqcells")) => s
       }
       def prunes(s: org.apache.spark.sql.execution.FileSourceScanExec) =
         s.partitionFilters.exists(f =>
@@ -273,7 +274,7 @@ class LayoutSpec extends SparkSpec {
         pqIters = 0, portableSeed = true)
       index.buildPqIndex(all.filter(F.col("id") > 40), "id", "v",
         "graft_pq_a", mode = SaveMode.Append)
-      val bankT = spark.table("graft_pq_a_pqbank")
+      val bankT = spark.table(live("graft_pq_a", "pqbank"))
       def bank(kind: String) = bankT.filter(F.col("kind") === kind)
         .orderBy("pos").select("v").collect().map(_.getDouble(0)).toSeq
       val day2 = all.filter(F.col("id") > 40).select(
@@ -284,10 +285,10 @@ class LayoutSpec extends SparkSpec {
           F.col("v"), F.typedlit(bank("ivf")), F.lit(1)), 1).as("cell"))
       def enc(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getSeq[Int](1).toList, r.getInt(2))).toSet
-      assert(enc(spark.table("graft_pq_a_pqcells")
+      assert(enc(spark.table(live("graft_pq_a", "pqcells"))
         .filter(F.col("n_id") > 40).select("n_id", "codes", "cell")) ==
         enc(day2))
-      assert(spark.table("graft_pq_a_pqcells").count() == 60)
+      assert(spark.table(live("graft_pq_a", "pqcells")).count() == 60)
       // appending a different dimension must be refused
       val bad = Seq((99L, Seq.fill(9)(0.5f))).toDF("id", "v")
       val err = intercept[IllegalArgumentException] {
@@ -299,15 +300,15 @@ class LayoutSpec extends SparkSpec {
       val none = all.filter(F.lit(false))
       index.buildPqIndex(none, "id", "v", "graft_pq_a",
         mode = SaveMode.Append)
-      assert(spark.table("graft_pq_a_pqcells").count() == 60)
+      assert(spark.table(live("graft_pq_a", "pqcells")).count() == 60)
       val err2 = intercept[IllegalArgumentException] {
         index.buildPqIndex(none, "id", "v", "graft_pq_fresh")
       }
       assert(err2.getMessage.contains("empty"))
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      Seq("graft_pq_t_pqcells", "graft_pq_t_pqbank",
-        "graft_pq_a_pqcells", "graft_pq_a_pqbank")
+      Seq(live("graft_pq_t", "pqcells"), live("graft_pq_t", "pqbank"),
+        live("graft_pq_a", "pqcells"), live("graft_pq_a", "pqbank"))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
@@ -435,9 +436,9 @@ class LayoutSpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS graft_ndx_cur_buckets")
-      spark.sql("DROP TABLE IF EXISTS graft_ndx_cur_sigs")
-      spark.sql("DROP TABLE IF EXISTS graft_ndx_cur_stats")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ndx_cur", "buckets")}")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ndx_cur", "sigs")}")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ndx_cur", "stats")}")
     }
   }
 
@@ -546,9 +547,9 @@ class LayoutSpec extends SparkSpec {
       assert(capped == uncapped, s"capped probe lost pairs: " +
         s"${uncapped.diff(capped)} / gained: ${capped.diff(uncapped)}")
     } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_ndx_hot_buckets")
-      spark.sql("DROP TABLE IF EXISTS graft_ndx_hot_sigs")
-      spark.sql("DROP TABLE IF EXISTS graft_ndx_hot_stats")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ndx_hot", "buckets")}")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ndx_hot", "sigs")}")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ndx_hot", "stats")}")
     }
   }
 }

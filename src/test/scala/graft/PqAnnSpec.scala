@@ -231,16 +231,16 @@ class PqAnnSpec extends SparkSpec {
     // residual flag must persist
     index.buildPqIndex(day2, "vec_id", "embedding", "rpq_spec",
       mode = SaveMode.Append, residual = false /* ignored: stored governs */)
-    val stored = spark.table("rpq_spec_pqcells")
+    val stored = spark.table(live("rpq_spec", "pqcells"))
       .collect().map(r => r.getAs[Long]("n_id") ->
         (r.getAs[Int]("cell"), r.getSeq[Int](r.fieldIndex("codes")))).toMap
     assert(stored.size == slim.count(),
       "append must add exactly the new batch")
     // recompute day2's expected codes from the stored banks directly
-    val ivfBank = spark.table("rpq_spec_pqbank")
+    val ivfBank = spark.table(live("rpq_spec", "pqbank"))
       .filter(F.col("kind") === "ivf").orderBy("pos")
       .collect().map(_.getDouble(2))
-    val cb = spark.table("rpq_spec_pqbank")
+    val cb = spark.table(live("rpq_spec", "pqbank"))
       .filter(F.col("kind") === "cb").orderBy("pos")
       .collect().map(_.getDouble(2))
     val nlist = ivfBank.length / 65

@@ -503,11 +503,11 @@ class ScaleSmokeSpec extends SparkSpec {
       // the static cell filter prunes the partitioned scan: of 64 cell
       // directories, at most 100 queries × 4 probes distinct cells open
       val scans = out.queryExecution.executedPlan.toString
-      assert(scans.contains("graft_ivf_smoke_cells"))
+      assert(scans.contains(live("graft_ivf_smoke", "cells")))
       assert(newPins(pins0).isEmpty)
     } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_ivf_smoke_cells")
-      spark.sql("DROP TABLE IF EXISTS graft_ivf_smoke_centroids")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ivf_smoke", "cells")}")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ivf_smoke", "centroids")}")
     }
   }
 
@@ -997,8 +997,8 @@ class ScaleSmokeSpec extends SparkSpec {
       assert(hit.intersect(pending).isEmpty, "pending ids must not match")
       // compaction does the one rewrite; after it the dels are gone
       index.compactTakedowns(spark, "smoke_dtd")
-      assert(spark.table("smoke_dtd_dels").count() == 0L)
-      assert(spark.table("smoke_dtd_fps").count() == n - 1000L,
+      assert(spark.table(live("smoke_dtd", "dels")).count() == 0L)
+      assert(spark.table(live("smoke_dtd", "fps")).count() == n - 1000L,
         "compaction must purge exactly the pending rows")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -1074,7 +1074,7 @@ class ScaleSmokeSpec extends SparkSpec {
       spark.range(0, 12000000).select((F.col("id") * 2).as("doc_id")),
       "doc_id", "sm_gate")
     val filtered = index.minusPending(spark, "sm_gate",
-      spark.table("sm_gate_fps"), "id")
+      spark.table(live("sm_gate", "fps")), "id")
     val plan = filtered.queryExecution.sparkPlan.toString
     assert(!plan.contains("BroadcastExchange"),
       s"a 12M-id pending set must not broadcast:\n${plan.take(2000)}")
@@ -1091,8 +1091,8 @@ class ScaleSmokeSpec extends SparkSpec {
     // gate (delJoin's shuffled branch inside the rewrite) — the
     // compaction must complete and leave exactly the odd survivors
     index.compactTakedowns(spark, "sm_gate")
-    assert(spark.table("sm_gate_dels").count() == 0L)
-    assert(spark.table("sm_gate_fps").count() == 1000L,
+    assert(spark.table(live("sm_gate", "dels")).count() == 0L)
+    assert(spark.table(live("sm_gate", "fps")).count() == 1000L,
       "fallback compaction must purge exactly the even half")
   }
 
@@ -1133,7 +1133,7 @@ class ScaleSmokeSpec extends SparkSpec {
       deferredEver ++= todays
       if (day % 7 == 0) {
         index.compactTakedowns(spark, "lh_def")
-        assert(spark.table("lh_def_dels").count() == 0L,
+        assert(spark.table(live("lh_def", "dels")).count() == 0L,
           s"day $day: compaction must drain the pending set to 0")
       }
       if (day % 10 == 0 || day == 50) {
@@ -1212,7 +1212,7 @@ class ScaleSmokeSpec extends SparkSpec {
         // remap invariants: keys are EXACTLY the merged-away rep0s of
         // the map (nothing missing → reads resolve; nothing extra →
         // no leak), one row per key, and FLAT (no rep is also a key)
-        val remap = spark.table("lh_cm_cremap").collect()
+        val remap = spark.table(live("lh_cm", "cremap")).collect()
           .map(r => r.getLong(0) -> r.getLong(1))
         val remapKeys = remap.map(_._1).toSet
         assert(remap.length == remapKeys.size,
@@ -1222,7 +1222,7 @@ class ScaleSmokeSpec extends SparkSpec {
         val current = index.readComponentMap(spark, "lh_cm")
           .select("component").distinct()
           .collect().map(_.getLong(0)).toSet
-        val rep0s = spark.table("lh_cm_cmap").select("rep0").distinct()
+        val rep0s = spark.table(live("lh_cm", "cmap")).select("rep0").distinct()
           .collect().map(_.getLong(0)).toSet
         assert(remapKeys == (rep0s -- current),
           s"day $day: remap keys must be exactly the merged-away rep0s" +
@@ -1327,8 +1327,8 @@ class ScaleSmokeSpec extends SparkSpec {
         s"the pending exclusion must broadcast, never shuffle the corpus: " +
           s"${shuffledJoins.map(_.nodeName)}")
       // correctness at scale: pending folded, survivors exact
-      assert(spark.table("smoke_rt_dels").count() == 0L)
-      assert(spark.table("smoke_rt_cells").count() == 190000L,
+      assert(spark.table(live("smoke_rt", "dels")).count() == 0L)
+      assert(spark.table(live("smoke_rt", "cells")).count() == 190000L,
         "retrain must re-encode exactly the live survivors")
       val out = index.probeIvfIndex(spark,
         vecs.filter(F.col("vec_id") < 50 && F.col("vec_id") % 20 =!= 0),
@@ -1338,7 +1338,7 @@ class ScaleSmokeSpec extends SparkSpec {
         "folded pending ids must not match post-retrain probes")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      Seq("smoke_rt_cells", "smoke_rt_centroids", "smoke_rt_dels")
+      Seq("cells", "centroids", "dels").map(live("smoke_rt", _))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
@@ -1418,7 +1418,7 @@ class ScaleSmokeSpec extends SparkSpec {
         s"planted drift must raise assign_mean past the baseline: $meanRatio")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      Seq("smoke_dr_cells", "smoke_dr_centroids", "smoke_dr_dels")
+      Seq("cells", "centroids", "dels").map(live("smoke_dr", _))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }

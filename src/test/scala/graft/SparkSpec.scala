@@ -27,6 +27,34 @@ trait SparkSpec extends AnyFunSuite {
 
   def tbl(df: DataFrame, name: String = "t"): Table = Table.fromDF(df, name)
 
+  /** The live physical table of `kind` in index `name`: specs read index
+    * tables through the manifest resolver, never as `<name>_<kind>`. */
+  def live(name: String, kind: String): String =
+    graft.functions.index.liveTable(spark, name, kind)
+
+  /** Tables and warehouse directories of index `name` that look like a
+    * staged generation (`<name>_<kind>_g<epoch>_<seq>`) but are not
+    * what its manifest points at — what a failed operation must never
+    * leave behind. Read straight from the catalog, the warehouse and
+    * the lease table's `graft.live.*` pointers. */
+  def unflippedGenerations(name: String): Seq[String] = {
+    val lower = name.toLowerCase
+    val gen = (java.util.regex.Pattern.quote(lower) + "_[a-z]+_g\\d+_\\d+").r
+    val cat = spark.sessionState.catalog
+    val lease = org.apache.spark.sql.catalyst.TableIdentifier(s"${lower}_lease")
+    val pointed =
+      if (!cat.tableExists(lease)) Set.empty[String]
+      else cat.getTableMetadata(lease).properties.collect {
+        case (k, v) if k.startsWith("graft.live.") => v
+      }.toSet
+    val tables = cat.listTables(cat.getCurrentDatabase).map(_.table)
+    val wh = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val dirs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(wh).map(_.getPath.getName).toSeq
+    (tables ++ dirs).distinct.filter(t => gen.matches(t) && !pointed(t))
+  }
+
   /** rows of the visible projection, as Seq of Seq (null-safe). */
   def rows(t: Table): Seq[Seq[Any]] =
     t.collect().toSeq.map(r => (0 until r.length).map(i => r.get(i)))

@@ -230,7 +230,7 @@ class StreamingSpec extends SparkSpec {
       Streams.runToMemory(stream2, "sx_out2", OutputMode.Append())
       assert(spark.table("sx_out2").count() == 0L)
     } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_sx_fps")
+      spark.sql(s"DROP TABLE IF EXISTS ${live("graft_sx", "fps")}")
     }
   }
 
@@ -260,7 +260,7 @@ class StreamingSpec extends SparkSpec {
         "the pending-deleted doc's re-crawl must pass as new; the live " +
           "doc's copy must still be dropped")
     } finally {
-      Seq("graft_sxd2_fps", "graft_sxd2_dels")
+      Seq(live("graft_sxd2", "fps"), live("graft_sxd2", "dels"))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
@@ -304,9 +304,8 @@ class StreamingSpec extends SparkSpec {
       assert(got2.get(22L).contains(20L) && got2.size == 8,
         s"a resumed stream must extend the same families: $got2")
     } finally {
-      Seq("graft_cms_idx_buckets", "graft_cms_idx_sigs",
-        "graft_cms_idx_stats", "graft_cms_cm_cmap", "graft_cms_cm_cremap",
-        "graft_cms_cm_cedges")
+      (Seq("buckets", "sigs", "stats").map(live("graft_cms_idx", _)) ++
+        Seq("cmap", "cremap", "cedges").map(live("graft_cms_cm", _)))
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
