@@ -5,7 +5,9 @@ import org.apache.spark.sql.types._
 import graft.core._
 import graft.dsl._
 import graft.functions.{contamination, dedup, joins, multimodal, quality, sampling, similarity, text}
+import graft.streaming.Streams
 import graft.table.Table
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Training-data-pipeline extension queries (dedup / similarity search /
   * text analysis / multimodal / event streams) over the `documents`,
@@ -3005,48 +3007,38 @@ object ExtQueries {
     * hash-verified against the batch oracle — the first ORACLED
     * streaming row (the rest of streaming/ is spec-asserted). The query
     * builder runs the real streaming machinery — file source →
-    * watermark → stateful windowed aggregation → memory sink — via
-    * `processAllAvailable`, then returns the sink table. Complete
+    * watermark → stateful windowed aggregation → memory sink — through
+    * [[Streams.replay]], which returns the sink's rows. Complete
     * output mode so windows still inside the watermark horizon are
     * emitted too: the sink then holds exactly the batch GROUP BY, and
     * DuckDB's `time_bucket` replays Spark's epoch-aligned 5-minute
     * windows (both origins are :00-aligned). Single-file source = one
     * micro-batch = deterministic. */
-  def x85StreamingWindow(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.streaming.OutputMode
-    // unique per call: concurrent callers on a shared session must not
-    // collide on the sink's temp-view name; the name is dropped once
-    // the DataFrame is resolved (the plan holds the sink directly)
-    val name = s"x85_stream_sink_${streamSinkIds.incrementAndGet()}"
-    requireMicrosEvents(s, dir)
-    // the file streaming source requires a DIRECTORY base path; point
-    // it at the sf dir and glob-filter to the events table.
-    // 8-partition replay clone: one state store per shuffle partition
-    // dominates a bounded replay at 32 (Streams.replaySession)
-    val ss = Streams.replaySession(s, partitions = 8)
-    val stream = Streams.windowedCounts(
-      ss.readStream.schema(Streams.eventSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir))
-    Streams.runToMemory(stream, name, OutputMode.Complete())
-    val out = ss.table(name).orderBy("window_start", "event_type")
-    ss.catalog.dropTempView(name)
-    out
-  }
+  def x85StreamingWindow(s: SparkSession, dir: String): DataFrame =
+    replayEvents(s, dir, OutputMode.Complete())((_, ev) =>
+      Streams.windowedCounts(ev))
+      .orderBy("window_start", "event_type")
 
-  private val streamSinkIds = new java.util.concurrent.atomic.AtomicLong()
-
-  /** The streaming queries declare a static TimestampType schema; a
+  /** [[graft.streaming.Streams.replay]] over the events table. The
+    * streaming queries declare a static TimestampType schema; a
     * TIMESTAMP(NANOS) events fixture (which batch queries route through
     * [[eventsDf]]'s Long-nanos shim) would silently misread it. Fail
     * fast with a pointer instead. */
-  private def requireMicrosEvents(s: SparkSession, dir: String): Unit =
+  private def replayEvents(s: SparkSession, dir: String, mode: OutputMode)(
+      transform: (SparkSession, DataFrame) => DataFrame): DataFrame = {
     require(
       Table.readParquet(s, s"$dir/events.parquet").schema("ts").dataType != LongType,
       s"$dir/events.parquet carries TIMESTAMP(NANOS) (read as Long under " +
         "legacy.parquet.nanosAsLong): the streaming queries' static " +
         "TimestampType schema cannot express it — extend them with the " +
         "eventsDf shim before running on this fixture")
+    Streams.replay(s, dir, "events.parquet", Streams.eventSchema, mode)(transform)
+  }
+
+  /** [[graft.streaming.Streams.replay]] over the documents table. */
+  private def replayDocs(s: SparkSession, dir: String, mode: OutputMode)(
+      transform: (SparkSession, DataFrame) => DataFrame): DataFrame =
+    Streams.replay(s, dir, "documents.parquet", docStreamSchema, mode)(transform)
 
   private val x85Oracle =
     """SELECT time_bucket(INTERVAL 5 MINUTE, ts) AS window_start, event_type,
@@ -3065,23 +3057,11 @@ object ExtQueries {
     * timestamps (java.sql.Timestamp.getTime floors micros to ms, so the
     * oracle compares epoch_ms diffs, not raw interval arithmetic) with
     * the same (ms, event_id) ordering tiebreak. */
-  def x86StreamingSessions(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"x86_stream_sessions_${streamSinkIds.incrementAndGet()}"
-    requireMicrosEvents(s, dir)
-    val ss = Streams.replaySession(s, partitions = 8)
-    val events = ss.readStream.schema(Streams.eventSchema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .as[Streams.Event](Streams.eventEnc)
-    val stats = Streams.sessionStatsUnbounded(events)
-    val q = stats.writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(name).start()
-    q.processAllAvailable(); q.stop()
-    val out = ss.table(name).orderBy("user_id")
-    ss.catalog.dropTempView(name)
-    out
-  }
+  def x86StreamingSessions(s: SparkSession, dir: String): DataFrame =
+    replayEvents(s, dir, OutputMode.Update())((_, ev) =>
+      Streams.sessionStatsUnbounded(ev.as[Streams.Event](Streams.eventEnc))
+        .toDF())
+      .orderBy("user_id")
 
   private val x86Oracle =
     """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms, event_id FROM events),
@@ -3100,22 +3080,12 @@ object ExtQueries {
     * — the emitted KEY SET is deterministic and equals the batch
     * DISTINCT — exercising the watermark + dedup state machinery
     * end-to-end in one micro-batch. */
-  def x87StreamingDedup(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"x87_stream_dedup_${streamSinkIds.incrementAndGet()}"
-    requireMicrosEvents(s, dir)
-    val ss = Streams.replaySession(s, partitions = 8)
-    val ev = ss.readStream.schema(Streams.eventSchema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .withColumn("ukey",
-        F.concat_ws(":", F.col("user_id"), F.col("event_type")))
-    val deduped = Streams.dedupeStream(ev, "ukey").select("ukey")
-    Streams.runToMemory(deduped, name, OutputMode.Append())
-    val out = ss.table(name).orderBy("ukey")
-    ss.catalog.dropTempView(name)
-    out
-  }
+  def x87StreamingDedup(s: SparkSession, dir: String): DataFrame =
+    replayEvents(s, dir, OutputMode.Append())((_, ev) =>
+      Streams.dedupeStream(ev.withColumn("ukey",
+          F.concat_ws(":", F.col("user_id"), F.col("event_type"))), "ukey")
+        .select("ukey"))
+      .orderBy("ukey")
 
   private val x87Oracle =
     """SELECT DISTINCT user_id || ':' || event_type AS ukey
@@ -3128,29 +3098,19 @@ object ExtQueries {
     * left-preserving arm), then a Complete-mode streaming aggregation
     * compresses to per-segment rows whose event_id sums pin row-level
     * join correctness — a misjoined single row breaks the hash. */
-  def x88StreamingEnrich(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"x88_stream_enrich_${streamSinkIds.incrementAndGet()}"
-    requireMicrosEvents(s, dir)
-    val ss = Streams.replaySession(s, partitions = 8)
-    val dim = Table.readParquet(ss, s"$dir/events.parquet")
-      .select(F.col("user_id")).distinct()
-      .filter(F.col("user_id") % 3 === 0)
-      .withColumn("segment", F.col("user_id") % 7)
-    val ev = ss.readStream.schema(Streams.eventSchema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val enriched = Streams.enrichStream(ev, dim, "user_id")
-      .groupBy(F.coalesce(F.col("segment"), F.lit(-1L)).as("segment"))
-      .agg(F.count(F.lit(1)).as("n_rows"),
-        F.sum("event_id").as("id_sum"),
-        F.sum(F.col("value").cast(DecimalType(18, 4)))
-          .cast(DoubleType).as("value_sum"))
-    Streams.runToMemory(enriched, name, OutputMode.Complete())
-    val out = ss.table(name).orderBy("segment")
-    ss.catalog.dropTempView(name)
-    out
-  }
+  def x88StreamingEnrich(s: SparkSession, dir: String): DataFrame =
+    replayEvents(s, dir, OutputMode.Complete()) { (ss, ev) =>
+      val dim = Table.readParquet(ss, s"$dir/events.parquet")
+        .select(F.col("user_id")).distinct()
+        .filter(F.col("user_id") % 3 === 0)
+        .withColumn("segment", F.col("user_id") % 7)
+      Streams.enrichStream(ev, dim, "user_id")
+        .groupBy(F.coalesce(F.col("segment"), F.lit(-1L)).as("segment"))
+        .agg(F.count(F.lit(1)).as("n_rows"),
+          F.sum("event_id").as("id_sum"),
+          F.sum(F.col("value").cast(DecimalType(18, 4)))
+            .cast(DoubleType).as("value_sum"))
+    }.orderBy("segment")
 
   private val x88Oracle =
     """SELECT COALESCE(d.segment, -1) AS segment, COUNT(*) AS n_rows,
@@ -3169,30 +3129,20 @@ object ExtQueries {
     * pair can be watermark-dropped and the DuckDB range-join replay is
     * exact). Complements x88 (stream-STATIC enrich): this is the join
     * class where BOTH sides are unbounded. */
-  def x90StreamingIntervalJoin(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"x90_stream_ijoin_${streamSinkIds.incrementAndGet()}"
-    requireMicrosEvents(s, dir)
-    // replay on 8 partitions: the join materializes FOUR state stores
-    // per shuffle partition, and store init/commit (not data) dominates
-    // a bounded replay at 32 — see Streams.replaySession
-    val ss = Streams.replaySession(s, partitions = 8)
-    def ev(tpe: String) = ss.readStream.schema(Streams.eventSchema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .where(F.col("event_type") === tpe)
-    val joined = Streams
-      .intervalJoinStreams(ev("view"), ev("click"), "user_id")
-      .select(F.col("l.event_id").as("view_id"),
-        F.col("r.event_id").as("click_id"),
-        F.col("l.user_id").as("user_id"),
-        (F.unix_micros(F.col("r.ts")) - F.unix_micros(F.col("l.ts")))
-          .as("lag_us"))
-    Streams.runToMemory(joined, name, OutputMode.Append())
-    val out = ss.table(name).orderBy("view_id", "click_id")
-    ss.catalog.dropTempView(name)
-    out
-  }
+  def x90StreamingIntervalJoin(s: SparkSession, dir: String): DataFrame =
+    replayEvents(s, dir, OutputMode.Append()) { (ss, views) =>
+      // the click side is a second source over the same file
+      val clicks = Streams.fileStream(ss, dir, "events.parquet",
+        Streams.eventSchema)
+      Streams.intervalJoinStreams(
+          views.where(F.col("event_type") === "view"),
+          clicks.where(F.col("event_type") === "click"), "user_id")
+        .select(F.col("l.event_id").as("view_id"),
+          F.col("r.event_id").as("click_id"),
+          F.col("l.user_id").as("user_id"),
+          (F.unix_micros(F.col("r.ts")) - F.unix_micros(F.col("l.ts")))
+            .as("lag_us"))
+    }.orderBy("view_id", "click_id")
 
   private val x90Oracle =
     """SELECT a.event_id AS view_id, b.event_id AS click_id, a.user_id,
@@ -3215,20 +3165,12 @@ object ExtQueries {
     StructField("n_chars", LongType)))
 
   def x93StreamingScrub(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"x93_stream_scrub_${streamSinkIds.incrementAndGet()}"
-    val ss = Streams.replaySession(s, partitions = 8)
     val d = F.col("doc_id")
-    val stream = ss.readStream.schema(docStreamSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .select(d, plantPii(d, F.col("text")).as("text"))
-    val scrubbed = Streams.scrubStream(stream, "text")
-      .select(d, F.col("text").as("redacted"))
-    Streams.runToMemory(scrubbed, name, OutputMode.Append())
-    val out = ss.table(name).orderBy("doc_id")
-    ss.catalog.dropTempView(name)
-    out
+    replayDocs(s, dir, OutputMode.Append())((_, stream) =>
+      Streams.scrubStream(
+          stream.select(d, plantPii(d, F.col("text")).as("text")), "text")
+        .select(d, F.col("text").as("redacted")))
+      .orderBy("doc_id")
   }
 
   private val x93Oracle =
@@ -3260,30 +3202,22 @@ object ExtQueries {
     * `n_stop >= 2` rejects EVERY page and the kept arm would be empty
     * at all SFs (probed: ~18% pass with the suffix). */
   def x94StreamingQualityGate(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"x94_stream_qgate_${streamSinkIds.incrementAndGet()}"
-    val ss = Streams.replaySession(s, partitions = 8)
     val page = F.when(F.col("doc_id") % 4 === 0,
         F.concat(F.col("text"), F.lit(x94StopSuffix)))
       .otherwise(gopherPage)
-    val stream = ss.readStream.schema(docStreamSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .select(F.col("doc_id"), page.as("text"))
-    val gated = Streams.qualityGateStream(stream, "text", "_g")
-      .select(
-        F.col("doc_id"),
-        F.col("_g.n_words").as("n_words"),
-        F.col("_g.mean_word_len").as("mean_word_len"),
-        F.col("_g.symbol_ratio").as("symbol_ratio"),
-        F.col("_g.bullet_frac").as("bullet_frac"),
-        F.col("_g.ellipsis_frac").as("ellipsis_frac"),
-        F.col("_g.alpha_frac").as("alpha_frac"),
-        F.col("_g.n_stop").as("n_stop"))
-    Streams.runToMemory(gated, name, OutputMode.Append())
-    val out = ss.table(name).orderBy("doc_id")
-    ss.catalog.dropTempView(name)
-    out
+    replayDocs(s, dir, OutputMode.Append())((_, stream) =>
+      Streams.qualityGateStream(
+          stream.select(F.col("doc_id"), page.as("text")), "text", "_g")
+        .select(
+          F.col("doc_id"),
+          F.col("_g.n_words").as("n_words"),
+          F.col("_g.mean_word_len").as("mean_word_len"),
+          F.col("_g.symbol_ratio").as("symbol_ratio"),
+          F.col("_g.bullet_frac").as("bullet_frac"),
+          F.col("_g.ellipsis_frac").as("ellipsis_frac"),
+          F.col("_g.alpha_frac").as("alpha_frac"),
+          F.col("_g.n_stop").as("n_stop")))
+      .orderBy("doc_id")
   }
 
   // the batch replay (x58Oracle) with the suffixed plain arm,
@@ -3310,22 +3244,16 @@ object ExtQueries {
     * (the stream does not dedupe cross-band hits — neither does the
     * oracle). Estimates are eq/32 — exact binary doubles. */
   def x95StreamingNearDup(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"x95_stream_neardup_${streamSinkIds.incrementAndGet()}"
-    val ss = Streams.replaySession(s, partitions = 8)
     val d = F.col("doc_id")
-    val stream = ss.readStream.schema(docStreamSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .select(d,
-        F.timestamp_millis(F.lit(1704067200000L) + (d % 97) * 60000L).as("ts"),
-        F.col("text"))
-    val hits = Streams.nearDupCandidatesStream(stream, "doc_id", "ts", "text",
-      k = 3, numPerm = 32, bands = 8, minEst = 0.5, replayable = true)
-    Streams.runToMemory(hits.toDF(), name, OutputMode.Append())
-    val out = ss.table(name).orderBy("doc_id", "dup_of", "est")
-    ss.catalog.dropTempView(name)
-    out
+    replayDocs(s, dir, OutputMode.Append())((_, stream) =>
+      Streams.nearDupCandidatesStream(
+        stream.select(d,
+          F.timestamp_millis(F.lit(1704067200000L) + (d % 97) * 60000L)
+            .as("ts"),
+          F.col("text")),
+        "doc_id", "ts", "text", k = 3, numPerm = 32, bands = 8,
+        minEst = 0.5, replayable = true).toDF())
+      .orderBy("doc_id", "dup_of", "est")
   }
 
   private val x95Oracle = {
@@ -3382,23 +3310,15 @@ object ExtQueries {
     * even twin must be dropped), and the oracle replays exactly that
     * anti-join. */
   def x96StreamingIndexProbe(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"x96_stream_ixprobe_${streamSinkIds.incrementAndGet()}"
     graft.functions.index.buildExactIndex(
       docs(s, dir).filter(F.col("doc_id") % 2 === 0),
       "doc_id", "text", "x96_exact")
-    val ss = Streams.replaySession(s, partitions = 8)
-    val stream = ss.readStream.schema(docStreamSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .select(F.col("doc_id"), F.col("text"))
-    val admitted = Streams
-      .dedupAgainstExactIndexStream(stream, "doc_id", "text", "x96_exact")
-      .select(F.col("doc_id"))
-    Streams.runToMemory(admitted, name, OutputMode.Append())
-    val out = ss.table(name).orderBy("doc_id")
-    ss.catalog.dropTempView(name)
-    out
+    replayDocs(s, dir, OutputMode.Append())((_, stream) =>
+      Streams.dedupAgainstExactIndexStream(
+          stream.select(F.col("doc_id"), F.col("text")),
+          "doc_id", "text", "x96_exact")
+        .select(F.col("doc_id")))
+      .orderBy("doc_id")
   }
 
   private val x96Oracle =
@@ -4361,28 +4281,9 @@ object ExtQueries {
     * — cross-batch pairs always meet through the index probe — so the
     * file stream's arrival order can't perturb the hash. */
   def x132StreamingComponentMap(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    val run = streamSinkIds.incrementAndGet()
-    val ss = Streams.replaySession(s, partitions = 8)
-    val stage = scratchDir(s"x132_days_$run")
-    val d = docs(ss, dir).filter(F.col("doc_id") % 2 === 0)
-    def dayOf(r: Int) = d.filter(F.col("doc_id") % 6 === r)
-      .select(F.col("doc_id"), F.col("text"))
-    val day3 = dayOf(4).unionByName(
-      dayOf(2).filter(F.col("doc_id") % 20 === 2)
-        .select((F.col("doc_id") + 2000000L).as("doc_id"), F.col("text")))
-    // one parquet file per day in one directory: maxFilesPerTrigger = 1
-    // makes each day one micro-batch (arrival order is irrelevant to
-    // the final state — see scaladoc)
-    Seq(dayOf(0), dayOf(2), day3).foreach(_.coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(stage))
-    val stream = ss.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(stage)
-    Streams.componentMapStream(stream, "doc_id", "text",
+    val run = x132Runs.incrementAndGet()
+    val ss = Streams.replaySession(s)
+    x132StreamDays(ss, dir, scratchDir(s"x132_days_$run"),
       s"x132_idx_$run", s"x132_cm_$run")
     graft.functions.index.readComponentMap(ss, s"x132_cm_$run")
       .select(F.col("id").as("doc_id"), F.col("component"),
@@ -4397,8 +4298,7 @@ object ExtQueries {
     * state — the resume branch, which the correctness query's bootstrap
     * path doesn't reach twice. */
   def x132BenchStreamDay(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    val ss = Streams.replaySession(s, partitions = 8)
+    val ss = Streams.replaySession(s)
     ensureBounded("x132_bench", dir) {
       // componentMapStream RESUMES when its tables exist (that is the
       // machinery under test), so a bounded rebuild must drop the
@@ -4409,22 +4309,51 @@ object ExtQueries {
         Seq("buckets", "sigs", "stats")
           .map(graft.functions.index.liveTable(ss, "x132b_idx", _)))
         .foreach(t => ss.sql(s"DROP TABLE IF EXISTS $t"))
-      x132StreamingBase(ss, dir); ()
+      x132StreamDays(ss, dir, scratchDir("x132_bench_base_"),
+        "x132b_idx", "x132b_cm")
     }
     val off = 50000000L + 1000000L * benchDaySeq.incrementAndGet()
     val stage = scratchDir(s"x132_bench_day_$off") + "/day"
     docs(ss, dir).filter(F.col("doc_id") % 60 === 2)
       .select((F.col("doc_id") + off).as("doc_id"), F.col("text"))
       .coalesce(1).write.parquet(stage)
-    val stream = ss.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(stage)
-    Streams.componentMapStream(stream, "doc_id", "text",
-      "x132b_idx", "x132b_cm")
+    x132StreamStage(ss, stage, "x132b_idx", "x132b_cm")
     graft.functions.index.readComponentMap(ss, "x132b_cm")
   }
+
+  private val x132Runs = new java.util.concurrent.atomic.AtomicLong()
+
+  /** x132's three "days" of the even half, day 3 carrying planted
+    * copies of day-2 docs, staged as one parquet file each under
+    * `stage` and streamed into index `indexName` and map `mapName`. */
+  private def x132StreamDays(ss: SparkSession, dir: String, stage: String,
+      indexName: String, mapName: String): Unit = {
+    val d = docs(ss, dir).filter(F.col("doc_id") % 2 === 0)
+    def dayOf(r: Int) = d.filter(F.col("doc_id") % 6 === r)
+      .select(F.col("doc_id"), F.col("text"))
+    val day3 = dayOf(4).unionByName(
+      dayOf(2).filter(F.col("doc_id") % 20 === 2)
+        .select((F.col("doc_id") + 2000000L).as("doc_id"), F.col("text")))
+    Seq(dayOf(0), dayOf(2), day3).foreach(_.coalesce(1)
+      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(stage))
+    x132StreamStage(ss, stage, indexName, mapName)
+  }
+
+  /** Every parquet file under `stage` through
+    * [[graft.streaming.Streams.componentMapStream]], one micro-batch
+    * per file (maxFilesPerTrigger = 1): one file per day makes each day
+    * one micro-batch (arrival order is irrelevant to the final state —
+    * see x132's scaladoc). */
+  private def x132StreamStage(ss: SparkSession, stage: String,
+      indexName: String, mapName: String): Unit =
+    Streams.componentMapStream(
+      ss.readStream
+        .schema(StructType(Seq(StructField("doc_id", LongType),
+          StructField("text", StringType))))
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(stage),
+      "doc_id", "text", indexName, mapName)
 
   /** BPE SEGMENTATION at corpus scale, tied into token-budget chunking
     * ([[graft.functions.bpe.segmentFast]] — the loop-based
@@ -5515,28 +5444,6 @@ object ExtQueries {
       |  action, status
       |FROM rows_ ORDER BY signal""".stripMargin
 
-  /** x132's 3-day streamed lifecycle into fixed bench-base names. */
-  private def x132StreamingBase(ss: SparkSession, dir: String): Unit = {
-    import graft.streaming.Streams
-    val stage = scratchDir("x132_bench_base_")
-    val d = docs(ss, dir).filter(F.col("doc_id") % 2 === 0)
-    def dayOf(r: Int) = d.filter(F.col("doc_id") % 6 === r)
-      .select(F.col("doc_id"), F.col("text"))
-    val day3 = dayOf(4).unionByName(
-      dayOf(2).filter(F.col("doc_id") % 20 === 2)
-        .select((F.col("doc_id") + 2000000L).as("doc_id"), F.col("text")))
-    Seq(dayOf(0), dayOf(2), day3).foreach(_.coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(stage))
-    val stream = ss.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(stage)
-    Streams.componentMapStream(stream, "doc_id", "text",
-      "x132b_idx", "x132b_cm")
-  }
-
   private val x131Oracle =
     """WITH e AS (SELECT CAST(vec_id AS BIGINT) AS vec_id,
       |    list_transform(list_zip(embedding, generate_series(0, 63)),
@@ -6261,22 +6168,13 @@ object ExtQueries {
     * the batch table for payload columns (the id-then-fetch shape a
     * store probe uses). */
   def x115StreamingWeightedSample(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"x115_stream_sink_${streamSinkIds.incrementAndGet()}"
-    val ss = Streams.replaySession(s, partitions = 8)
-    val stream = ss.readStream.schema(docStreamSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val tk = Streams.weightedSampleStream(stream, "doc_id", "n_chars", 100)
-    Streams.runToMemory(tk, name, OutputMode.Complete())
-    val ids = ss.table(name)
-      .select(F.explode(F.col("_tk")).as("_s"))
+    val sample = replayDocs(s, dir, OutputMode.Complete())((_, stream) =>
+      Streams.weightedSampleStream(stream, "doc_id", "n_chars", 100))
+    sample.select(F.explode(F.col("_tk")).as("_s"))
       .select(F.col("_s.id").as("doc_id"))
-    val out = ids.join(docs(ss, dir), "doc_id")
+      .join(docs(sample.sparkSession, dir), "doc_id")
       .select(F.col("doc_id"), F.col("source"), F.col("n_chars"))
       .orderBy("doc_id")
-    ss.catalog.dropTempView(name)
-    out
   }
 
   /** x106's heavy-hitter report computed by the STREAMING path
@@ -6288,25 +6186,16 @@ object ExtQueries {
     * batch GROUP BY, so the oracle is x106's. What's under test is the
     * real micro-batch machinery maintaining sketch state, not a
     * re-derivation (the x85/x96/x101 precedent). */
-  def x108StreamingHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"x108_stream_sink_${streamSinkIds.incrementAndGet()}"
-    val ss = Streams.replaySession(s, partitions = 8)
-    val items = ss.readStream.schema(docStreamSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .select(F.explode(dedup.shingleStrings(F.col("text"), 3)).as("item"))
-    val sketch = Streams.heavyHittersStream(items, "item",
-      capacity = 65536, topK = 30)
-    Streams.runToMemory(sketch, name, OutputMode.Complete())
-    val out = ss.table(name)
+  def x108StreamingHeavyHitters(s: SparkSession, dir: String): DataFrame =
+    replayDocs(s, dir, OutputMode.Complete())((_, stream) =>
+      Streams.heavyHittersStream(
+        stream.select(
+          F.explode(dedup.shingleStrings(F.col("text"), 3)).as("item")),
+        "item", capacity = 65536, topK = 30))
       .select(F.posexplode(F.col("hh")).as(Seq("_pos", "_e")))
       .select((F.col("_pos") + 1).cast(LongType).as("rank"),
         F.col("_e.item").as("item"), F.col("_e.cnt").as("cnt"))
       .orderBy("rank")
-    ss.catalog.dropTempView(name)
-    out
-  }
 
   private val embStreamSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType),
@@ -6323,13 +6212,12 @@ object ExtQueries {
     * replay — the streaming execution path itself is what's under
     * test (the x61 ≡ x06 and x96 precedents). */
   def x101StreamingAnnProbe(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
     val e = embs(s, dir)
     graft.functions.index.buildIvfIndex(e, "vec_id", "embedding",
       "x101_ivf", nlist = 16, iters = 2)
-    val ss = Streams.replaySession(s, partitions = 8)
-    val stream = ss.readStream.schema(embStreamSchema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val ss = Streams.replaySession(s)
+    val stream = Streams.fileStream(ss, dir, "embeddings.parquet",
+        embStreamSchema)
       .filter(F.col("vec_id") < 12)
     Streams.annProbeStream(stream, "vec_id", "embedding", "x101_ivf",
       k = 6, nprobe = 16, sinkTable = "x101_ann_hits")
@@ -6986,15 +6874,14 @@ object ExtQueries {
   }
 
   def x101BenchStreamProbeDay(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.Streams
     val e = embs(s, dir)
     ensureOnce("x101_bench", dir) {
       graft.functions.index.buildIvfIndex(e, "vec_id", "embedding",
         "x101b_ivf", nlist = 16, iters = 2)
     }
-    val ss = Streams.replaySession(s, partitions = 8)
-    val stream = ss.readStream.schema(embStreamSchema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val ss = Streams.replaySession(s)
+    val stream = Streams.fileStream(ss, dir, "embeddings.parquet",
+        embStreamSchema)
       .filter(F.col("vec_id") < 12)
     Streams.annProbeStream(stream, "vec_id", "embedding", "x101b_ivf",
       k = 6, nprobe = 16, sinkTable = "x101b_ann_hits")

@@ -70,4 +70,53 @@ object SparkEntry {
       .config("spark.sql.timeType.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+
+  /** Overrides of the bounded streaming replays' clone (see
+    * [[graft.streaming.Streams.replaySession]]). */
+  private[graft] val replayConf: Map[String, String] =
+    Map("spark.sql.shuffle.partitions" -> "8")
+
+  /** Overrides of the fuzz batteries' clone (see
+    * [[graft.fuzz.DiffFuzz]]'s `fixtureSession`). */
+  private[graft] val fixtureConf: Map[String, String] = Map(
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256k",
+    "spark.sql.codegen.wholeStage" -> "false")
+
+  // one clone per (parent session, override set) — weak keys: a clone
+  // must not outlive its parent; never one per call, a bench run
+  // samples each row 6 times and must not accumulate SessionStates
+  private val clones =
+    new java.util.WeakHashMap[SparkSession, Map[Map[String, String], SparkSession]]()
+
+  /** The clone of `parent` (`newSession`: same SparkContext, extensions
+    * and builder conf, its own SQLConf) that runs with `overrides`
+    * ([[replayConf]] or [[fixtureConf]]), keeping those tunings off
+    * every other query. The parent's runtime conf is copied in on EVERY
+    * call, not just at creation: PlanAuditSpec pins AQE off at runtime
+    * and resets it after — a stale copy would either hide the exchanges
+    * behind an AdaptiveSparkPlanExec root or leak AQE-off into bench
+    * runs. Static confs refuse a runtime set and are skipped; the
+    * override keys are never copied, so a concurrent user of the clone
+    * never sees them flip. Each call also empties the clone's table
+    * relation cache, as a fresh session would start: a table another
+    * session rewrote under the same name (x96 rebuilds its index in
+    * the caller's session on every run) must not resolve to the
+    * clone's stale file listing. */
+  private[graft] def clonedSession(parent: SparkSession,
+      overrides: Map[String, String]): SparkSession = clones.synchronized {
+    val byConf = Option(clones.get(parent)).getOrElse(Map.empty)
+    val c = byConf.getOrElse(overrides, {
+      val n = parent.newSession()
+      clones.put(parent, byConf + (overrides -> n))
+      n
+    })
+    parent.conf.getAll.foreach { case (k, v) =>
+      if (!overrides.contains(k))
+        try c.conf.set(k, v) catch { case _: org.apache.spark.sql.AnalysisException => }
+    }
+    overrides.foreach { case (k, v) => c.conf.set(k, v) }
+    c.sessionState.catalog.invalidateAllCachedTables()
+    c
+  }
 }

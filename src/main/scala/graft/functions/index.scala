@@ -81,54 +81,27 @@ object index {
   // lock another thread still holds would silently break the mutual
   // exclusion it exists for.
 
-  /** Stable per-session cache key: a UUID assigned on first sight and
-    * held under a WEAK key — a collected session's entry disappears
-    * with it, and unlike identityHashCode a UUID can never be recycled
-    * to a different live session after GC. */
-  private val sessionIds = new java.util.WeakHashMap[SparkSession, String]()
-  private def sessionKey(spark: SparkSession): String =
-    sessionIds.synchronized {
-      var id = sessionIds.get(spark)
-      if (id == null) {
-        id = java.util.UUID.randomUUID().toString
-        sessionIds.put(spark, id)
-      }
-      id
-    }
-
-  /** Cached pending-set row count per (session, dels table) — the
+  /** Cached pending-set row count per physical dels table — the
     * [[minusPending]] broadcast gate used to run one count job per
     * probe CONSTRUCTION, measurable overhead at streaming micro-batch
-    * cadence. Every in-process dels writer refreshes or invalidates
-    * the entry (deferTakedown, compactTakedowns, any Overwrite build's
-    * [[resetManagedTable]]), so probes read the gate for free; a count
-    * that somehow went stale (an out-of-contract external writer)
-    * could only flip the JOIN STRATEGY, never the result — both sides
-    * of the gate produce identical rows. Bounded: under session churn
-    * (the streaming replay-session-per-query pattern) dead sessions'
-    * entries would otherwise accumulate, so past a fixed cap the map
-    * is simply cleared — it is an advisory cache whose worst-case
-    * miss is one count job. */
+    * cadence. Every session in the JVM shares one catalog and
+    * warehouse, and every in-process dels writer refreshes or
+    * invalidates the entry (deferTakedown, compactTakedowns' fresh
+    * generation, any Overwrite build's or generation drop's
+    * [[resetManagedTable]]), so probes in any session read the gate
+    * for free; a count that somehow went stale (an out-of-contract
+    * external writer) could only flip the JOIN STRATEGY, never the
+    * result — both sides of the gate produce identical rows. */
   private val pendingCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private val pendingCountsCap = 4096
-  private def putPendingCount(key: String, c: Long): Unit = {
-    if (pendingCounts.size > pendingCountsCap) pendingCounts.clear()
-    pendingCounts.put(key, c)
-    ()
-  }
-  private def pendingKey(spark: SparkSession, delsTable: String): String =
-    sessionKey(spark) + "/" + delsTable.toLowerCase
   private def refreshPendingCount(spark: SparkSession,
       delsTable: String): Long = {
     val c = spark.table(delsTable).count()
-    putPendingCount(pendingKey(spark, delsTable), c)
+    pendingCounts.put(delsTable.toLowerCase, c)
     c
   }
   private def invalidatePendingCount(delsTable: String): Unit = {
-    // all sessions' entries: the table is gone on disk for everyone
-    val suffix = "/" + delsTable.toLowerCase
-    pendingCounts.keySet.removeIf(_.endsWith(suffix))
+    pendingCounts.remove(delsTable.toLowerCase)
     ()
   }
 
@@ -1823,10 +1796,10 @@ object index {
     * broadcast). The gate count comes from the [[pendingCounts]] cache
     * maintained by every dels writer (defer/compact/rebuild), so probe
     * construction normally costs NO job; the count() is the cold-start
-    * fallback for a session that has not written yet. Results are
-    * identical on either side of the gate — only the physical join
-    * strategy moves, so even an out-of-contract stale count cannot
-    * change rows. */
+    * fallback for a dels table no writer in this JVM has counted yet.
+    * Results are identical on either side of the gate — only the
+    * physical join strategy moves, so even an out-of-contract stale
+    * count cannot change rows. */
   private[graft] def minusPending(spark: SparkSession, name: String,
       df: DataFrame, idColName: String): DataFrame =
     withFamily(spark, name)(minusPending(_, df, idColName))
@@ -1843,13 +1816,13 @@ object index {
       // would hold the bin lock for the whole job, blocking writers'
       // refreshPendingCount puts hashed to the same bin); two racing
       // cold probes at worst both count — the cache is advisory
-      val key = pendingKey(spark, f.table("dels"))
+      val key = f.table("dels").toLowerCase
       val cached = pendingCounts.get(key)
       val cnt: Long =
         if (cached != null) cached.longValue
         else {
           val c = dels.count()
-          putPendingCount(key, c)
+          pendingCounts.put(key, c)
           c
         }
       val side =

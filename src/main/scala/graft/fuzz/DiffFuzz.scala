@@ -577,68 +577,34 @@ object DiffFuzz {
         "(CASE WHEN n_regionkey = 2 THEN NULL ELSE n_nationkey END)"))
   private val joinHows = Seq("inner", "left", "full")
 
-  /** Session clone tuned for the many-subplan batteries (q36/q37/x84),
-    * whose cost profile is the OPPOSITE of a production query: dozens
-    * of unique tiny subplans that each run exactly once over ~15k rows.
-    * Two measured knobs (Explain -j census, sf0.1):
+  /** The cached session clone the many-subplan batteries
+    * (q36/q37/q46/x84 and the x84 census) run in, with
+    * [[graft.SparkEntry.fixtureConf]]. Their cost profile is the
+    * OPPOSITE of a production query: dozens of unique tiny subplans
+    * that each run exactly once over ~15k rows. Two measured knobs
+    * (Explain -j census, sf0.1):
     *
-    *  - whole-stage codegen PER BATTERY: every subplan's generated
-    *    source is unique and runs once, so a stage can pay ~0.25 s of
-    *    Janino compilation to scan 15k rows. Codegen OFF wins for q36
-    *    (warm taskTime 10.8 → 3.7 s) and x84 (2.9 vs 3.1 s); it LOSES
-    *    for q37's draw mix, whose per-row work (wide sorts, windows
-    *    over union-doubled rows) outweighs the compile cost (warm 3.9 s
-    *    codegen'd vs 5.2 s interpreted) — so each battery passes its
-    *    measured choice. Expression-CODEGEN coverage is not lost: the
-    *    scalar batteries (q30/q34/q35/q40-q42) run codegen'd on the
-    *    parent session; q36/x84 check verb/join composition, which is
-    *    plan-level.
+    *  - whole-stage codegen off: every subplan's generated source is
+    *    unique and runs once, so a stage can pay ~0.25 s of Janino
+    *    compilation to scan 15k rows (q36 warm taskTime 10.8 → 3.7 s).
+    *    Expression-codegen coverage is not lost: the scalar batteries
+    *    (q30/q34/q35/q40-q42) run codegen'd on the parent session;
+    *    q36/x84 check verb/join composition, which is plan-level.
     *  - AQE coalescing floor 1 MB → 64k/256k: these shuffles carry well
     *    under a megabyte, so the default floor coalesced every
     *    post-shuffle stage to ONE task and serialized each pipeline's
-    *    sort/window chain — q37 cold 8.5 → 3.5 s; finer than this
-    *    loses (per-task fixed costs dominate).
+    *    sort/window chain — q37 cold 8.5 → 3.5 s; finer than this loses
+    *    (per-task fixed costs dominate).
     *
-    * A clone (`newSession`: same SparkContext, same extensions, same
-    * builder conf, fresh SQLConf) keeps both tunings OFF every real
-    * query — production-scale shuffles want codegen and the 1 MB
-    * floor. SPARK_GRAFT_FIXTURE_CODEGEN overrides the per-battery
-    * codegen choice for A/B diagnosis. */
-  // one clone per (parent session, codegen flag) — weak keys: a clone
-  // must not outlive its parent; NOT per battery call, a bench run
-  // samples each battery 6 times and must not accumulate SessionStates
-  private val fixtureSessions =
-    new java.util.WeakHashMap[SparkSession, Array[SparkSession]]()
-
-  private def fixtureSession(s: SparkSession, codegen: Boolean): SparkSession =
-    fixtureSessions.synchronized {
-      val slot = if (codegen) 1 else 0
-      val arr = Option(fixtureSessions.get(s)).getOrElse {
-        val a = new Array[SparkSession](2); fixtureSessions.put(s, a); a
-      }
-      if (arr(slot) == null) arr(slot) = s.newSession()
-      val s2 = arr(slot)
-      // refresh the caller's runtime conf on EVERY call, not just at
-      // clone creation: PlanAuditSpec pins AQE off at runtime and
-      // resets it after — a stale cached conf would either hide the
-      // exchanges behind an AdaptiveSparkPlanExec root (audit sees 0)
-      // or leak AQE-off into bench runs. Static confs refuse runtime
-      // set; skip them. The copy is map writes only — the expensive
-      // part (SessionState) is what the cache avoids re-allocating.
-      s.conf.getAll.foreach { case (k, v) =>
-        try s2.conf.set(k, v) catch { case _: Exception => () }
-      }
-      s2.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      s2.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-      s2.conf.set("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("SPARK_GRAFT_FIXTURE_CODEGEN", codegen.toString))
-      s2
-    }
+    * The clone keeps both tunings off every real query: production-scale
+    * shuffles want codegen and the 1 MB floor. */
+  private def fixtureSession(s: SparkSession): SparkSession =
+    graft.SparkEntry.clonedSession(s, graft.SparkEntry.fixtureConf)
 
   /** 24 joins (3 types × 8 conditions), each reduced to one row of
     * portable aggregates, unioned. */
   def joinQuery(s0: SparkSession, dir: String): DataFrame = {
-    val s = fixtureSession(s0, codegen = false)
+    val s = fixtureSession(s0)
     val parts = for {
       how <- joinHows
       (ctag, mkCond, _) <- joinConds
@@ -938,7 +904,7 @@ object DiffFuzz {
     * Re-A/B'd at 20270105: {3.55,3.42} int vs {3.46,4.41} cg —
     * overlap, no flip without a clear margin (BENCH_NOTES r14). */
   def pipelineQuery(s0: SparkSession, dir: String): DataFrame = {
-    val s = fixtureSession(s0, codegen = false)
+    val s = fixtureSession(s0)
     pipeBattery.map(p => pipeTable(s, dir, p))
       .reduce(_ union _).arrange(C("tag")).toDF
   }
@@ -1843,7 +1809,7 @@ object DiffFuzz {
     // r13), so this battery follows its draw, not a fixed choice.
     // 20270111 mix: {3.04,3.86} int vs {3.74,3.23} cg — overlap,
     // stays interpreted (BENCH_NOTES r14).
-    val s = fixtureSession(s0, codegen = false)
+    val s = fixtureSession(s0)
     tjSpecs.map { spec =>
       val df = spec.mk(s, dir)
       if (df.columns.contains("n_null")) df
@@ -1865,7 +1831,7 @@ object DiffFuzz {
     * pathological mix is attributable by tag. Dev-only (Explain's
     * `x84_census` pseudo-query); never part of the bench or oracle. */
   def temporalJoinCensus(s0: SparkSession, dir: String): Unit = {
-    val s = fixtureSession(s0, codegen = false)
+    val s = fixtureSession(s0)
     tjSpecs.foreach { spec =>
       val runs = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
@@ -2246,7 +2212,7 @@ object DiffFuzz {
     * (tag, lbl). Runs under the many-subplan fixture session (codegen
     * off — unique run-once subplans). */
   def specialKeyQuery(s0: SparkSession, dir: String): DataFrame = {
-    val s = fixtureSession(s0, codegen = false)
+    val s = fixtureSession(s0)
     skSpecs.map(_.mk(s, dir)).reduce(_ unionByName _)
       .orderBy("tag", "lbl")
   }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession, functions => F}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming operators — the streaming face of the batch event
@@ -287,21 +287,46 @@ object Streams {
         F.col("r.ts") <= F.col("l.ts") + F.expr(s"INTERVAL $horizon"))
   }
 
-  /** Session clone for bounded streaming REPLAYS (oracle/bench runs):
-    * stateful execution creates one state store per shuffle partition
-    * per stateful operator — a stream-stream join carries four per
-    * partition — so a fixture-sized replay on 32 partitions pays
-    * ~128 store init/commit cycles of pure overhead per run.
-    * `partitions` sizes that to the replay; production streams size
-    * `spark.sql.shuffle.partitions` to throughput instead. Runtime
-    * conf is copied from the caller so session-level pins survive. */
-  def replaySession(s: SparkSession, partitions: Int): SparkSession = {
-    val c = s.newSession()
-    s.conf.getAll.foreach { case (k, v) =>
-      try c.conf.set(k, v) catch { case _: org.apache.spark.sql.AnalysisException => }
-    }
-    c.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    c
+  /** The session clone every bounded streaming REPLAY (oracle/bench
+    * run) runs in: one per caller session, cached, with the caller's
+    * runtime conf copied in on every call and
+    * [[graft.SparkEntry.replayConf]] on top. Stateful execution
+    * creates one state store per shuffle partition per stateful
+    * operator — a stream-stream join carries four per partition — so
+    * a fixture-sized replay on 32 partitions pays ~128 store
+    * init/commit cycles of pure overhead per run; 8 partitions size
+    * that to the replay. Production streams size
+    * `spark.sql.shuffle.partitions` to throughput instead. */
+  def replaySession(s: SparkSession): SparkSession =
+    graft.SparkEntry.clonedSession(s, graft.SparkEntry.replayConf)
+
+  /** `file` under `dir` as a stream with `schema`: the file streaming
+    * source requires a DIRECTORY base path, so it reads `dir`
+    * glob-filtered to `file`. */
+  def fileStream(ss: SparkSession, dir: String, file: String,
+      schema: StructType): DataFrame =
+    ss.readStream.schema(schema).option("pathGlobFilter", file).parquet(dir)
+
+  // unique per call: concurrent replays on the shared clone must not
+  // collide on the sink's temp-view name
+  private val sinkIds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** One bounded replay: `file` under `dir` read as a stream with
+    * `schema` in the [[replaySession]] clone, `transform`ed (it gets
+    * the clone too), driven to completion into a memory sink in output
+    * `mode`, and returned as the sink's rows. The sink's view is
+    * dropped before returning (the resolved plan holds the sink
+    * directly), also when `transform` or the stream fails. A single
+    * source file is one micro-batch, so the rows are deterministic. */
+  def replay(s: SparkSession, dir: String, file: String, schema: StructType,
+      mode: OutputMode)(
+      transform: (SparkSession, DataFrame) => DataFrame): DataFrame = {
+    val ss = replaySession(s)
+    val name = s"graft_replay_sink_${sinkIds.incrementAndGet()}"
+    try {
+      runToMemory(transform(ss, fileStream(ss, dir, file, schema)), name, mode)
+      ss.table(name)
+    } finally { ss.catalog.dropTempView(name); () }
   }
 
   /** Streaming similarity search: every micro-batch of query vectors
@@ -319,17 +344,14 @@ object Streams {
   def annProbeStream(queries: DataFrame, idCol: String, vecCol: String,
       indexName: String, k: Int, nprobe: Int, sinkTable: String): Unit = {
     graft.functions.index.resetManagedTable(queries.sparkSession, sinkTable)
-    val q = queries.writeStream.outputMode(OutputMode.Append())
+    drain(queries.writeStream.outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         graft.functions.index.probeIvfIndex(batch.sparkSession, batch.toDF(),
             idCol, vecCol, indexName, k, nprobe)
           .write.mode(org.apache.spark.sql.SaveMode.Append)
           .format("parquet").saveAsTable(sinkTable)
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
   }
 
   /** Streaming near-dup FAMILY maintenance — x124's daily lifecycle as
@@ -358,7 +380,7 @@ object Streams {
   def componentMapStream(docs: DataFrame, idCol: String, textCol: String,
       indexName: String, mapName: String, minJ: Double = 0.8): Unit = {
     import graft.functions.{dedup, index}
-    val q = docs.writeStream.outputMode(OutputMode.Append())
+    drain(docs.writeStream.outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val s = batch.sparkSession
         // the batch feeds 4 consumers (probe, LSH pairs, map nodes,
@@ -386,10 +408,7 @@ object Streams {
               else org.apache.spark.sql.SaveMode.Append)
         } finally { b.unpersist(blocking = false); () }
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     // the writes ran in the streaming query's cloned session, whose
     // cache invalidations don't reach the CALLER's session — a caller
     // that had already read these tables would silently keep a stale
@@ -448,9 +467,12 @@ object Streams {
   }
 
   /** Drive a stream synchronously to a memory sink (testing/smoke). */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode): Unit = {
-    val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
+  def runToMemory(df: DataFrame, name: String, mode: OutputMode): Unit =
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(name))
+
+  /** Start `w`, process everything available, stop — also on failure. */
+  private def drain(w: DataStreamWriter[_]): Unit = {
+    val q = w.start()
+    try q.processAllAvailable() finally q.stop()
   }
 }

@@ -84,14 +84,25 @@ class ConcurrencySpec extends SparkSpec {
   }
 
   test("concurrent fixture-session battery builds stay correct") {
-    // q36/q37/x84 share memoized per-(session, codegen) clones whose
-    // conf is refreshed on every call — concurrent builders must not
+    // q36/q37/x84 share one memoized per-session clone whose conf is
+    // refreshed on every call — concurrent builders must not
     // corrupt each other through the shared SessionState
     def run(): Seq[Seq[Any]] =
       graft.fuzz.DiffFuzz.joinQuery(spark, dir)
         .collect().map(_.toSeq).toSeq
     val expected = run()
     val rounds = Future.sequence((1 to 6).map(_ => Future(run())))
+    Await.result(rounds, 5.minutes).foreach(r => assert(r == expected))
+  }
+
+  test("concurrent x85 replays on the shared replay clone stay correct") {
+    // every streaming row replays in one cached clone per session:
+    // concurrent replays must not collide on sinks, views or state
+    def run(): Seq[Seq[Any]] =
+      rowsDF(ExtQueries.x85StreamingWindow(spark, dir))
+    val expected = run()
+    assert(expected.nonEmpty)
+    val rounds = Future.sequence((1 to 2).map(_ => Future(run())))
     Await.result(rounds, 5.minutes).foreach(r => assert(r == expected))
   }
 

@@ -498,6 +498,19 @@ class IndexTakedownSpec extends SparkSpec {
       s"the _stats decrement must append at most $cores files: $added")
   }
 
+  test("pending-count cache: a writer's count serves probe construction in every session") {
+    val docs = spark.range(0, 100).select(F.col("id").as("doc_id"),
+      F.concat(F.lit("ps body "), F.col("id")).as("text"))
+    index.buildExactIndex(docs, "doc_id", "text", "td_pshare", buckets = 4)
+    index.deferTakedown(Seq(0L, 1L).toDF("doc_id"), "doc_id", "td_pshare")
+    val other = spark.newSession()
+    val (pending, ran) = ranDuring(index.minusPending(other, "td_pshare",
+      other.table(live("td_pshare", "fps")), "id"))
+    assert(ran.jobs == 0,
+      s"the defer's count must serve another session's gate: $ran")
+    assert(pending.count() == 98L)
+  }
+
   test("pending-count cache: the broadcast gate is served by writer-maintained counts") {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
     val docs = spark.range(0, 200).select(F.col("id").as("doc_id"),

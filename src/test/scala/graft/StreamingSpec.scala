@@ -497,4 +497,54 @@ class StreamingSpec extends SparkSpec {
     assert(got == Seq(("b", 4L), ("a", 2L), ("c", 1L)),
       s"cumulative sketch after two batches: $got")
   }
+
+  test("replays share one cached clone that follows the caller's runtime conf") {
+    val key = "spark.graft.test.replayProbe"
+    val first = Streams.replaySession(spark)
+    spark.conf.set(key, "set-between-calls")
+    try {
+      val second = Streams.replaySession(spark)
+      assert(second eq first, "each replay must reuse the cached clone")
+      assert(second.conf.get(key) == "set-between-calls")
+      assert(second.conf.get("spark.sql.shuffle.partitions") == "8")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") != "8",
+        "the replay override must not reach the caller")
+    } finally spark.conf.unset(key)
+  }
+
+  test("the replay clone reads a table the caller rewrote under the same name") {
+    val t = "graft_replay_rewritten"
+    spark.range(3).write.mode("overwrite").saveAsTable(t)
+    try {
+      assert(Streams.replaySession(spark).table(t).count() == 3L)
+      spark.range(5).write.mode("overwrite").saveAsTable(t)
+      assert(Streams.replaySession(spark).table(t).count() == 5L)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a replay leaves no active query or sink view, also when it fails") {
+    val dir = mkEvents()
+    val ss = Streams.replaySession(spark)
+    def leftovers(): (Int, Seq[String]) =
+      (ss.streams.active.length,
+        ss.catalog.listTables().collect().toSeq
+          .filter(t => t.isTemporary && t.name.startsWith("graft_replay_sink_"))
+          .map(_.name))
+    def replay(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+      Streams.replay(spark, dir, "*.parquet", Streams.eventSchema,
+        OutputMode.Append())((_, ev) => f(ev))
+    val got = replay(_.select("event_id")).orderBy("event_id")
+      .collect().map(_.getLong(0)).toSeq
+    assert(got == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(leftovers() == ((0, Nil)))
+    intercept[IllegalStateException](
+      replay(_ => throw new IllegalStateException("transform failed")))
+    assert(leftovers() == ((0, Nil)))
+    // a stream that fails mid-run: the drain stops it, the replay
+    // drops the view its memory sink registered
+    intercept[Exception](replay(_.select(
+      F.when(F.col("event_id") === 3L, F.raise_error(F.lit("row 3")))
+        .otherwise(F.col("event_id")).as("event_id"))))
+    assert(leftovers() == ((0, Nil)))
+  }
 }
