@@ -15,12 +15,15 @@ object Explain {
     spark.sparkContext.setLogLevel("WARN")
     // -j: per-run job/stage/task census — overhead-vs-work diagnosis
     // (a run whose wall-clock dwarfs its summed task time is paying
-    // scheduling/planning, not data work)
+    // scheduling/planning, not data work; one with many codegen
+    // compiles is paying Janino)
     val census = args.contains("-j")
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
     val tasks = new java.util.concurrent.atomic.AtomicLong
     val taskMs = new java.util.concurrent.atomic.AtomicLong
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     if (census) spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -45,6 +48,7 @@ object Explain {
       if (showPlan) fn(spark, sfDir).explain("formatted")
       (1 to 2).foreach { i =>
         jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
+        val compiles0 = compiles
         // rebuild the frame INSIDE the timed region: composite queries
         // (x50/x137, the lifecycle rows) run eager driver-loop jobs at
         // construction, which a build-once census would silently skip —
@@ -57,7 +61,8 @@ object Explain {
         if (census) {
           Thread.sleep(500) // listener bus is async; let counters settle
           println(f"[census] $name run$i: jobs=${jobs.get} stages=${stages.get} " +
-            f"tasks=${tasks.get} taskTime=${taskMs.get / 1000.0}%.2f s wall=$wall%.2f s")
+            f"tasks=${tasks.get} taskTime=${taskMs.get / 1000.0}%.2f s " +
+            f"compiles=${compiles - compiles0} wall=$wall%.2f s")
         }
       }
     }

@@ -76,12 +76,18 @@ object SparkEntry {
   private[graft] val replayConf: Map[String, String] =
     Map("spark.sql.shuffle.partitions" -> "8")
 
-  /** Overrides of the fuzz batteries' clone (see
+  /** Overrides of the fuzz batteries' clone, compiled (see
     * [[graft.fuzz.DiffFuzz]]'s `fixtureSession`). */
   private[graft] val fixtureConf: Map[String, String] = Map(
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256k",
     "spark.sql.codegen.wholeStage" -> "false")
+
+  /** [[fixtureConf]] with every projection, predicate and ordering on
+    * its interpreted evaluator: nothing is compiled (see `fixtureSession`
+    * for when a battery runs this way). */
+  private[graft] val fixtureInterpretedConf: Map[String, String] =
+    fixtureConf + ("spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   // one clone per (parent session, override set) — weak keys: a clone
   // must not outlive its parent; never one per call, a bench run
@@ -91,8 +97,8 @@ object SparkEntry {
 
   /** The clone of `parent` (`newSession`: same SparkContext, extensions
     * and builder conf, its own SQLConf) that runs with `overrides`
-    * ([[replayConf]] or [[fixtureConf]]), keeping those tunings off
-    * every other query. The parent's runtime conf is copied in on EVERY
+    * ([[replayConf]], [[fixtureConf]] or [[fixtureInterpretedConf]]),
+    * keeping those tunings off every other query. The parent's runtime conf is copied in on EVERY
     * call, not just at creation: PlanAuditSpec pins AQE off at runtime
     * and resets it after — a stale copy would either hide the exchanges
     * behind an AdaptiveSparkPlanExec root or leak AQE-off into bench

@@ -578,33 +578,72 @@ object DiffFuzz {
   private val joinHows = Seq("inner", "left", "full")
 
   /** The cached session clone the many-subplan batteries
-    * (q36/q37/q46/x84 and the x84 census) run in, with
-    * [[graft.SparkEntry.fixtureConf]]. Their cost profile is the
-    * OPPOSITE of a production query: dozens of unique tiny subplans
-    * that each run exactly once over ~15k rows. Two measured knobs
-    * (Explain -j census, sf0.1):
+    * (q36/q37/q46/x84 and the x84 census) run in. Their cost profile is
+    * the OPPOSITE of a production query: dozens of unique tiny subplans
+    * that each run exactly once. Three measured choices:
     *
-    *  - whole-stage codegen off: every subplan's generated source is
-    *    unique and runs once, so a stage can pay ~0.25 s of Janino
-    *    compilation to scan 15k rows (q36 warm taskTime 10.8 → 3.7 s).
-    *    Expression-codegen coverage is not lost: the scalar batteries
-    *    (q30/q34/q35/q40-q42) run codegen'd on the parent session;
-    *    q36/x84 check verb/join composition, which is plan-level.
+    *  - whole-stage codegen off ([[graft.SparkEntry.fixtureConf]]):
+    *    every subplan's generated source is unique and runs once, so a
+    *    stage can pay ~0.25 s of Janino compilation to scan 15k rows
+    *    (q36 warm taskTime 10.8 → 3.7 s, Explain -j census, sf0.1).
     *  - AQE coalescing floor 1 MB → 64k/256k: these shuffles carry well
     *    under a megabyte, so the default floor coalesced every
     *    post-shuffle stage to ONE task and serialized each pipeline's
     *    sort/window chain — q37 cold 8.5 → 3.5 s; finer than this loses
     *    (per-task fixed costs dominate).
+    *  - expressions interpreted when the battery's largest source is
+    *    under [[InterpretBelowBytes]] ([[fixtureConfFor]]): with
+    *    whole-stage off Spark still compiles one class per expression,
+    *    and one x84 run needs ~140 distinct ones against a JVM-wide
+    *    class cache of 100, so every warm run recompiled ~135 classes
+    *    (q37 ~143, q36 73, q46 68) and evicted other rows' classes.
+    *    Interpreted evaluation skips the compile but costs more per row,
+    *    so it pays only on small inputs. Warm samples 2–4 after a cold
+    *    run, 4 cores, compiled → interpreted:
     *
-    * The clone keeps both tunings off every real query: production-scale
-    * shuffles want codegen and the 1 MB floor. */
-  private def fixtureSession(s: SparkSession): SparkSession =
-    graft.SparkEntry.clonedSession(s, graft.SparkEntry.fixtureConf)
+    *    | battery (largest source)           | sf0.01        | sf0.1         |
+    *    |------------------------------------|---------------|---------------|
+    *    | x84 (events 184–221 KB / 2.0 MB)   | 5.0 → 3.5 s   | 5.95 → 7.92 s |
+    *    | q46 (events)                       | 2.7 → 1.8 s   | 3.15 → 5.04 s |
+    *    | q37 (customer 26–34 KB / 316 KB)   | 3.5 → 2.5 s   | 4.62 → 3.16 s |
+    *    | q36 (customer)                     | 2.9 → 2.3 s   | 3.04 → 2.89 s |
+    *
+    *    Any cut between 316 KB and 2.0 MB picks the faster mode at every
+    *    measured point; a blanket switch would make x84 and q46 30–60%
+    *    slower at sf0.1. Rejected: whole-stage codegen on in the clone
+    *    (191 compiles per x84 run); primitive literals as referenced
+    *    parameters (still 110–119 compiles); a larger class cache
+    *    (`spark.sql.codegen.cache.maxEntries` is a static conf, so it
+    *    belongs to the session builder, not to a clone).
+    *
+    * Expression-codegen coverage is not lost: the scalar batteries
+    * (q30/q34/q35/q40-q42) run codegen'd on the parent session; these
+    * batteries check verb/join composition, which is plan-level, and
+    * interpreted evaluation is the path Spark's own suite checks against
+    * codegen. The clone keeps every tuning off every real query.
+    * `tables` are the battery's sources under `dir`; their sizes come
+    * from file-system metadata ([[Table.sourceBytes]]), no Spark job. */
+  private def fixtureSession(s: SparkSession, dir: String,
+      tables: String*): SparkSession = {
+    // a source that is not one plain file keeps the compiled path
+    val largest = tables.map(Table.sourceBytes(s, dir, _).getOrElse(Long.MaxValue)).max
+    graft.SparkEntry.clonedSession(s, fixtureConfFor(largest))
+  }
+
+  /** Below this many bytes of largest source a battery evaluates
+    * interpreted (see `fixtureSession`). */
+  private val InterpretBelowBytes = 1L << 20
+
+  /** The fixture clone's override set for a battery whose largest
+    * source holds `bytes`. */
+  private[graft] def fixtureConfFor(bytes: Long): Map[String, String] =
+    if (bytes < InterpretBelowBytes) graft.SparkEntry.fixtureInterpretedConf
+    else graft.SparkEntry.fixtureConf
 
   /** 24 joins (3 types × 8 conditions), each reduced to one row of
     * portable aggregates, unioned. */
   def joinQuery(s0: SparkSession, dir: String): DataFrame = {
-    val s = fixtureSession(s0)
+    val s = fixtureSession(s0, dir, "customer", "nation")
     val parts = for {
       how <- joinHows
       (ctag, mkCond, _) <- joinConds
@@ -892,19 +931,9 @@ object DiffFuzz {
        |FROM ($body) fin""".stripMargin
   }
 
-  /** All pipelines unioned, one row each, ordered by tag. Codegen
-    * re-A/B'd at the 20261005 seed: the lighter mix (17 shuffles, was
-    * 32) inverted round 9's choice back — interpreted ~3.9 s vs
-    * codegen'd ~4.3 s warm medians over 6 samples (BENCH_NOTES).
-    * Re-A/B'd again at the 20261105 seed (heavier 33-shuffle mix):
-    * samples overlap ({4.28,4.60,4.55} cg vs {4.78,4.61,4.14}) — no
-    * flip without a clear margin, stays interpreted (BENCH_NOTES r12).
-    * Re-A/B'd at 20261205: interpreted 3.24 vs codegen 3.71 warm
-    * medians at sf0.1 — stays interpreted (BENCH_NOTES r13).
-    * Re-A/B'd at 20270105: {3.55,3.42} int vs {3.46,4.41} cg —
-    * overlap, no flip without a clear margin (BENCH_NOTES r14). */
+  /** All pipelines unioned, one row each, ordered by tag. */
   def pipelineQuery(s0: SparkSession, dir: String): DataFrame = {
-    val s = fixtureSession(s0)
+    val s = fixtureSession(s0, dir, "customer", "nation")
     pipeBattery.map(p => pipeTable(s, dir, p))
       .reduce(_ union _).arrange(C("tag")).toDF
   }
@@ -1583,8 +1612,8 @@ object DiffFuzz {
   val TjN = 18
   val TjSeed = 20270211L
 
-  private final case class TjSpec(tag: String,
-      mk: (SparkSession, String) => DataFrame, sql: String)
+  private final case class TjSpec(tag: String, mk: DataFrame => DataFrame,
+      sql: String)
 
   private lazy val tjSpecs: Seq[TjSpec] = {
     import org.apache.spark.sql.{functions => F, Column}
@@ -1606,8 +1635,7 @@ object DiffFuzz {
             ("event_type", F.col("event_type"))))
           val tag = f"asof_$i%02d"
           TjSpec(tag,
-            (s, dir) => {
-              val ev = graft.ExtQueries.eventsDf(s, dir)
+            ev => {
               val l = ev.filter(F.col("event_id") % 5 === r0)
                 .select(F.col("event_id").as("l_id"), kCol.as("k"), F.col("ts"))
               val r = ev.filter(F.col("event_id") % 7 === r1)
@@ -1640,8 +1668,7 @@ object DiffFuzz {
           val byDsl = if (useBy) Seq("user_id") else Nil
           val bySql = if (useBy) "p.user_id = i.user_id AND " else ""
           TjSpec(tag,
-            (s, dir) => {
-              val ev = graft.ExtQueries.eventsDf(s, dir)
+            ev => {
               val pCols = Seq(F.col("event_id").as("p_id"), F.col("ts")) ++
                 (if (useBy) Seq(F.col("user_id")) else Nil)
               val iCols = Seq(F.col("event_id").as("iv_id"),
@@ -1676,8 +1703,7 @@ object DiffFuzz {
             (Seq("event_type"), "a.event_type = b.event_type AND ")))
           val tag = f"overlap_$i%02d"
           TjSpec(tag,
-            (s, dir) => {
-              val ev = graft.ExtQueries.eventsDf(s, dir)
+            ev => {
               def win(m: Int, idAs: String, flt: Column) =
                 ev.filter(flt).select(
                   Seq(F.col("event_id").as(idAs), F.col("ts").as("lo"),
@@ -1719,8 +1745,7 @@ object DiffFuzz {
     import graft.functions.joins
     Seq(
       TjSpec("forced_asof_all_ties",
-        (s, dir) => {
-          val ev = graft.ExtQueries.eventsDf(s, dir)
+        ev => {
           val l = ev.filter(F.col("event_id") % 4 === 1)
             .select(F.col("event_id").as("l_id"),
               F.col("event_type").as("k"), F.col("ts"))
@@ -1746,8 +1771,7 @@ object DiffFuzz {
           |        FROM events WHERE event_id % 4 = 1 GROUP BY 1, 2) r
           |  ON l.k = r.k AND l.ts >= r.ts) j""".stripMargin),
       TjSpec("forced_range_zero_width",
-        (s, dir) => {
-          val ev = graft.ExtQueries.eventsDf(s, dir)
+        ev => {
           val p = ev.filter(F.col("event_id") % 2 === 0)
             .select(F.col("event_id").as("p_id"), F.col("ts"))
           val iv = ev.filter(F.col("event_id") % 3 === 0)
@@ -1768,8 +1792,7 @@ object DiffFuzz {
           |      FROM events WHERE event_id % 3 = 0) i
           |ON p.ts BETWEEN i.lo AND i.hi""".stripMargin),
       TjSpec("forced_overlap_self",
-        (s, dir) => {
-          val ev = graft.ExtQueries.eventsDf(s, dir)
+        ev => {
           def win(idAs: String) = ev.filter(F.col("event_id") % 5 === 2)
             .select(F.col("event_id").as(idAs), F.col("user_id"),
               F.col("ts").as("lo"),
@@ -1801,17 +1824,9 @@ object DiffFuzz {
     * the union schema is uniform. */
   def temporalJoinQuery(s0: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{functions => F}
-    // codegen re-A/B'd at the 20261011 seed: that mix flipped TO
-    // codegen (~4.1 vs ~4.6 s warm medians; BENCH_NOTES round 10),
-    // re-confirmed at 20261111 (3.62 vs 4.69 — r12). The 20261211 mix
-    // flipped BACK: interpreted won all three paired sf0.1 runs
-    // (2.76/3.12/3.06 vs 3.80/3.31/3.14 warm medians — BENCH_NOTES
-    // r13), so this battery follows its draw, not a fixed choice.
-    // 20270111 mix: {3.04,3.86} int vs {3.74,3.23} cg — overlap,
-    // stays interpreted (BENCH_NOTES r14).
-    val s = fixtureSession(s0)
+    val ev = graft.ExtQueries.eventsDf(fixtureSession(s0, dir, "events"), dir)
     tjSpecs.map { spec =>
-      val df = spec.mk(s, dir)
+      val df = spec.mk(ev)
       if (df.columns.contains("n_null")) df
       else df.withColumn("n_null", F.lit(0L))
     }.reduce(_ unionByName _).orderBy("tag")
@@ -1827,15 +1842,15 @@ object DiffFuzz {
     * 23.6 s x84 sample vs its 5-6 s median — a rotated-seed mix CAN
     * plant a skewed temporal join, and the unioned battery hides which
     * draw). Times each draw SOLO through the noop sink under the same
-    * interpreted-codegen fixture session the battery runs, so a
+    * fixture session the battery runs, so a
     * pathological mix is attributable by tag. Dev-only (Explain's
     * `x84_census` pseudo-query); never part of the bench or oracle. */
   def temporalJoinCensus(s0: SparkSession, dir: String): Unit = {
-    val s = fixtureSession(s0)
+    val ev = graft.ExtQueries.eventsDf(fixtureSession(s0, dir, "events"), dir)
     tjSpecs.foreach { spec =>
       val runs = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        spec.mk(s, dir).write.format("noop").mode("overwrite").save()
+        spec.mk(ev).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
       println(f"[tjmix] ${spec.tag}%-24s " +
@@ -2209,10 +2224,9 @@ object DiffFuzz {
         |      WHERE event_id % 7 = 2) GROUP BY k""".stripMargin))
 
   /** All special-key draws unioned, one row per key class, ordered by
-    * (tag, lbl). Runs under the many-subplan fixture session (codegen
-    * off — unique run-once subplans). */
+    * (tag, lbl). Runs under the many-subplan fixture session. */
   def specialKeyQuery(s0: SparkSession, dir: String): DataFrame = {
-    val s = fixtureSession(s0)
+    val s = fixtureSession(s0, dir, "events")
     skSpecs.map(_.mk(s, dir)).reduce(_ unionByName _)
       .orderBy("tag", "lbl")
   }

@@ -867,6 +867,12 @@ object Table {
   def source(spark: SparkSession, sfDir: String, table: String): Table =
     fromParquet(spark, s"$sfDir/$table.parquet", table)
 
+  /** The length of [[source]]'s `table` when it is one regular file,
+    * from file-system metadata: no Spark job. */
+  private[graft] def sourceBytes(spark: SparkSession, sfDir: String,
+      table: String): Option[Long] =
+    fileStatus(spark, s"$sfDir/$table.parquet").map(_.getLen)
+
   // ---- further construction sources (the reference takes tables from
   // its host engines, table_impl.py:55-115; Spark-first we expose the
   // DataSource V2 formats + the catalog) ----

@@ -84,9 +84,10 @@ class ConcurrencySpec extends SparkSpec {
   }
 
   test("concurrent fixture-session battery builds stay correct") {
-    // q36/q37/x84 share one memoized per-session clone whose conf is
-    // refreshed on every call — concurrent builders must not
-    // corrupt each other through the shared SessionState
+    // the fuzz batteries share one cached clone per session and
+    // override set (SparkEntry.clonedSession), whose conf is refreshed
+    // on every call — concurrent builders must not corrupt each other
+    // through the shared SessionState
     def run(): Seq[Seq[Any]] =
       graft.fuzz.DiffFuzz.joinQuery(spark, dir)
         .collect().map(_.toSeq).toSeq

@@ -129,6 +129,37 @@ class FuzzSpec extends SparkSpec {
     assert(checked == iterations)
   }
 
+  private val fixtureDir = "/root/testdata/sf0.001"
+
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a warm small-input fuzz battery compiles no generated class") {
+    def run(): Unit = graft.fuzz.DiffFuzz.joinQuery(spark, fixtureDir).collect()
+    run()
+    val before = compiles
+    run()
+    assert(compiles - before == 0)
+  }
+
+  test("the parent session still compiles generated classes") {
+    // a fresh literal is inlined into the generated source: a class no
+    // cache holds
+    val before = compiles
+    spark.range(3).selectExpr(s"id + ${System.nanoTime()}L AS v").collect()
+    assert(compiles - before >= 1)
+  }
+
+  test("fixture batteries interpret below 1 MB of largest source, compile above") {
+    val cut = 1L << 20
+    Seq(0L, 34L << 10, cut - 1).foreach(b => assert(
+      graft.fuzz.DiffFuzz.fixtureConfFor(b) == SparkEntry.fixtureInterpretedConf, b))
+    Seq(cut, 2L << 20, Long.MaxValue).foreach(b => assert(
+      graft.fuzz.DiffFuzz.fixtureConfFor(b) == SparkEntry.fixtureConf, b))
+    assert(SparkEntry.fixtureInterpretedConf ==
+      SparkEntry.fixtureConf + ("spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+  }
+
   // resolve CNames so SqlGen sees ColRefs with uuids mapped back to names
   private def resolve(t: graft.table.Table, e: ColExpr): ColExpr = e match {
     case CName(n) => t.col(n)
