@@ -78,20 +78,10 @@ class ExportSpec extends SparkSpec {
   }
 
   test("evalAligned shape check runs as ONE fused Spark job") {
-    val sc = spark.sparkContext
     val other = tbl(Seq(10.0, 20.0).toDF("v"), "o1j")
-    sc.setJobGroup("graft-shape-check", "evalAligned shape check")
-    try t.evalAligned(other, "v2" -> C("v"))
-    finally sc.clearJobGroup()
-    // statusTracker lags the listener bus; poll until the group shows up
-    var ids = sc.statusTracker.getJobIdsForGroup("graft-shape-check")
-    val deadline = System.nanoTime() + 5000000000L
-    while (ids.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      ids = sc.statusTracker.getJobIdsForGroup("graft-shape-check")
-    }
-    assert(ids.length == 1,
-      s"expected exactly 1 job for the fused count check, saw ${ids.length}")
+    val (_, ran) = obs.during(spark)(t.evalAligned(other, "v2" -> C("v")))
+    assert(ran.jobs == 1,
+      s"expected exactly 1 job for the fused count check, saw ${ran.jobs}")
   }
 
   test("evalAligned fails fast above the configured row threshold") {

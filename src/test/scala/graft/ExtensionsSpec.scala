@@ -7,20 +7,8 @@ import graft.functions.{dedup, multimodal, sampling, similarity, text}
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Cache-hygiene assertions are DELTA-based against a baseline taken
-    * at test start: operators whose caches auto-release on the
-    * CONSUMING query's completion (dedup.cached) may legitimately leave
-    * frames pinned when an earlier suite in the same JVM built query
-    * plans it never ran (PlanAuditSpec) — only frames pinned by THIS
-    * test's work must drain. */
-  private def pinnedBaseline: Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
   private def assertNoNewPinned(baseline: Set[Int], what: String): Unit = {
-    // the QueryExecutionListener fires asynchronously — poll briefly
-    val deadline = System.nanoTime() + 10000000000L
-    def extra = spark.sparkContext.getPersistentRDDs.keySet.toSet.diff(baseline)
-    while (extra.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    val extra = newPinned(baseline)
     assert(extra.isEmpty, s"$what still pinned: ${extra.size}")
   }
 
@@ -72,7 +60,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("signature caches auto-release after the consuming query completes") {
-    val baseline = pinnedBaseline
+    val baseline = pinned
     dedup.minhashPairs(docsDf, "doc_id", "text",
       k = 2, numPerm = 32, bands = 16, threshold = 0.3).collect()
     dedup.jaccardPairsLsh(docsDf, "doc_id", "text",
@@ -477,7 +465,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("IVF top-k: full probing equals brute force; partial probing keeps recall") {
-    val baseline = pinnedBaseline
+    val baseline = pinned
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = e.filter(F.col("vec_id") < 6)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -1501,7 +1489,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("clusterEmbeddings separates planted blobs and converges with Lloyd iterations") {
-    val baseline = pinnedBaseline
+    val baseline = pinned
     def v(xs: Double*) = xs.toArray
     // two tight directional blobs; seeds land wherever md5 order puts
     // them, so separation after training proves Lloyd moved centroids
@@ -2116,7 +2104,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("connected components release their iteration caches") {
-    val baseline = pinnedBaseline
+    val baseline = pinned
     val pairs = Seq((1L, 2L), (3L, 4L), (2L, 3L)).toDF("id_a", "id_b")
     dedup.connectedComponents(pairs).collect()
     assertNoNewPinned(baseline, "CC frames")

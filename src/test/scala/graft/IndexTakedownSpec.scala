@@ -481,7 +481,7 @@ class IndexTakedownSpec extends SparkSpec {
     assert(cores < 8, s"setup: the grid must have more buckets than cores ($cores)")
     index.buildJaccardIndex(corpus(), "doc_id", "text", "td_grid", buckets = 8)
     val statsBefore = dataFiles(live("td_grid", "stats")).size
-    val (_, ran) = ranDuring(index.removeFromJaccardIndex(
+    val (_, ran) = obs.during(spark)(index.removeFromJaccardIndex(
       Seq(0L, 4L, 8L, 21L).toDF("doc_id"), "doc_id", "td_grid"))
     val tasks = ran.stageTasks
     assert(tasks.nonEmpty && tasks.forall(_ <= cores),
@@ -504,7 +504,7 @@ class IndexTakedownSpec extends SparkSpec {
     index.buildExactIndex(docs, "doc_id", "text", "td_pshare", buckets = 4)
     index.deferTakedown(Seq(0L, 1L).toDF("doc_id"), "doc_id", "td_pshare")
     val other = spark.newSession()
-    val (pending, ran) = ranDuring(index.minusPending(other, "td_pshare",
+    val (pending, ran) = obs.during(spark)(index.minusPending(other, "td_pshare",
       other.table(live("td_pshare", "fps")), "id"))
     assert(ran.jobs == 0,
       s"the defer's count must serve another session's gate: $ran")

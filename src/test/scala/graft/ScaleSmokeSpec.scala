@@ -12,24 +12,6 @@ import graft.functions.{dedup, similarity}
 class ScaleSmokeSpec extends SparkSpec {
   private val on = sys.env.get("GRAFT_SCALE_SMOKE").contains("1")
 
-  /** Pins created by the CURRENT test: the shared session may carry
-    * legitimately user-controlled caches from earlier suites (e.g. a
-    * `collectNow` handle), so cache-release audits diff against a
-    * baseline taken at test start instead of asserting global zero. */
-  private def pinBaseline: Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-  private def newPins(baseline: Set[Int]): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet -- baseline
-  /** Release of auto-tracked caches is listener-driven (async) — poll. */
-  private def awaitRelease(baseline: Set[Int]): Set[Int] = {
-    val deadline = System.nanoTime() + 10000000000L
-    var p = newPins(baseline)
-    while (p.nonEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(100); p = newPins(baseline)
-    }
-    p
-  }
-
   test("capped LSH dedup survives a 20k-copy boilerplate cluster in a 300k corpus") {
     assume(on, "set GRAFT_SCALE_SMOKE=1 to run")
     import spark.implicits._
@@ -215,7 +197,7 @@ class ScaleSmokeSpec extends SparkSpec {
 
   test("curation composite runs end-to-end on a 100k corpus with a benchmark set") {
     assume(on, "set GRAFT_SCALE_SMOKE=1 to run")
-    val pins0 = pinBaseline
+    val pins0 = pinned
     import graft.functions.pipelines
     // 100k docs: 80k unique (10 random words each from a 30k vocab — a
     // SHARED template prefix is deliberately absent: prefix shingles make
@@ -253,14 +235,14 @@ class ScaleSmokeSpec extends SparkSpec {
     // 10k exact copies collapse to 1, each near-dup loses to its base
     // (component minimum), and the ~500 bench-overlapping docs drop
     assert(n > 78000 && n < 80500, s"curated count out of range: $n")
-    // signature/CC caches auto-release asynchronously — poll briefly
-    val left = awaitRelease(pins0)
+    // signature/CC caches auto-release from a bus listener
+    val left = newPinned(pins0)
     assert(left.isEmpty, s"caches still pinned after curation: $left")
   }
 
   test("IVF ANN answers 100 queries against a 200k-vector corpus via cell probing") {
     assume(on, "set GRAFT_SCALE_SMOKE=1 to run")
-    val pins0 = pinBaseline
+    val pins0 = pinned
     // deterministic pseudo-random 16-dim vectors from the id
     val vecs = spark.range(0, 200000).select(
       F.col("id").as("vec_id"),
@@ -271,7 +253,7 @@ class ScaleSmokeSpec extends SparkSpec {
       "vec_id", "embedding", k = 10, nlist = 64, nprobe = 4, iters = 3,
       sampleOneIn = 20)
     assert(out.count() == 100L * 10)
-    assert(newPins(pins0).isEmpty)
+    assert((pinned -- pins0).isEmpty)
   }
 
   test("groupCapSample caps a 1M-row mega-domain without a domain-wide sort task") {
@@ -387,7 +369,7 @@ class ScaleSmokeSpec extends SparkSpec {
 
   test("containmentPairs finds 50k planted quotes in a 200k corpus under the hot-shingle cap") {
     assume(on, "set GRAFT_SCALE_SMOKE=1 to run")
-    val pins0 = pinBaseline
+    val pins0 = pinned
     // 100k unique 10-word docs, a 5-word quote of each of the first 50k,
     // and 50k copies of one boilerplate text whose shingles are
     // corpus-hot: with maxPosting = 1000 the boilerplate block (50k²
@@ -412,7 +394,7 @@ class ScaleSmokeSpec extends SparkSpec {
       F.sum(F.when(F.col("id_a") >= 2000000L, 1L).otherwise(0L))).head()
     assert(agg.getLong(0) == 50000L, s"quote→source pairs: ${agg.getLong(0)}")
     assert(agg.getLong(1) == 0L, s"boilerplate pairs leaked: ${agg.getLong(1)}")
-    assert(awaitRelease(pins0).isEmpty)
+    assert(newPinned(pins0).isEmpty)
   }
 
   test("dedupLines collapses a boilerplate line shared by 200k documents") {
@@ -455,7 +437,7 @@ class ScaleSmokeSpec extends SparkSpec {
 
   test("bloom decontamination clears a 500k corpus against a 20k-doc benchmark") {
     assume(on, "set GRAFT_SCALE_SMOKE=1 to run")
-    val pins0 = pinBaseline
+    val pins0 = pinned
     import graft.functions.contamination
     // 500k train docs (8 words from the id), 1-in-50 of them an exact
     // copy of a benchmark doc; 20k bench docs. The Bloom pass must route
@@ -479,14 +461,14 @@ class ScaleSmokeSpec extends SparkSpec {
     assert(agg.getLong(0) == 500000L)
     assert(agg.getLong(1) == 10000L, s"contaminated=${agg.getLong(1)}")
     // the bench-fp cache auto-releases once the stats query completes
-    // (QueryExecutionListener fires on a bus thread — poll briefly)
-    val left = awaitRelease(pins0)
+    // (QueryExecutionListener fires on a bus thread — drain it first)
+    val left = newPinned(pins0)
     assert(left.isEmpty, s"bench-fp cache still pinned: $left")
   }
 
   test("persistent IVF index probes 200k vectors reading only the probed cells") {
     assume(on, "set GRAFT_SCALE_SMOKE=1 to run")
-    val pins0 = pinBaseline
+    val pins0 = pinned
     import graft.functions.index
     val vecs = spark.range(0, 200000).select(
       F.col("id").as("vec_id"),
@@ -504,7 +486,7 @@ class ScaleSmokeSpec extends SparkSpec {
       // directories, at most 100 queries × 4 probes distinct cells open
       val scans = out.queryExecution.executedPlan.toString
       assert(scans.contains(live("graft_ivf_smoke", "cells")))
-      assert(newPins(pins0).isEmpty)
+      assert((pinned -- pins0).isEmpty)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ivf_smoke", "cells")}")
       spark.sql(s"DROP TABLE IF EXISTS ${live("graft_ivf_smoke", "centroids")}")
@@ -633,7 +615,7 @@ class ScaleSmokeSpec extends SparkSpec {
     // partials, ranking is k-bounded. 50k docs × 12 tokens from a 5k
     // vocabulary = 600k token instances. AQE hides per-exchange plan
     // metrics behind query-stage reuse, so shuffle records are summed
-    // from stage-completion task metrics instead.
+    // from the span's task metrics instead.
     val nDocs = 50000L; val vocab = 5000L; val perDoc = 12; val k = 10
     val dir = java.nio.file.Files.createTempDirectory("graft_bm25_smoke_").toString
     spark.range(0, nDocs).select(
@@ -644,38 +626,25 @@ class ScaleSmokeSpec extends SparkSpec {
       .repartition(4).write.mode("overwrite").parquet(dir)
     val corpus = spark.read.parquet(dir)
     val queries = corpus.filter(F.col("doc_id") < 20)
-    val shuffled = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffled.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    def measure(): Long = {
-      shuffled.set(0)
+    val (_, ran) = obs.during(spark) {
       val out = retrieval.bm25TopK(corpus, "doc_id", "text",
         queries, "doc_id", "text", k = k)
       assert(out.queryExecution.toRdd.count() == 20L * k)
-      // stage-completion events arrive on the bus thread — drain
-      Thread.sleep(1500)
-      shuffled.get()
     }
     val tokenInstances = nDocs * perDoc
-    try {
-      // the whole query's shuffle volume is ~1 record per token instance
-      // (the postings shuffle; in-doc repeats collapse map-side) plus
-      // the vocabulary-sized dfreq partials and k-bounded ranking rows.
-      // Below T/2 would mean this corpus isn't being measured at token
-      // grain; above 1.5×T would mean a SECOND corpus-grain shuffle
-      // (e.g. the dfreq attachment degrading from broadcast to
-      // sort-merge, or a window dragging postings by token).
-      val full = measure()
-      assert(full > tokenInstances / 2,
-        s"shuffled only $full — not the token-grain postings relation?")
-      assert(full <= (tokenInstances * 3) / 2,
-        s"shuffled $full records over $tokenInstances token instances — " +
-          "a second corpus-grain shuffle appeared")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // the whole query's shuffle volume is ~1 record per token instance
+    // (the postings shuffle; in-doc repeats collapse map-side) plus
+    // the vocabulary-sized dfreq partials and k-bounded ranking rows.
+    // Below T/2 would mean this corpus isn't being measured at token
+    // grain; above 1.5×T would mean a SECOND corpus-grain shuffle
+    // (e.g. the dfreq attachment degrading from broadcast to
+    // sort-merge, or a window dragging postings by token).
+    val full = ran.shuffleRecords
+    assert(full > tokenInstances / 2,
+      s"shuffled only $full — not the token-grain postings relation?")
+    assert(full <= (tokenInstances * 3) / 2,
+      s"shuffled $full records over $tokenInstances token instances — " +
+        "a second corpus-grain shuffle appeared")
   }
 
   test("clusterBalancedSample flattens a 200k corpus with a dominant topic cluster") {
@@ -686,7 +655,7 @@ class ScaleSmokeSpec extends SparkSpec {
     // toward parity instead of letting it keep its natural 90% share.
     // Training sees only the hash sample; assignment + the keep filter
     // are map-side (no shuffle beyond the nlist-row count agg).
-    val baseline = pinBaseline
+    val baseline = pinned
     val dominant = spark.range(0, 180000).select(F.col("id").as("vec_id"),
       F.array((0 until 16).map(i =>
         (F.lit(if (i == 0) 1000.0 else 0.0) +
@@ -713,7 +682,7 @@ class ScaleSmokeSpec extends SparkSpec {
     assert(n > 10000L, s"kept $n rows, expected a five-figure sample")
     assert(nDom.toDouble / n < 0.5,
       s"dominant topic still holds ${nDom.toDouble / n} of the sample")
-    assert(awaitRelease(baseline).isEmpty,
+    assert(newPinned(baseline).isEmpty,
       "training must release its pinned sample")
   }
 
@@ -724,7 +693,7 @@ class ScaleSmokeSpec extends SparkSpec {
     // side): the diff's full-outer join must ship (key, 16-byte md5)
     // per row, so total shuffle WRITE bytes stay far below the text
     // volume — the property that makes a 100 TB re-crawl diff sized by
-    // keys, not corpus. Byte metrics summed from stage-completion task
+    // keys, not corpus. Byte metrics summed from the span's task
     // metrics (AQE-proof, the bm25 pattern).
     val n = 400000L
     val filler = "x" * 460
@@ -735,44 +704,27 @@ class ScaleSmokeSpec extends SparkSpec {
     val nw = snap(F.when(F.pmod(F.col("id"), F.lit(100)) === 0, F.lit("v2"))
         .otherwise(F.lit("")))
       .filter(F.pmod(F.col("doc_id"), F.lit(101)) =!= 1)
-    val shuffledBytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffledBytes.addAndGet(
-          s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      shuffledBytes.set(0)
+    val (byChange, ran) = obs.during(spark) {
       val diff = graft.functions.layout
         .snapshotDiff(old, nw, "doc_id", Seq("text"))
-      val byChange = diff.groupBy("change").count().collect()
+      diff.groupBy("change").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      // listener delivery is async — settle until the byte count stops
-      // moving (the listener bus itself is private[spark])
-      var prev = -1L
-      var settles = 0
-      while (settles < 3 && prev != shuffledBytes.get()) {
-        prev = shuffledBytes.get(); Thread.sleep(300)
-        if (prev == shuffledBytes.get()) settles += 1 else settles = 0
-      }
-      assert(byChange.getOrElse("removed", 0L) == (n + 100) / 101)
-      // changed = %100==0 rows surviving the %101 removal
-      assert(byChange.getOrElse("changed", 0L) > 3000L)
-      assert(byChange.getOrElse("added", 0L) == 0L)
-      val textBytes = 2 * n * 470 // ≈ both snapshots' text volume
-      assert(shuffledBytes.get() > 0L, "expected shuffle write metrics")
-      assert(shuffledBytes.get() < textBytes / 4,
-        s"snapshotDiff shuffled ${shuffledBytes.get()} bytes — the " +
-          s"fingerprint join must stay far below the $textBytes-byte corpus")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(byChange.getOrElse("removed", 0L) == (n + 100) / 101)
+    // changed = %100==0 rows surviving the %101 removal
+    assert(byChange.getOrElse("changed", 0L) > 3000L)
+    assert(byChange.getOrElse("added", 0L) == 0L)
+    val textBytes = 2 * n * 470 // ≈ both snapshots' text volume
+    assert(ran.shuffleBytes > 0L, "expected shuffle write metrics")
+    assert(ran.shuffleBytes < textBytes / 4,
+      s"snapshotDiff shuffled ${ran.shuffleBytes} bytes — the " +
+        s"fingerprint join must stay far below the $textBytes-byte corpus")
   }
 
   test("hammingPairs resolves 20k planted flips in a 220k-code corpus at band grain") {
     assume(on, "set GRAFT_SCALE_SMOKE=1 to run")
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val pins0 = pinBaseline
+    val pins0 = pinned
     // 200k random ±1 sign vectors (64-d, xxhash64-derived) + 20k copies
     // of the first 20k with ≤ 3 sign flips each. Random codes sit ~32
     // bits apart (P(≤3 of 64) ≈ 2e-15), so the radius-3 join must
@@ -814,13 +766,13 @@ class ScaleSmokeSpec extends SparkSpec {
       exchanges.foreach(r => assert(r <= bound,
         s"an exchange moved $r records (> $bound): $exchanges"))
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert(awaitRelease(pins0).isEmpty)
+    assert(newPinned(pins0).isEmpty)
   }
 
   test("similarityJoinPrefix resolves 20k planted dups in a 170k corpus under the posting cap") {
     assume(on, "set GRAFT_SCALE_SMOKE=1 to run")
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val pins0 = pinBaseline
+    val pins0 = pinned
     // 100k unique 10-word docs (30000-word vocab), an exact copy of
     // each of the first 20k, and 50k copies of one boilerplate sentence
     // over a DISJOINT vocabulary. Uncapped, the boilerplate's prefix
@@ -866,7 +818,7 @@ class ScaleSmokeSpec extends SparkSpec {
       exchanges.foreach(r => assert(r <= bound,
         s"an exchange moved $r records (> $bound) — posting cap not bounding: $exchanges"))
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert(awaitRelease(pins0).isEmpty)
+    assert(newPinned(pins0).isEmpty)
   }
 
   test("component-map append shuffles O(batch), never the 2M-row corpus") {
@@ -896,57 +848,41 @@ class ScaleSmokeSpec extends SparkSpec {
       .unionByName(spark.range(0, 500).select(
         (F.col("id") + nCorpus).as("id_a"),
         (F.col("id") + nCorpus + 500).as("id_b")))
-    val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          shuffled.addAndGet(m.shuffleWriteMetrics.recordsWritten); ()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      index.appendComponentEdges(batchNodes, batchEdges, "id", "smoke_cm")
-      // listener events are async; settle before reading the counter
-      Thread.sleep(2000)
-      val total = shuffled.get()
-      // generous batch-proportional bound: ~2.5k batch rows explode to
-      // endpoint sets, contracted edges, CC rounds and small writes —
-      // tens of thousands of shuffled records, never the 2M map
-      val bound = 200000L
-      assert(total <= bound,
-        s"append shuffled $total records (> $bound) — corpus-scaled, not batch-scaled")
-      // and the merges actually happened: a bridged pair shares a label
-      val comp = index.readComponentMap(spark, "smoke_cm")
-        .filter(F.col("id").isin(0L, 20L, 80L, 100L))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(comp(0L) == 0L && comp(20L) == 0L,
-        s"bridge 0-20 must merge: $comp")
-      assert(comp(80L) == 80L && comp(100L) == 80L,
-        s"bridge 80-100 must merge: $comp")
-      // TAKEDOWN on the same 2M-row map: delete 200 ids (some of them
-      // bridges) — affected set is batch-bounded, the map and edge log
-      // are broadcast-filter SCANNED, and the re-solve CC touches only
-      // the affected components' edges, so the shuffle stays O(batch)
-      shuffled.set(0L)
-      index.removeComponentIds(
-        spark.range(0, 200).select((F.col("id") * 80).as("id")),
-        "id", "smoke_cm")
-      Thread.sleep(2000)
-      val delShuffled = shuffled.get()
-      assert(delShuffled <= 200000L,
-        s"takedown shuffled $delShuffled records — corpus-scaled, not batch-scaled")
-      // the deleted hub 0 is gone and its bridged family re-solved
-      val after = index.readComponentMap(spark, "smoke_cm")
-        .filter(F.col("id").isin(0L, 1L, 20L, 21L))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(!after.contains(0L), "deleted id must lose its row")
-      assert(after(1L) == 1L, s"0's orphaned chain partner re-labels: $after")
-      assert(after(20L) == 20L && after(21L) == 20L,
-        s"the surviving sub-family keeps its own edges: $after")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, append) = obs.during(spark)(
+      index.appendComponentEdges(batchNodes, batchEdges, "id", "smoke_cm"))
+    val total = append.shuffleRecords
+    // generous batch-proportional bound: ~2.5k batch rows explode to
+    // endpoint sets, contracted edges, CC rounds and small writes —
+    // tens of thousands of shuffled records, never the 2M map
+    val bound = 200000L
+    assert(total <= bound,
+      s"append shuffled $total records (> $bound) — corpus-scaled, not batch-scaled")
+    // and the merges actually happened: a bridged pair shares a label
+    val comp = index.readComponentMap(spark, "smoke_cm")
+      .filter(F.col("id").isin(0L, 20L, 80L, 100L))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp(0L) == 0L && comp(20L) == 0L,
+      s"bridge 0-20 must merge: $comp")
+    assert(comp(80L) == 80L && comp(100L) == 80L,
+      s"bridge 80-100 must merge: $comp")
+    // TAKEDOWN on the same 2M-row map: delete 200 ids (some of them
+    // bridges) — affected set is batch-bounded, the map and edge log
+    // are broadcast-filter SCANNED, and the re-solve CC touches only
+    // the affected components' edges, so the shuffle stays O(batch)
+    val (_, takedown) = obs.during(spark)(index.removeComponentIds(
+      spark.range(0, 200).select((F.col("id") * 80).as("id")),
+      "id", "smoke_cm"))
+    val delShuffled = takedown.shuffleRecords
+    assert(delShuffled <= 200000L,
+      s"takedown shuffled $delShuffled records — corpus-scaled, not batch-scaled")
+    // the deleted hub 0 is gone and its bridged family re-solved
+    val after = index.readComponentMap(spark, "smoke_cm")
+      .filter(F.col("id").isin(0L, 1L, 20L, 21L))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(!after.contains(0L), "deleted id must lose its row")
+    assert(after(1L) == 1L, s"0's orphaned chain partner re-labels: $after")
+    assert(after(20L) == 20L && after(21L) == 20L,
+      s"the surviving sub-family keeps its own edges: $after")
   }
 
   test("deferred takedown is O(batch) against a 2M-row index; compaction owns the rewrite") {
@@ -962,45 +898,29 @@ class ScaleSmokeSpec extends SparkSpec {
       spark.range(0, n).select(F.col("id").as("doc_id"),
         F.concat(F.lit("document body "), F.col("id")).as("text")),
       "doc_id", "text", "smoke_dtd")
-    val read = new java.util.concurrent.atomic.AtomicLong(0L)
-    val written = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          read.addAndGet(m.inputMetrics.recordsRead)
-          written.addAndGet(m.outputMetrics.recordsWritten); ()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      index.deferTakedown(
-        spark.range(0, 1000).select((F.col("id") * 1999).as("doc_id")),
-        "doc_id", "smoke_dtd")
-      Thread.sleep(2000)
-      assert(read.get() <= 10000L,
-        s"deferTakedown read ${read.get()} records — it must not scan the index")
-      assert(written.get() <= 2000L,
-        s"deferTakedown wrote ${written.get()} records — it must be one " +
-          "batch-sized append")
-      // probe: pending ids excluded; the extra cost is one broadcast of
-      // the 1k-row pending set, not an index rewrite
-      val probe = index.probeExactIndex(spark,
-        spark.range(0, 4000).select(F.col("id").as("doc_id"),
-          F.concat(F.lit("document body "), F.col("id") * 1999).as("text")),
-        "doc_id", "text", "smoke_dtd")
-      val hit = probe.select("id_indexed").collect().map(_.getLong(0)).toSet
-      assert(hit.nonEmpty, "live docs must still match")
-      val pending = (0L until 1000L).map(_ * 1999).toSet
-      assert(hit.intersect(pending).isEmpty, "pending ids must not match")
-      // compaction does the one rewrite; after it the dels are gone
-      index.compactTakedowns(spark, "smoke_dtd")
-      assert(spark.table(live("smoke_dtd", "dels")).count() == 0L)
-      assert(spark.table(live("smoke_dtd", "fps")).count() == n - 1000L,
-        "compaction must purge exactly the pending rows")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, ran) = obs.during(spark)(index.deferTakedown(
+      spark.range(0, 1000).select((F.col("id") * 1999).as("doc_id")),
+      "doc_id", "smoke_dtd"))
+    assert(ran.inputRecords <= 10000L,
+      s"deferTakedown read ${ran.inputRecords} records — it must not scan the index")
+    assert(ran.outputRecords <= 2000L,
+      s"deferTakedown wrote ${ran.outputRecords} records — it must be one " +
+        "batch-sized append")
+    // probe: pending ids excluded; the extra cost is one broadcast of
+    // the 1k-row pending set, not an index rewrite
+    val probe = index.probeExactIndex(spark,
+      spark.range(0, 4000).select(F.col("id").as("doc_id"),
+        F.concat(F.lit("document body "), F.col("id") * 1999).as("text")),
+      "doc_id", "text", "smoke_dtd")
+    val hit = probe.select("id_indexed").collect().map(_.getLong(0)).toSet
+    assert(hit.nonEmpty, "live docs must still match")
+    val pending = (0L until 1000L).map(_ * 1999).toSet
+    assert(hit.intersect(pending).isEmpty, "pending ids must not match")
+    // compaction does the one rewrite; after it the dels are gone
+    index.compactTakedowns(spark, "smoke_dtd")
+    assert(spark.table(live("smoke_dtd", "dels")).count() == 0L)
+    assert(spark.table(live("smoke_dtd", "fps")).count() == n - 1000L,
+      "compaction must purge exactly the pending rows")
   }
 
   test("BPE segmentation maps a 100k-doc corpus against a 1k-rule table shuffle-free") {
@@ -1025,36 +945,22 @@ class ScaleSmokeSpec extends SparkSpec {
       "0123456789abcdef", "abcdefghijabcdef"))
     val corpus = spark.range(0, 100000L)
       .select(F.col("id"), F.concat_ws(" ", toks: _*).as("text"))
-    val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          shuffled.addAndGet(m.shuffleWriteMetrics.recordsWritten); ()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val totals = corpus.select(
-          F.aggregate(F.transform(text.tokens(F.col("text")),
-            t => F.size(bpe.segmentFast(t, merges)).cast("long")),
-            F.lit(0L), (acc, x) => acc + x).as("syms"))
-        .agg(F.sum("syms").as("n_symbols"), F.count(F.lit(1)).as("n"))
-        .head()
-      val nSymbols = totals.getLong(0); val nDocs = totals.getLong(1)
-      assert(nDocs == 100000L)
-      // 2.4M 8-char tokens: merges compress below 8 symbols/token but
-      // never below 1; both bounds breaking = kernel corruption
-      assert(nSymbols > 2400000L && nSymbols < 19200000L,
-        s"implausible symbol total $nSymbols")
-      Thread.sleep(2000)
-      val total = shuffled.get()
-      assert(total <= 1000L,
-        s"segmentation job shuffled $total records — the map is not " +
-          "shuffle-free")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (totals, ran) = obs.during(spark)(corpus.select(
+        F.aggregate(F.transform(text.tokens(F.col("text")),
+          t => F.size(bpe.segmentFast(t, merges)).cast("long")),
+          F.lit(0L), (acc, x) => acc + x).as("syms"))
+      .agg(F.sum("syms").as("n_symbols"), F.count(F.lit(1)).as("n"))
+      .head())
+    val nSymbols = totals.getLong(0); val nDocs = totals.getLong(1)
+    assert(nDocs == 100000L)
+    // 2.4M 8-char tokens: merges compress below 8 symbols/token but
+    // never below 1; both bounds breaking = kernel corruption
+    assert(nSymbols > 2400000L && nSymbols < 19200000L,
+      s"implausible symbol total $nSymbols")
+    val total = ran.shuffleRecords
+    assert(total <= 1000L,
+      s"segmentation job shuffled $total records — the map is not " +
+        "shuffle-free")
   }
 
   test("pending takedown set past the default broadcast gate: shuffled fallback, probe completes") {
@@ -1266,16 +1172,6 @@ class ScaleSmokeSpec extends SparkSpec {
       F.array((0 until 16).map(i =>
         (F.pmod(F.xxhash64(F.col("id"), F.lit(i)), F.lit(2000)) - 1000)
           .cast("double") / 1000.0): _*).as("embedding"))
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = { plans.add(qe.executedPlan); () }
-      override def onFailure(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ex: Exception): Unit = ()
-    }
     // AQE off so the captured plan's exchange count is the static
     // truth (the 50-day arm's note)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -1285,34 +1181,21 @@ class ScaleSmokeSpec extends SparkSpec {
       index.deferTakedown(
         spark.range(0, 10000).select((F.col("id") * 20).as("vec_id")),
         "vec_id", "smoke_rt")
-      spark.listenerManager.register(listener)
-      try index.retrainIvfIndex(spark, "smoke_rt", iters = 1,
-        sampleOneIn = 20)
-      finally spark.listenerManager.unregister(listener)
-      // the listener posts async — wait for the stage write's plan.
+      val (_, ran) = obs.during(spark)(index.retrainIvfIndex(spark,
+        "smoke_rt", iters = 1, sampleOneIn = 20))
       // saveAsTable runs as a CTAS command whose physical shell holds
       // the query as an untraversable logical child; the actual file
       // write is a NESTED execution (WriteFiles over the cells scan) —
       // that is the plan whose exchanges are the receipt.
-      val deadline = System.nanoTime() + 15000000000L
-      def stagePlan() = {
-        import scala.jdk.CollectionConverters._
-        plans.iterator().asScala.find { p =>
-          p.collect { case w: org.apache.spark.sql.execution
-            .datasources.WriteFilesExec => w }.nonEmpty &&
-          p.toString.contains("smoke_rt_cells")
-        }
+      val sp = ran.plans.find { p =>
+        p.collect { case w: org.apache.spark.sql.execution
+          .datasources.WriteFilesExec => w }.nonEmpty &&
+        p.toString.contains("smoke_rt_cells")
       }
-      var sp = stagePlan()
-      while (sp.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(100); sp = stagePlan()
-      }
-      assert(sp.nonEmpty, {
-        import scala.jdk.CollectionConverters._
+      assert(sp.nonEmpty,
         "the cells-stage write plan was not captured; saw:\n" +
-          plans.iterator().asScala.map(_.toString.linesIterator.take(3)
-            .mkString(" | ")).mkString("\n")
-      })
+          ran.plans.map(_.toString.linesIterator.take(3)
+            .mkString(" | ")).mkString("\n"))
       val exchanges = sp.get.collect { case e: ShuffleExchangeExec => e }
       assert(exchanges.length == 1,
         s"the rewrite must pay exactly the one cell-grid exchange, " +
@@ -1363,16 +1246,6 @@ class ScaleSmokeSpec extends SparkSpec {
             (if (shift) F.when(F.pmod(F.col("id"), F.lit(16L)) === i,
               F.lit(5.0)).otherwise(F.lit(0.0))
              else F.lit(0.0))): _*).as("embedding"))
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = { plans.add(qe.executedPlan); () }
-      override def onFailure(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ex: Exception): Unit = ()
-    }
     // AQE off so the captured plans' join nodes are the static truth
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -1381,23 +1254,12 @@ class ScaleSmokeSpec extends SparkSpec {
       index.buildIvfIndex(mk(200000, 250000, shift = true), "vec_id",
         "embedding", "smoke_dr",
         mode = org.apache.spark.sql.SaveMode.Append)
-      spark.listenerManager.register(listener)
-      val report =
-        try index.driftIndexReport(spark, "smoke_dr")
+      val (report, ran) = obs.during(spark)(
+        index.driftIndexReport(spark, "smoke_dr")
           .collect().map(r => r.getString(1) ->
             (r.getDouble(2), if (r.isNullAt(4)) Double.NaN
-             else r.getDouble(4))).toMap
-        finally spark.listenerManager.unregister(listener)
-      // the listener posts async — give the metric jobs' plans a beat
-      val deadline = System.nanoTime() + 10000000000L
-      def snap() = {
-        import scala.jdk.CollectionConverters._
-        plans.iterator().asScala.toSeq
-      }
-      var ps = snap()
-      while (ps.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(100); ps = snap()
-      }
+             else r.getDouble(4))).toMap)
+      val ps = ran.plans
       assert(ps.nonEmpty, "no report plans captured")
       val shuffledJoins = ps.flatMap(_.collect {
         case j: ShuffledHashJoinExec => j

@@ -83,8 +83,8 @@ class SourceSinkSpec extends SparkSpec {
   test("a repeat parquet source resolves from the schema cache with no Spark job") {
     val dir = Files.createTempDirectory("graft_src").toString
     writeSingleFile(t.toDF, dir, "t")
-    val (first, cold) = ranDuring(Table.source(spark, dir, "t"))
-    val (again, warm) = ranDuring(Table.source(spark, dir, "t"))
+    val (first, cold) = obs.during(spark)(Table.source(spark, dir, "t"))
+    val (again, warm) = obs.during(spark)(Table.source(spark, dir, "t"))
     assert(cold.jobs >= 1, "the first read infers the schema with a job")
     assert(warm.jobs == 0)
     assert(again.toDF.schema == first.toDF.schema)

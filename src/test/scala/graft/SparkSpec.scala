@@ -55,6 +55,16 @@ trait SparkSpec extends AnyFunSuite {
     (tables ++ dirs).distinct.filter(t => gen.matches(t) && !pointed(t))
   }
 
+  /** RDDs pinned now. Cache-release audits diff against a baseline
+    * taken at test start: the shared session may legitimately hold pins
+    * from earlier suites (a `collectNow` handle, or `dedup.cached` frames
+    * of plans PlanAuditSpec built and never ran). */
+  def pinned: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** RDDs pinned since `baseline`, once the listener-driven releases
+    * (`dedup.cached`'s) of the work so far have run. */
+  def newPinned(baseline: Set[Int]): Set[Int] = { obs.drain(spark); pinned -- baseline }
+
   /** rows of the visible projection, as Seq of Seq (null-safe). */
   def rows(t: Table): Seq[Seq[Any]] =
     t.collect().toSeq.map(r => (0 until r.length).map(i => r.get(i)))
@@ -63,48 +73,6 @@ trait SparkSpec extends AnyFunSuite {
 
   def assertRows(t: Table, expected: Seq[Seq[Any]]): Unit =
     assert(rows(t) == expected)
-
-  /** What `body` ran on this thread: the jobs it started, and the task
-    * count of each stage it submitted (skipped stages are never
-    * submitted). */
-  case class Ran(jobs: Int, stageTasks: Seq[Int])
-
-  /** Runs `body` and returns what it [[Ran]]. A sentinel job submitted
-    * after `body` marks the end: listener events arrive in order, so
-    * once it is seen every earlier job and stage event has been too. */
-  def ranDuring[A](body: => A): (A, Ran) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-      SparkListenerStageSubmitted}
-    val sc = spark.sparkContext
-    val key = "graft.test.span"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    def span(p: java.util.Properties) = Option(p).map(_.getProperty(key))
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        span(e.properties).foreach {
-          case "body" => jobs.incrementAndGet()
-          case "sentinel" => sentinel.countDown()
-          case _ =>
-        }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (span(e.properties).contains("body"))
-          tasks.add(e.stageInfo.numTasks)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "body")
-      val r = try body finally sc.setLocalProperty(key, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      import scala.jdk.CollectionConverters._
-      (r, Ran(jobs.get, tasks.asScala.toSeq))
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** Run `body` while capturing ERROR-level log events from Spark's
     * codegen layer (Janino 64 KB overflows, compile failures). Codegen
